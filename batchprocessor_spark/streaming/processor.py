@@ -8,8 +8,10 @@ Reference → engine mapping (paths relative to /root/reference/):
 | put/tryPut (V1/BatchProcessor.java:9-15)    | put()/try_put()/put_many() |
 | ring buffer + worker batching (O4/O5)       | spool files → file-source  |
 |                                             | micro-batches              |
-| time-based force flush (O6)                 | interval spool + trigger   |
-| explicit flush (O7)                         | flush()                    |
+| full batch flushes at once (size trigger)   | back-to-back micro-batches |
+| time-based force flush (O6)                 | interval spool of a buffer |
+|                                             | flush_interval_s old       |
+| explicit flush (O7)                         | flush() → next micro-batch |
 | async sink + semaphore + rate (O9–O11)      | FlowController             |
 | retry + drop (O12)                          | retry + DLQ parquet        |
 | block/reject backpressure (O13)             | pending-cap block/reject   |
@@ -48,6 +50,10 @@ from batchprocessor_spark.streaming.flow import (
 )
 
 
+_POLLING_DELAY = "spark.sql.streaming.pollingDelay"
+_START_LOCK = threading.Lock()
+
+
 class State(Enum):
     NEW = "NEW"
     STARTED = "STARTED"
@@ -68,7 +74,9 @@ class ProcessorConfig:
     batch_size: int = 1024            # items per sink flush
     queue_size: int = 65536           # max pending (accepted − flushed)
     concurrency: int = 16             # in-flight sink calls
-    flush_interval_s: float = 1.0     # time-based force flush (O6)
+    # O6 time trigger: a partial buffer spools once it is this old.
+    # The stream polls for new spools every flush_interval_s / 4.
+    flush_interval_s: float = 1.0
     tps: float = 0.0                  # flush calls/sec (O11)
     ips: float = 0.0                  # items/sec (O11)
     max_retry_count: int = 3          # O12
@@ -157,12 +165,29 @@ class BatchProcessor:
             .option("maxFilesPerTrigger", self.config.max_files_per_trigger)
             .parquet(self.ingest_dir)
         )
-        self._query = (
-            stream.writeStream.foreachBatch(self._handle_micro_batch)
-            .option("checkpointLocation", self.ckpt_dir)
-            .trigger(processingTime=f"{int(self.config.flush_interval_s * 1000)} milliseconds")
-            .start()
+        writer = stream.writeStream.foreachBatch(self._handle_micro_batch).option(
+            "checkpointLocation", self.ckpt_dir
         )
+        # Size trigger: Spark's default trigger starts the next
+        # micro-batch as soon as the previous one commits, so a full
+        # spool never waits on a clock. With no new spool the stream
+        # sleeps spark.sql.streaming.pollingDelay (default 10 ms, a
+        # busy poll) before looking again; the interval spooler's tick
+        # is used instead. StreamExecution's constructor reads that
+        # conf once (Spark 4.1), so it is set on the session only
+        # around start(); the lock keeps two processors starting at
+        # once from capturing each other's value.
+        poll_ms = max(1, int(self.config.flush_interval_s * 1000 / 4))
+        with _START_LOCK:
+            prev = self.spark.conf.get(_POLLING_DELAY, None)
+            self.spark.conf.set(_POLLING_DELAY, f"{poll_ms}ms")
+            try:
+                self._query = writer.start()
+            finally:
+                if prev is None:
+                    self.spark.conf.unset(_POLLING_DELAY)
+                else:
+                    self.spark.conf.set(_POLLING_DELAY, prev)
         # Pre-warm: the first micro-batch pays the engine's cold-start
         # (offset/commit log creation, source init, plan codegen) —
         # several seconds that would otherwise land inside the first

@@ -6,6 +6,7 @@ mirroring the reference's observable contracts:
   64 flushes / 8 in flight ≈ 8 s; BASELINE.md allows ≤ 2× (18 s).
 - retry-then-DLQ (v2 retry contract, T/v2/DisruptorBatchProcessorTest.java:17-24)
 - interval force flush (v1 test2, T/DisruptorBatchProcessorTest.java:47-61)
+- size trigger: a backlog of full spools drains without a trigger clock
 - reject-on-full admission (O13)
 """
 
@@ -15,6 +16,7 @@ import threading
 import time
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from batchprocessor_spark.streaming.flow import FlowControlConfig, FlowController
 from batchprocessor_spark.streaming.processor import BatchProcessor, ProcessorConfig
@@ -33,12 +35,15 @@ class CountingSink:
         self.fail_first = fail_first
         self.calls = 0
         self.items = 0
+        self.first_call_at: float | None = None
         self._lock = threading.Lock()
 
     def __call__(self, chunk) -> None:
         with self._lock:
             self.calls += 1
             call_no = self.calls
+            if self.first_call_at is None:
+                self.first_call_at = time.monotonic()
         if call_no <= self.fail_first:
             raise RuntimeError(f"injected failure on call {call_no}")
         if self.latency_s:
@@ -105,18 +110,160 @@ def test_retry_exhausted_goes_to_dlq(spark):
 
 def test_interval_force_flush(spark):
     """O6: a partial buffer older than flush_interval flushes without
-    reaching batch_size (v1 test2 analogue)."""
+    reaching batch_size (v1 test2 analogue). The latency is bounded by
+    the interval, not by a trigger clock: the spooler ticks every
+    flush_interval_s / 4 and the stream polls at the same tick, so a
+    lone item reaches the sink within 4 × flush_interval_s plus the
+    micro-batch that carries it."""
+    interval = 0.3
     sink = CountingSink()
-    p = make_processor(spark, sink, batch_size=1000, flush_interval_s=0.3, spool_size=1000)
+    p = make_processor(spark, sink, batch_size=1000, flush_interval_s=interval, spool_size=1000)
     p.start()
+    t0 = time.monotonic()
     p.put((1, "first"))
     p.put((2, "second"))
-    deadline = time.monotonic() + 10
+    deadline = t0 + 10
     while sink.items < 2 and time.monotonic() < deadline:
-        time.sleep(0.1)
+        time.sleep(0.01)
     assert sink.items == 2, "aged partial buffer was not force-flushed"
+    latency = sink.first_call_at - t0
     p.stop()
+    batch_s = max(
+        prog["durationMs"]["triggerExecution"] / 1000
+        for prog in p._query.recentProgress
+        if prog["numInputRows"] > 0
+    )
+    assert latency <= 4 * interval + batch_s, (latency, batch_s)
     p.close()
+
+
+def test_backlog_drains_without_trigger_clock(spark):
+    """Size trigger: while spooled files wait, the next micro-batch
+    starts as soon as the previous one commits. 16,384 items through a
+    2,048-item queue need eight refills; a stream paced by a
+    flush_interval_s clock would take 8 × 2 s = 16 s."""
+    seen: set[int] = set()
+    lock = threading.Lock()
+
+    def sink(chunk):
+        with lock:
+            seen.update(chunk["id"].tolist())
+
+    p = make_processor(
+        spark, sink, flush_interval_s=2.0, spool_size=1024, batch_size=1024, queue_size=2048
+    )
+    p.start()
+    t0 = time.perf_counter()
+    p.put_many([(i, "x") for i in range(16384)])
+    stats = p.stop()
+    wall = time.perf_counter() - t0
+    p.close()
+    assert seen == set(range(16384))
+    assert stats["flushed_items"] == 16384 and stats["dlq_items"] == 0
+    assert wall < 8.0, f"backlog took {wall:.1f}s, at least half the 16 s clock floor"
+
+
+POLLING_DELAY = "spark.sql.streaming.pollingDelay"
+
+
+def _query_polling_delay_ms(p: BatchProcessor) -> int:
+    return p._query._jsq.streamingQuery().pollingDelayMs()
+
+
+@pytest.mark.parametrize("before", [None, "123ms"])
+def test_start_leaves_session_polling_delay(spark, before):
+    """start() hands the stream a poll delay of flush_interval_s / 4
+    and leaves the session's own setting as it found it, also when
+    start() raises."""
+    if before is None:
+        spark.conf.unset(POLLING_DELAY)
+    else:
+        spark.conf.set(POLLING_DELAY, before)
+    try:
+        p = make_processor(spark, CountingSink(), flush_interval_s=0.4)
+        p.start()
+        assert spark.conf.get(POLLING_DELAY, None) == before
+        assert _query_polling_delay_ms(p) == 100
+        p.stop()
+        p.close()
+
+        broken = make_processor(spark, CountingSink())
+        with open(broken.ckpt_dir, "w") as f:  # a file where the checkpoint dir goes
+            f.write("not a directory")
+        with pytest.raises(Py4JJavaError, match="not a directory"):
+            broken.start()
+        assert spark.conf.get(POLLING_DELAY, None) == before
+        broken.close()
+    finally:
+        spark.conf.unset(POLLING_DELAY)
+
+
+def test_concurrent_starts_keep_their_own_poll_delay(spark):
+    """Two processors started from two threads at once each get the
+    poll delay of their own flush_interval_s, and both deliver."""
+    barrier = threading.Barrier(2)
+    results: dict[float, tuple] = {}
+
+    def run(interval: float) -> None:
+        sink = CountingSink()
+        p = make_processor(spark, sink, flush_interval_s=interval, spool_size=100)
+        barrier.wait(30)
+        p.start()
+        delay = _query_polling_delay_ms(p)
+        p.put_many([(i, "x") for i in range(500)])
+        p.stop()
+        p.close()
+        results[interval] = (delay, sink.items)
+
+    threads = [threading.Thread(target=run, args=(iv,)) for iv in (0.4, 2.0)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(120)
+    assert not any(t.is_alive() for t in threads)
+    assert results == {0.4: (100, 500), 2.0: (500, 500)}
+    assert spark.conf.get(POLLING_DELAY, None) is None
+
+
+def test_listener_on_session_sees_processor_progress(spark):
+    """The stream runs on the caller's session, so a listener
+    registered on spark.streams receives its progress events."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Recorder(StreamingQueryListener):
+        def __init__(self):
+            self.rows: dict[str, int] = {}
+            self.terminated = threading.Event()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            qid = str(event.progress.id)
+            self.rows[qid] = self.rows.get(qid, 0) + event.progress.numInputRows
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.terminated.set()
+
+    listener = Recorder()
+    spark.streams.addListener(listener)
+    try:
+        p = make_processor(spark, CountingSink(), spool_size=100)
+        p.start()
+        p.put_many([(i, "x") for i in range(300)])
+        p.stop()
+        p.close()
+        assert listener.terminated.wait(30)
+        deadline = time.monotonic() + 10
+        qid = str(p._query.id)
+        while listener.rows.get(qid, 0) < 300 and time.monotonic() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.rows.get(qid) == 300
 
 
 def test_stat_tree_under_concurrent_flushes():
