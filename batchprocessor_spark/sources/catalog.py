@@ -10,6 +10,7 @@ partitioned parquet/iceberg directories and nothing here changes.
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,13 +43,24 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     return df.repartition(n, *cols) if cols else df.repartition(n)
 
 
-def table_bytes(sf_dir: str, name: str) -> int:
-    """On-disk bytes of one table (file or directory of part files)."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
+def table_bytes(sf_dir: str, name: str) -> int | None:
+    """On-disk bytes of one table: a file, or a directory of part files
+    walked recursively (Hive-partitioned tables nest them under
+    ``key=value/`` directories). ``None`` — size unknown — for a table
+    that is not on the local filesystem (an ``s3a://``, ``hdfs://``...
+    URI)."""
+    url = urlparse(sf_dir)
+    if url.scheme not in ("", "file"):
+        return None
+    path = os.path.join(url.path, f"{name}.parquet")
     if not os.path.exists(path):
-        path = os.path.join(sf_dir, name)
+        path = os.path.join(url.path, name)
     if os.path.isdir(path):
-        return sum(e.stat().st_size for e in os.scandir(path) if e.is_file())
+        return sum(
+            os.path.getsize(os.path.join(root, f))
+            for root, _, files in os.walk(path)
+            for f in files
+        )
     return os.stat(path).st_size
 
 
@@ -77,9 +89,10 @@ def spread_keyed(df: DataFrame, sf_dir: str, name: str, *cols: str) -> DataFrame
     ``_PIN_MIN_BYTES``; above it, an explicit hash repartition on
     ``cols`` whose width scales with input bytes (floor 2x cluster
     parallelism) so the stage stays cluster-wide past AQE coalescing
-    at 100 TB without paying a fixed 64-task floor at test scale."""
+    at 100 TB without paying a fixed 64-task floor at test scale.
+    A table of unknown size (not local) is not pinned."""
     nbytes = table_bytes(sf_dir, name)
-    if nbytes < _PIN_MIN_BYTES:
+    if nbytes is None or nbytes < _PIN_MIN_BYTES:
         return df
     sc = df.sparkSession.sparkContext
     width = max(2 * sc.defaultParallelism, nbytes // _PIN_TARGET_BYTES)

@@ -51,6 +51,11 @@ from batchprocessor_spark.streaming.flow import (
 
 
 _POLLING_DELAY = "spark.sql.streaming.pollingDelay"
+_CHECKPOINT_FILE_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 _START_LOCK = threading.Lock()
 
 
@@ -168,35 +173,59 @@ class BatchProcessor:
         writer = stream.writeStream.foreachBatch(self._handle_micro_batch).option(
             "checkpointLocation", self.ckpt_dir
         )
-        # Size trigger: Spark's default trigger starts the next
-        # micro-batch as soon as the previous one commits, so a full
-        # spool never waits on a clock. With no new spool the stream
-        # sleeps spark.sql.streaming.pollingDelay (default 10 ms, a
-        # busy poll) before looking again; the interval spooler's tick
-        # is used instead. StreamExecution's constructor reads that
-        # conf once (Spark 4.1), so it is set on the session only
-        # around start(); the lock keeps two processors starting at
-        # once from capturing each other's value.
+        # Stream-scoped confs, set on the caller's session only while
+        # this stream starts and restored (or unset) afterwards; Spark
+        # 4.1 reads each once for the stream.
+        #
+        # - pollingDelay (size trigger): Spark's default trigger starts
+        #   the next micro-batch as soon as the previous one commits,
+        #   so a full spool never waits on a clock. With no new spool
+        #   the stream sleeps pollingDelay (default 10 ms, a busy poll)
+        #   before looking again; the interval spooler's tick is used
+        #   instead.
+        # - checkpointFileManagerClass: each trigger writes one small
+        #   file to each of three metadata logs (sources/0, offsets,
+        #   commits). Spark's default FileContext manager, on Hadoop's
+        #   local filesystem without the native Hadoop library, forks a
+        #   `readlink` per rename and a `chmod` per create: ~30
+        #   processes and ~120 ms per trigger on a 4-vCPU host. The
+        #   FileSystem manager renames with rename(2) (its creates
+        #   still fork `chmod`), atomic on the local disk this
+        #   checkpoint always lives on (the spools beside it are
+        #   written with os and pyarrow), and the logs never overwrite
+        #   a file.
+        #
+        # The restore follows the pre-warm: the file-source log is
+        # created lazily on the stream thread after writer.start()
+        # returns, so only once the pre-warm's micro-batch has run do
+        # all three logs exist with this manager. _START_LOCK is held
+        # from writer.start() through that pre-warm, so two processors
+        # starting at once never capture each other's values. The
+        # pre-warm itself (one empty spool, drained) pays the engine's
+        # cold start — log creation, source init, plan codegen — that
+        # would otherwise land in the first DATA batch, so start()
+        # returns with the pipeline hot, matching the reference's
+        # start-blocks-until-workers-ready semantics
+        # (V1/DisruptorBatchProcessor.java:229-257).
         poll_ms = max(1, int(self.config.flush_interval_s * 1000 / 4))
+        stream_confs = {
+            _POLLING_DELAY: f"{poll_ms}ms",
+            _CHECKPOINT_FILE_MANAGER: _FS_CHECKPOINT_FILE_MANAGER,
+        }
         with _START_LOCK:
-            prev = self.spark.conf.get(_POLLING_DELAY, None)
-            self.spark.conf.set(_POLLING_DELAY, f"{poll_ms}ms")
+            prev = {k: self.spark.conf.get(k, None) for k in stream_confs}
+            for k, v in stream_confs.items():
+                self.spark.conf.set(k, v)
             try:
                 self._query = writer.start()
+                self._spool_empty()
+                self._query.processAllAvailable()
             finally:
-                if prev is None:
-                    self.spark.conf.unset(_POLLING_DELAY)
-                else:
-                    self.spark.conf.set(_POLLING_DELAY, prev)
-        # Pre-warm: the first micro-batch pays the engine's cold-start
-        # (offset/commit log creation, source init, plan codegen) —
-        # several seconds that would otherwise land inside the first
-        # DATA batch. Feed one empty spool file and drain it so
-        # start() returns with the pipeline hot, matching the
-        # reference's start-blocks-until-workers-ready semantics
-        # (V1/DisruptorBatchProcessor.java:229-257).
-        self._spool_empty()
-        self._query.processAllAvailable()
+                for k, v in prev.items():
+                    if v is None:
+                        self.spark.conf.unset(k)
+                    else:
+                        self.spark.conf.set(k, v)
         self._timer = threading.Thread(target=self._interval_spooler, daemon=True)
         self._timer.start()
         return self

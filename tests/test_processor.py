@@ -7,6 +7,7 @@ mirroring the reference's observable contracts:
 - retry-then-DLQ (v2 retry contract, T/v2/DisruptorBatchProcessorTest.java:17-24)
 - interval force flush (v1 test2, T/DisruptorBatchProcessorTest.java:47-61)
 - size trigger: a backlog of full spools drains without a trigger clock
+- checkpoint logs on the FileSystem manager (no process fork per file)
 - reject-on-full admission (O13)
 """
 
@@ -164,25 +165,67 @@ def test_backlog_drains_without_trigger_clock(spark):
 
 
 POLLING_DELAY = "spark.sql.streaming.pollingDelay"
+FILE_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
 
 
 def _query_polling_delay_ms(p: BatchProcessor) -> int:
     return p._query._jsq.streamingQuery().pollingDelayMs()
 
 
+def checkpoint_file_managers(p: BatchProcessor) -> dict[str, str]:
+    """Simple class name of the file manager behind each of the
+    stream's three metadata logs (paths as of Spark 4.1)."""
+    sq = p._query._jsq.streamingQuery()
+    source = sq.sources().head()  # the one FileStreamSource
+    field = source.getClass().getDeclaredField("metadataLog")
+    field.setAccessible(True)
+    logs = {
+        "offsets": sq.offsetLog(),
+        "commits": sq.commitLog(),
+        "sources": field.get(source),
+    }
+    return {k: log.fileManager().getClass().getSimpleName() for k, log in logs.items()}
+
+
+def test_checkpoint_logs_use_filesystem_manager(spark):
+    """Every metadata log of a started processor writes through the
+    FileSystem manager, whose rename is rename(2): no readlink/chmod
+    process is forked per checkpoint file."""
+    p = make_processor(spark, CountingSink()).start()
+    try:
+        managers = checkpoint_file_managers(p)
+    finally:
+        p.stop()
+        p.close()
+    assert managers == dict.fromkeys(
+        ("offsets", "commits", "sources"), "FileSystemBasedCheckpointFileManager"
+    )
+
+
 @pytest.mark.parametrize("before", [None, "123ms"])
 def test_start_leaves_session_polling_delay(spark, before):
     """start() hands the stream a poll delay of flush_interval_s / 4
-    and leaves the session's own setting as it found it, also when
-    start() raises."""
-    if before is None:
-        spark.conf.unset(POLLING_DELAY)
-    else:
-        spark.conf.set(POLLING_DELAY, before)
+    (and its checkpoint manager), and leaves both session settings as it
+    found them, also when start() raises."""
+    before_manager = None if before is None else CONTEXT_MANAGER
+    found = {POLLING_DELAY: before, FILE_MANAGER: before_manager}
+    for key, value in found.items():
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)
+
+    def session_confs() -> dict:
+        return {key: spark.conf.get(key, None) for key in found}
+
     try:
         p = make_processor(spark, CountingSink(), flush_interval_s=0.4)
         p.start()
-        assert spark.conf.get(POLLING_DELAY, None) == before
+        assert session_confs() == found
         assert _query_polling_delay_ms(p) == 100
         p.stop()
         p.close()
@@ -192,10 +235,11 @@ def test_start_leaves_session_polling_delay(spark, before):
             f.write("not a directory")
         with pytest.raises(Py4JJavaError, match="not a directory"):
             broken.start()
-        assert spark.conf.get(POLLING_DELAY, None) == before
+        assert session_confs() == found
         broken.close()
     finally:
-        spark.conf.unset(POLLING_DELAY)
+        for key in found:
+            spark.conf.unset(key)
 
 
 def test_concurrent_starts_keep_their_own_poll_delay(spark):
@@ -223,6 +267,7 @@ def test_concurrent_starts_keep_their_own_poll_delay(spark):
     assert not any(t.is_alive() for t in threads)
     assert results == {0.4: (100, 500), 2.0: (500, 500)}
     assert spark.conf.get(POLLING_DELAY, None) is None
+    assert spark.conf.get(FILE_MANAGER, None) is None
 
 
 def test_listener_on_session_sees_processor_progress(spark):

@@ -11,7 +11,9 @@ import time
 
 import pytest
 
+from batchprocessor_spark.streaming import processor
 from batchprocessor_spark.streaming.processor import BatchProcessor, ProcessorConfig
+from tests.test_processor import CONTEXT_MANAGER, checkpoint_file_managers
 
 SCHEMA = "id BIGINT, payload STRING"
 
@@ -26,15 +28,22 @@ class CollectingSink:
             self.ids.extend(int(x) for x in chunk["id"])
 
 
-def test_restart_resumes_from_checkpoint_no_duplicates(spark, tmp_path):
+def test_restart_resumes_from_checkpoint_no_duplicates(spark, tmp_path, monkeypatch):
     """Stop → new processor on the same workdir → already-flushed
     spool files are NOT re-delivered (file-source checkpoint), new
-    items are."""
+    items are. The first run writes its checkpoint through Spark's
+    default FileContext manager, as processors did before they chose
+    the FileSystem one, so this is also the upgrade path."""
     workdir = str(tmp_path / "proc")
     sink1 = CollectingSink()
-    p1 = BatchProcessor(
-        spark, SCHEMA, sink1, ProcessorConfig(batch_size=50, spool_size=100), workdir=workdir
-    ).start()
+    with monkeypatch.context() as m:
+        m.setattr(processor, "_FS_CHECKPOINT_FILE_MANAGER", CONTEXT_MANAGER)
+        p1 = BatchProcessor(
+            spark, SCHEMA, sink1, ProcessorConfig(batch_size=50, spool_size=100), workdir=workdir
+        ).start()
+    assert set(checkpoint_file_managers(p1).values()) == {
+        "FileContextBasedCheckpointFileManager"
+    }
     p1.put_many([(i, "a") for i in range(500)])
     p1.stop()
     assert sorted(sink1.ids) == list(range(500))
@@ -43,6 +52,9 @@ def test_restart_resumes_from_checkpoint_no_duplicates(spark, tmp_path):
     p2 = BatchProcessor(
         spark, SCHEMA, sink2, ProcessorConfig(batch_size=50, spool_size=100), workdir=workdir
     ).start()
+    assert set(checkpoint_file_managers(p2).values()) == {
+        "FileSystemBasedCheckpointFileManager"
+    }
     p2.put_many([(i, "b") for i in range(500, 800)])
     p2.stop()
     # Only the NEW items arrive — the checkpoint skips consumed spools.
