@@ -40,7 +40,7 @@ def pointer_jump_ancestry(nodes: DataFrame, max_rounds: int = 40) -> DataFrame:
     projection, fully distributed; the driver holds only the
     convergence counter. materialize per round keeps the plan
     from growing exponentially (same hygiene as
-    connected_components, operators/dedup.py:444).
+    connected_components in operators/dedup.py).
     """
     state = nodes.select(
         "node",
@@ -158,66 +158,6 @@ def q_hier_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("depth").cast("int").alias("max_depth"),
             F.sum("n_chars").alias("subtree_chars"),
         )
-    )
-
-
-def pointer_jump_paths(nodes: DataFrame, max_rounds: int = 40) -> DataFrame:
-    """(node, parent nullable) → (node, root_id, path: array<bigint>)
-    where path lists node→…→root inclusive. Same log-round doubling as
-    pointer_jump_ancestry, additionally accumulating the MATERIALIZED
-    path: the state invariant is `seg` = the id sequence from node
-    down to (but excluding) ptr, so a jump concatenates seg(node) ++
-    seg(ptr) — segment lengths double per round, and converged roots
-    contribute an empty segment, making extra rounds idempotent.
-
-    PRECONDITION (r12, caught by the sf1 twin sweep): the node set
-    must be CLOSED under parent — every non-null parent id must
-    itself appear as a node row. The per-round INNER join resolves a
-    pointer by looking its target up in the state; a pointer to an
-    absent node has no join partner and its row is silently DROPPED.
-    For a hierarchy whose parents are derivable by arithmetic (like
-    q_hier_paths' parent = id div 3), use a per-row fold instead —
-    no closure assumption, and no shuffle at all.
-    """
-    state = nodes.select(
-        "node",
-        F.coalesce("parent", F.col("node")).alias("ptr"),
-        F.when(
-            F.col("parent").isNull(), F.array().cast("array<bigint>")
-        )
-        .otherwise(F.array(F.col("node")))
-        .alias("seg"),
-    ).transform(materialize)
-    for _ in range(max_rounds):
-        nxt = state.select(
-            F.col("node").alias("j_node"),
-            F.col("ptr").alias("j_ptr"),
-            F.col("seg").alias("j_seg"),
-        )
-        jumped = (
-            state.join(nxt, state.ptr == nxt.j_node)
-            .select(
-                "node",
-                F.col("j_ptr").alias("ptr"),
-                F.concat(F.col("seg"), F.col("j_seg")).alias("seg"),
-            )
-            .transform(materialize)
-        )
-        moved = (
-            jumped.join(
-                state.select("node", F.col("ptr").alias("old_ptr")), "node"
-            )
-            .where(F.col("ptr") != F.col("old_ptr"))
-            .count()
-        )
-        state.unpersist()
-        state = jumped
-        if moved == 0:
-            break
-    return state.select(
-        "node",
-        F.col("ptr").alias("root_id"),
-        F.concat(F.col("seg"), F.array(F.col("ptr"))).alias("path"),
     )
 
 

@@ -49,9 +49,9 @@ class FlowControlConfig:
     # controller draws tps/ips from that ONE shared limiter instead of
     # local buckets — the reference's process-global MixedLimiter
     # semantics (V1/MixedLimiter.java:16-43) across executors, and the
-    # work-conserving distributed mode (VERDICT r10 task 2): a
-    # partition whose sink is slow per row simply reserves less, and
-    # the unreserved budget flows to whoever asks next.
+    # work-conserving distributed mode: a partition whose sink is slow
+    # per row simply reserves less, and the unreserved budget flows to
+    # whoever asks next.
     escrow_addr: tuple[str, int] | None = None
     # per-query shared secret for the escrow protocol — every request
     # carries it, and the server drops unauthenticated peers
@@ -59,9 +59,12 @@ class FlowControlConfig:
 
 
 class TokenBucket:
-    """Blocking token bucket (Guava RateLimiter analogue,
-    V1/MixedLimiter.java:16-43). Thread-safe; acquire(n) sleeps until
-    n tokens are available at `rate` tokens/sec."""
+    """Token bucket with Guava RateLimiter's reserve semantics
+    (V1/MixedLimiter.java:16-43). Thread-safe and non-blocking:
+    reserve(n) takes n tokens at once, letting the balance go negative,
+    and returns the seconds the caller owes before it may proceed. A
+    reservation larger than the burst is therefore a finite wait, never
+    a stall. A rate <= 0 is unlimited."""
 
     def __init__(self, rate: float, burst: float | None = None):
         self.rate = float(rate)
@@ -70,23 +73,19 @@ class TokenBucket:
         self._last = time.monotonic()
         self._lock = threading.Lock()
 
-    def acquire(self, n: float = 1.0) -> None:
-        if self.rate <= 0:
-            return
-        while True:
-            with self._lock:
-                now = time.monotonic()
-                self._tokens = min(self.capacity, self._tokens + (now - self._last) * self.rate)
-                self._last = now
-                if self._tokens >= n:
-                    self._tokens -= n
-                    return
-                wait = (n - self._tokens) / self.rate
-            time.sleep(min(wait, 0.5))
+    def reserve(self, n: float = 1.0) -> float:
+        if self.rate <= 0 or n <= 0:
+            return 0.0
+        with self._lock:
+            now = time.monotonic()
+            self._tokens = min(self.capacity, self._tokens + (now - self._last) * self.rate)
+            self._last = now
+            self._tokens -= n
+            return max(0.0, -self._tokens / self.rate)
 
 
 # Measured sustained reservation ceiling of ONE TokenEscrowServer
-# (scripts/escrow_bench.py, r12, recorded in SCALE.md): ~14k req/s at
+# (scripts/escrow_bench.py, recorded in SCALE.md): ~14k req/s at
 # 4 concurrent client processes, plateauing at ~7k req/s from 8-16
 # (per-connection server threads contend on the GIL; p50 latency
 # grows with client count while throughput holds — queueing, not
@@ -105,13 +104,12 @@ class TokenEscrowServer:
     Reservation semantics (Guava RateLimiter's reserve): token
     balances may go negative; the reply is how long the requester must
     sleep before its flush may proceed. This keeps the server
-    non-blocking (a reservation is O(1) under one lock) and makes the
-    budget work-conserving by construction: budget a slow-sink
+    non-blocking (a reservation is O(1) under each bucket's lock) and
+    makes the budget work-conserving by construction: budget a slow-sink
     partition never reserves is immediately available to the next
-    requester — no shares, no epochs, no re-grants (VERDICT r10 #2;
-    the r9/r10 proportional division fixed row-count skew but could
-    not let a partition with atypically slow per-row sinks lend its
-    idle budget mid-epoch).
+    requester — no shares, no epochs, no re-grants (the proportional
+    division fixes row-count skew but cannot let a partition with
+    atypically slow per-row sinks lend its idle budget mid-epoch).
 
     Scale: one request per FLUSH (not per item), so 1000 executors at
     the configured aggregate tps generate exactly tps requests/sec in
@@ -131,21 +129,13 @@ class TokenEscrowServer:
         import socket
         import uuid
 
-        self._rates = {"t": float(tps), "i": float(ips)}
-        now = time.monotonic()
-        self._buckets = {
-            "t": {"tokens": tps_burst, "last": now, "cap": tps_burst},
-            "i": {
-                "tokens": float(ips_burst or 0.0),
-                "last": now,
-                "cap": float(ips_burst or 0.0),
-            },
-        }
+        self._tps = TokenBucket(tps, burst=tps_burst)
+        self._ips = TokenBucket(ips, burst=float(ips_burst or 0.0))
         self._lock = threading.Lock()
         self.reservations = 0
         # Every request must carry this per-query secret — an open
         # unauthenticated bucket would let any network peer reserve
-        # unbounded tokens and stall every executor (code-review r11).
+        # unbounded tokens and stall every executor.
         # Bind to the advertised driver interface when known; the
         # wildcard is only the fallback when that bind fails.
         self.token = uuid.uuid4().hex
@@ -165,8 +155,8 @@ class TokenEscrowServer:
         # request per client (the client serializes under its lock), so
         # caching only the latest is exact.
         #
-        # LRU-bounded (VERDICT r11 #1): every micro-batch builds fresh
-        # EscrowClients with new uuids, so an unbounded dict gains one
+        # LRU-bounded: every micro-batch builds fresh EscrowClients
+        # with new uuids, so an unbounded dict gains one
         # entry per (partition × epoch) for the life of the query —
         # GBs of driver RSS over a week of 1 s epochs. The cache only
         # has to survive one client's in-flight retry window
@@ -189,23 +179,9 @@ class TokenEscrowServer:
     def reserve(self, n_flushes: float, n_items: float) -> float:
         """Reserve tokens from both buckets; returns the sleep the
         caller owes before proceeding."""
-        wait = 0.0
         with self._lock:
             self.reservations += 1
-            now = time.monotonic()
-            for key, amt in (("t", n_flushes), ("i", n_items)):
-                rate = self._rates[key]
-                if rate <= 0 or amt <= 0:
-                    continue
-                b = self._buckets[key]
-                b["tokens"] = min(
-                    b["cap"], b["tokens"] + (now - b["last"]) * rate
-                )
-                b["last"] = now
-                b["tokens"] -= amt
-                if b["tokens"] < 0:
-                    wait = max(wait, -b["tokens"] / rate)
-        return wait
+        return max(self._tps.reserve(n_flushes), self._ips.reserve(n_items))
 
     def _serve(self) -> None:
         while not self._closed:
@@ -400,8 +376,8 @@ class FlowController:
     Driver-side by design: the reference is a client-side batching
     library whose sinks are remote calls (RPC/HTTP bulk APIs); the
     global semaphore is the point. For executor-side fan-out use
-    ``distributed_sink_partitions`` (processor.py), which applies the
-    same policy per partition.
+    ``foreach_batch_sink(..., distributed=True)`` (processor.py), which
+    applies the same policy per partition.
     """
 
     def __init__(self, sink: Sink, config: FlowControlConfig, dlq_path: str | None = None):
@@ -417,21 +393,33 @@ class FlowController:
         self.stats = FlowStats()
         self._sem = threading.Semaphore(config.concurrency)
         self._pool = ThreadPoolExecutor(max_workers=config.concurrency, thread_name_prefix="bp-flush")
-        self._escrow = (
-            EscrowClient(config.escrow_addr, config.escrow_token)
-            if config.escrow_addr is not None
-            and (config.tps > 0 or config.ips > 0)
-            else None
-        )
-        self._tps = TokenBucket(config.tps, burst=config.tps_burst)
-        self._ips = TokenBucket(
-            config.ips,
-            burst=(
-                config.ips_burst
-                if config.ips_burst is not None
-                else max(config.ips, config.batch_size * 2.0)
-            ),
-        )
+        # The rate gate, chosen once: gate(n_flushes, n_items) sleeps
+        # whatever the limiter says this flush owes. With an escrow
+        # address, ONE shared limiter for the whole query (reference
+        # semantics): a single round trip reserves the flush token and
+        # the item tokens together.
+        self._escrow = None
+        if config.escrow_addr is not None and (config.tps > 0 or config.ips > 0):
+            self._escrow = EscrowClient(config.escrow_addr, config.escrow_token)
+            self._gate = self._escrow.acquire
+        else:
+            tps = TokenBucket(config.tps, burst=config.tps_burst)
+            ips = TokenBucket(
+                config.ips,
+                burst=(
+                    config.ips_burst
+                    if config.ips_burst is not None
+                    else max(config.ips, config.batch_size * 2.0)
+                ),
+            )
+
+            def gate(n_flushes: float, n_items: float) -> None:
+                wait = max(tps.reserve(n_flushes), ips.reserve(n_items))
+                # no sleep(0) per flush when unlimited or within burst
+                if wait > 0:
+                    time.sleep(wait)
+
+            self._gate = gate
         self._dlq_lock = threading.Lock()
         self._dlq_seq = 0
 
@@ -487,14 +475,7 @@ class FlowController:
     def _flush_with_retry0(self, chunk: pd.DataFrame, me: str) -> None:
         attempts = 0
         while True:
-            if self._escrow is not None:
-                # ONE shared limiter for the whole query (reference
-                # semantics) — a single round trip reserves the flush
-                # token and the item tokens together.
-                self._escrow.acquire(1.0, float(len(chunk)))
-            else:
-                self._tps.acquire(1)
-                self._ips.acquire(len(chunk))
+            self._gate(1.0, float(len(chunk)))
             try:
                 self.sink(chunk)
             except Exception:
@@ -543,7 +524,7 @@ class FlowController:
         if self._escrow is not None:
             # drop the TCP connection promptly — per-epoch controllers
             # otherwise leave a socket + a driver-side handler thread
-            # alive until GC (code-review r11)
+            # alive until GC
             self._escrow.close()
         if hasattr(self.sink, "close"):
             self.sink.close()

@@ -134,7 +134,7 @@ class BatchProcessor:
         self._query = None
         self._timer: threading.Thread | None = None
         self._timer_stop = threading.Event()
-        self._controller = FlowController(
+        self._handle = foreach_batch_sink(
             sink,
             FlowControlConfig(
                 batch_size=self.config.batch_size,
@@ -146,6 +146,7 @@ class BatchProcessor:
             ),
             dlq_path=self.dlq_dir,
         )
+        self._controller = self._handle.controller
         self._arrow_schema = None
 
     # ------------------------------------------------------------ state
@@ -170,7 +171,7 @@ class BatchProcessor:
             .option("maxFilesPerTrigger", self.config.max_files_per_trigger)
             .parquet(self.ingest_dir)
         )
-        writer = stream.writeStream.foreachBatch(self._handle_micro_batch).option(
+        writer = stream.writeStream.foreachBatch(self._handle).option(
             "checkpointLocation", self.ckpt_dir
         )
         # Stream-scoped confs, set on the caller's session only while
@@ -230,16 +231,6 @@ class BatchProcessor:
         self._timer.start()
         return self
 
-    def _handle_micro_batch(self, df: DataFrame, epoch_id: int) -> None:
-        pdf = df.toPandas()
-        if len(pdf) == 0:
-            return
-        futures = self._controller.submit_batch(pdf)
-        # Block until this epoch's flushes finish so the checkpoint
-        # commit implies delivery (at-least-once; the reference has no
-        # delivery guarantee at all — SURVEY §2.1 non-goals).
-        self._controller.wait(futures)
-
     def _interval_spooler(self) -> None:
         """O6: force-flush aged partial buffers (the v2 scheduler
         publishing FLUSH events, V2/Worker.java:84-102)."""
@@ -258,22 +249,7 @@ class BatchProcessor:
     def put(self, item: dict | tuple, block: bool = True) -> None:
         """O1: accept one item; blocks (or raises BufferFullError) when
         more than queue_size items are pending downstream (O13)."""
-        if self._state != State.STARTED:
-            raise RuntimeError(f"put() in state {self._state}")
-        while self._pending() >= self.config.queue_size:
-            if not block or not self.config.block_on_full:
-                raise BufferFullError(
-                    f"pending {self._pending()} >= queue_size {self.config.queue_size}"
-                )
-            time.sleep(0.01)
-        with self._buffer_lock:
-            self._buffer.append(self._as_tuple(item))
-            if self._buffer_oldest is None:
-                self._buffer_oldest = time.monotonic()
-            self._accepted += 1
-            full = len(self._buffer) >= self.config.spool_size
-        if full:
-            self._spool()
+        self._admit([item], block)
 
     def try_put(self, item: dict | tuple) -> bool:
         """O2: non-blocking put — False when over capacity. (The
@@ -298,15 +274,22 @@ class BatchProcessor:
         ``tryPutAll`` can partially insert and then fail —
         V1/DisruptorBatchProcessor.java:184-185 TODO — a hazard
         SURVEY §2.1 O3 says not to replicate.)"""
+        self._admit(items, block=True)
+
+    def _admit(self, items: list[dict | tuple], block: bool) -> None:
+        """The one admission path: reject unless both the caller and
+        the config allow blocking, else wait while queue_size items are
+        pending; then buffer in spool-sized chunks."""
         if self._state != State.STARTED:
-            raise RuntimeError(f"put_many() in state {self._state}")
+            raise RuntimeError(f"cannot put in state {self._state}")
+        reject = not (block and self.config.block_on_full)
         i, n = 0, len(items)
-        if not self.config.block_on_full:
+        if reject:
             # Atomic admission decision: once this check passes, no
             # later capacity check can raise, so a BufferFullError
             # guarantees zero items inserted. (Concurrent producers may
-            # soft-overshoot queue_size — same check-then-insert window
-            # put() has; flushes only ever DECREASE pending.)
+            # soft-overshoot queue_size by one check-then-insert window;
+            # flushes only ever DECREASE pending.)
             with self._buffer_lock:
                 if self._pending() + n > self.config.queue_size:
                     raise BufferFullError(
@@ -314,7 +297,7 @@ class BatchProcessor:
                         f"queue_size {self.config.queue_size}; rejected atomically"
                     )
         while i < n:
-            while self.config.block_on_full and self._pending() >= self.config.queue_size:
+            while not reject and self._pending() >= self.config.queue_size:
                 time.sleep(0.01)
             with self._buffer_lock:
                 room = self.config.spool_size - len(self._buffer)
@@ -462,30 +445,29 @@ def foreach_batch_sink(
     distributed=True: flow control runs inside each partition on the
     executors — the shape that scales to 1000 executors; pair with
     ``df.repartition(n)`` to set fan-out. The GLOBAL budget is
-    preserved (VERDICT r8 #2): each micro-batch divides tps/ips
+    preserved: each micro-batch divides tps/ips
     across its partitions so the AGGREGATE rate across executors
     stays bounded by the configured global rate (the reference's
     limits are process-global, V1/MixedLimiter.java:16-43 — a naive
     per-partition copy would multiply "tps=100" into partitions×100).
 
-    The division is WORK-CONSERVING (VERDICT r9 task 4): each
-    partition's share is proportional to its ROW COUNT in the
-    micro-batch (one cheap counting pass over the persisted batch
-    RDD), so a partition holding share w of the rows drains at
-    tps·w and EVERY partition finishes at ≈ total_rows / global_rate
-    — the same wall clock as the reference's single shared limiter
-    (V1/MixedLimiter.java:16-43), with zero cross-executor
-    coordination. The r8 static nparts-division wasted the fast
-    partitions' unused rate under skew (a 90%-skewed partition ran
-    at tps/nparts while the other budgets idled); proportional
-    shares eliminate exactly that idle budget while keeping
-    Σ tps_i = tps exact. Empty partitions get no budget and no
-    controller.
+    The division is WORK-CONSERVING: each partition's share is
+    proportional to its ROW COUNT in the micro-batch (one cheap
+    counting pass over the persisted batch RDD), so a partition
+    holding share w of the rows drains at tps·w and EVERY partition
+    finishes at ≈ total_rows / global_rate — the same wall clock as
+    the reference's single shared limiter (V1/MixedLimiter.java:16-43),
+    with zero cross-executor coordination. A static nparts-division
+    would waste the fast partitions' unused rate under skew (a
+    90%-skewed partition would run at tps/nparts while the other
+    budgets idle); proportional shares eliminate exactly that idle
+    budget while keeping Σ tps_i = tps exact. Empty partitions get no
+    budget and no controller.
 
     ``budget`` selects how the global rate is enforced across
     partitions (distributed mode only):
 
-    - ``"escrow"`` (default, VERDICT r10 #2): ONE driver-side
+    - ``"escrow"`` (default): ONE driver-side
       TokenEscrowServer holds the tps/ips buckets for the whole
       query; every partition's flush reserves from it over a tiny
       line-oriented TCP exchange (executors already reach the driver
@@ -497,7 +479,7 @@ def foreach_batch_sink(
       mid-epoch. The burst is granted ONCE per query (1 flush /
       batch_size items), not per epoch, so the cross-epoch statement
       tightens to: delivered ≤ rate·elapsed + that one-time burst.
-    - ``"proportional"``: the r9/r10 zero-coordination division —
+    - ``"proportional"``: the zero-coordination division —
       each nonempty partition gets rate × its row share from one
       counting pass. Work-conserving for ROW-COUNT skew (Σ shares =
       1, every partition drains in ≈ total/global_rate) but shares
@@ -527,10 +509,10 @@ def foreach_batch_sink(
         # One reservation RPC per flush: the steady-state request rate
         # is capped by whichever configured rate binds first. Past
         # half the MEASURED single-server ceiling
-        # (scripts/escrow_bench.py, SCALE.md r12) the escrow stops
-        # being a negligible ~100 µs detour and becomes a queue —
-        # warn and point at the zero-coordination mode rather than
-        # silently degrading every flush (VERDICT r11 #2).
+        # (scripts/escrow_bench.py, SCALE.md) the escrow stops being a
+        # negligible ~100 µs detour and becomes a queue — warn and
+        # point at the zero-coordination mode rather than silently
+        # degrading every flush.
         from batchprocessor_spark.streaming.flow import (
             ESCROW_CEILING_FLUSHES_PER_SEC,
         )
@@ -560,6 +542,10 @@ def foreach_batch_sink(
         def handle(df: DataFrame, epoch_id: int) -> None:
             pdf = df.toPandas()
             if len(pdf):
+                # Block until this epoch's flushes finish so the
+                # checkpoint commit implies delivery (at-least-once; the
+                # reference has no delivery guarantee at all — SURVEY
+                # §2.1 non-goals).
                 controller.wait(controller.submit_batch(pdf))
 
         handle.controller = controller  # expose stats to callers
@@ -570,19 +556,16 @@ def foreach_batch_sink(
 
         from pyspark import StorageLevel
 
-        # WORK-CONSERVING proportional division (VERDICT r9 task 4):
-        # one counting pass over the persisted micro-batch RDD gives
-        # each partition's row count, and each nonempty partition
-        # receives the global rate × its row share. Σ shares = 1, so
-        # the aggregate stays exactly at the configured rate, and
-        # every partition drains in ≈ total_rows / global_rate wall
-        # clock — no partition's unused budget idles while a skewed
-        # one throttles (the r8 static tps/nparts split left a
-        # 90%-skewed partition at 1/nparts of the rate while the
-        # other (nparts−1) budgets went unused). The counting pass is
-        # one scan of a batch the dispatch pass scans anyway; persist
-        # makes it one materialization, and the rate-limited sink
-        # I/O dominates both.
+        # WORK-CONSERVING proportional division: one counting pass
+        # over the persisted micro-batch RDD gives each partition's row
+        # count, and each nonempty partition receives the global rate ×
+        # its row share. Σ shares = 1, so the aggregate stays exactly at
+        # the configured rate, and every partition drains in
+        # ≈ total_rows / global_rate wall clock — no partition's unused
+        # budget idles while a skewed one throttles. The counting pass
+        # is one scan of a batch the dispatch pass scans anyway;
+        # persist makes it one materialization, and the rate-limited
+        # sink I/O dominates both.
         rdd = df.rdd
         rdd.persist(StorageLevel.MEMORY_AND_DISK)
         try:
@@ -594,46 +577,36 @@ def foreach_batch_sink(
             total = sum(counts.values())
             nparts = max(1, len(counts))
             nonempty = {i: c for i, c in counts.items() if c}
-            # Each partition's controller (and so its token buckets)
-            # is rebuilt per micro-batch — burst capacity is
-            # therefore RE-GRANTED every epoch. Pin the burst to the
-            # minimum that lets a controller make progress (1 flush /
-            # one batch of items) so the per-epoch free allowance is
-            # bounded and reported, instead of the driver-mode
-            # default burst (a full second of tokens / 2·batch_size
-            # items) silently multiplying by epochs×partitions
-            # (code-review r9 finding #1).
             use_escrow = budget == "escrow" and (cfg.tps > 0 or cfg.ips > 0)
             escrow_addr, escrow_token = None, ""
             if use_escrow:
                 escrow_addr, escrow_token = _ensure_escrow(
                     handle_distributed, cfg, df.sparkSession
                 )
-            budgets = {}
-            for i, c in nonempty.items():
-                w = c / total
+
+            def share(w: float) -> FlowControlConfig:
+                """Partition config for row share w. Each partition's
+                controller (and so its token buckets) is rebuilt per
+                micro-batch, so burst capacity is RE-GRANTED every
+                epoch: the burst is pinned to the minimum that lets a
+                controller make progress (1 flush / one batch of items)
+                so the per-epoch free allowance stays bounded and
+                reported. In escrow mode the ONE shared escrow bucket
+                enforces the rates; per-partition tps/ips stay at the
+                global value purely for stat reporting."""
                 if use_escrow:
-                    # Rates are enforced by the ONE shared escrow
-                    # bucket; per-partition tps/ips are kept at the
-                    # global value purely for stat reporting — the
-                    # controller routes every acquire to the escrow.
-                    budgets[i] = dataclasses.replace(
-                        cfg,
-                        concurrency=max(1, int(cfg.concurrency * w)),
-                        tps_burst=1.0,
-                        ips_burst=float(cfg.batch_size),
-                        escrow_addr=escrow_addr,
-                        escrow_token=escrow_token,
-                    )
+                    rates = dict(escrow_addr=escrow_addr, escrow_token=escrow_token)
                 else:
-                    budgets[i] = dataclasses.replace(
-                        cfg,
-                        tps=cfg.tps * w if cfg.tps > 0 else 0.0,
-                        ips=cfg.ips * w if cfg.ips > 0 else 0.0,
-                        concurrency=max(1, int(cfg.concurrency * w)),
-                        tps_burst=1.0,
-                        ips_burst=float(cfg.batch_size),
-                    )
+                    rates = dict(tps=max(cfg.tps, 0.0) * w, ips=max(cfg.ips, 0.0) * w)
+                return dataclasses.replace(
+                    cfg,
+                    concurrency=max(1, int(cfg.concurrency * w)),
+                    tps_burst=1.0,
+                    ips_burst=float(cfg.batch_size),
+                    **rates,
+                )
+
+            budgets = {i: share(c / total) for i, c in nonempty.items()}
             handle_distributed.last_budget = {
                 "epoch_id": epoch_id,
                 "mode": (
@@ -688,32 +661,13 @@ def foreach_batch_sink(
                     return
                 tc = TaskContext.get()
                 pid = tc.partitionId() if tc else 0
-                pp_cfg = budgets.get(pid)
-                if pp_cfg is None:  # count said empty; trust the rows
-                    # but never the UNDIVIDED global rate — if the
-                    # count and dispatch passes ever disagreed, a full
-                    # grant per surprise partition could exceed the
-                    # aggregate cap by up to the whole global rate
-                    # (ADVICE r10). Escrow mode shares the one bucket
-                    # anyway; proportional mode falls back to a
-                    # 1/nparts share.
-                    if use_escrow:
-                        pp_cfg = dataclasses.replace(
-                            cfg,
-                            tps_burst=1.0,
-                            ips_burst=float(cfg.batch_size),
-                            escrow_addr=escrow_addr,
-                            escrow_token=escrow_token,
-                        )
-                    else:
-                        pp_cfg = dataclasses.replace(
-                            cfg,
-                            tps=cfg.tps / nparts if cfg.tps > 0 else 0.0,
-                            ips=cfg.ips / nparts if cfg.ips > 0 else 0.0,
-                            concurrency=max(1, cfg.concurrency // nparts),
-                            tps_burst=1.0,
-                            ips_burst=float(cfg.batch_size),
-                        )
+                # A partition the count called empty still gets its rows
+                # delivered, but on a 1/nparts share, never the UNDIVIDED
+                # global rate or concurrency: if the count and dispatch
+                # passes ever disagreed, a full grant per surprise
+                # partition could exceed the aggregate cap by up to the
+                # whole global budget.
+                pp_cfg = budgets.get(pid) or share(1 / nparts)
                 # Retry→DLQ must survive distribution: each
                 # partition's controller appends under its own
                 # epoch/partition subpath (unique dirs, no cross-task
@@ -740,7 +694,7 @@ def foreach_batch_sink(
             handle_distributed.escrow_server.close()
             handle_distributed.escrow_server = None
         # a stale addr would make the next epoch dial the closed
-        # server instead of starting a fresh one (code-review r11)
+        # server instead of starting a fresh one
         handle_distributed.escrow_addr = None
 
     handle_distributed.close = close
@@ -760,9 +714,8 @@ def _ensure_escrow(
     Lifetime: ``handle.close()`` is the contract for releasing the
     server (socket + accept thread) — call it when the streaming
     query stops. As a backstop, a weakref finalizer closes the server
-    when the handle itself is garbage-collected (ADVICE r11 #3: a
-    dropped handle otherwise leaked the listener for the process
-    lifetime). The rates are frozen from the config at first use; to
+    when the handle itself is garbage-collected, so a dropped handle
+    does not leak the listener for the process lifetime. The rates are frozen from the config at first use; to
     re-rate a query, close() the handle and build a new sink."""
     if handle.escrow_addr is not None:
         return handle.escrow_addr, handle.escrow_server.token

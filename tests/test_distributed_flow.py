@@ -16,7 +16,8 @@ import pytest
 from batchprocessor_spark.streaming.flow import FlowControlConfig
 
 # r13 fast-lane split (VERDICT r12 #2): multi-minute soak/throughput
-# semantics — opt-in slow lane, excluded from the default run.
+# semantics — opt-in slow lane, excluded from the default run. The
+# Spark-free flow tests run in the fast lane from tests/test_flow.py.
 pytestmark = pytest.mark.slow
 from batchprocessor_spark.streaming.processor import foreach_batch_sink
 
@@ -268,28 +269,6 @@ def test_distributed_budget_is_work_conserving_under_skew(spark, tmp_path):
     assert max(b["tps_by_partition"].values()) == 30.0
 
 
-def test_flow_controller_burst_pins_apply():
-    """The distributed-mode burst pins wire through FlowController:
-    with tps=10 and tps_burst=1, six 1-row flushes need five refills
-    (≥ ~0.5 s) — under the driver-mode default burst they would all
-    be free (code-review r9 finding #1)."""
-    import time
-
-    from batchprocessor_spark.streaming.flow import FlowController
-
-    done = []
-    ctrl = FlowController(
-        lambda chunk: done.append(len(chunk)),
-        FlowControlConfig(batch_size=1, concurrency=2, tps=10.0, tps_burst=1.0),
-    )
-    t0 = time.perf_counter()
-    ctrl.wait(ctrl.submit_batch(pd.DataFrame({"id": range(6)})))
-    dt = time.perf_counter() - t0
-    ctrl.shutdown()
-    assert sum(done) == 6
-    assert dt >= 0.45, dt
-
-
 def test_distributed_budget_holds_across_epochs(spark, tmp_path):
     """Cross-epoch budget (code-review r9 finding #1, the streaming
     half): two micro-batches (maxFilesPerTrigger=1, two input files)
@@ -349,47 +328,6 @@ def test_distributed_budget_holds_across_epochs(spark, tmp_path):
     assert span >= 2.4, span
     assert handle.last_budget["epoch_id"] >= 1  # really saw 2 epochs
     assert handle.last_budget["per_epoch_burst_flushes"] == 4
-
-
-def test_token_escrow_reserve_semantics():
-    """Pure-python pin of the escrow server/client pair (no Spark):
-    Guava-style reservations — balances go negative, each caller
-    sleeps its own deficit — so N items through the shared bucket
-    take ≥ (N − burst)/rate regardless of who asks, and a second
-    client is throttled by the FIRST client's reservations (one
-    limiter, reference V1/MixedLimiter.java:16-43 semantics)."""
-    import time
-
-    from batchprocessor_spark.streaming.flow import (
-        EscrowClient,
-        TokenEscrowServer,
-    )
-
-    srv = TokenEscrowServer(tps=0.0, ips=100.0, tps_burst=1.0, ips_burst=10.0)
-    try:
-        # unauthenticated peers are dropped (the bucket is a shared
-        # resource on an open port — code-review r11)
-        import pytest as _pytest
-
-        rogue = EscrowClient(("127.0.0.1", srv.port), token="wrong")
-        with _pytest.raises(ConnectionError):
-            rogue.acquire(1, 1)
-        assert srv.reservations == 0
-
-        a = EscrowClient(("127.0.0.1", srv.port), srv.token)
-        b = EscrowClient(("127.0.0.1", srv.port), srv.token)
-        t0 = time.perf_counter()
-        a.acquire(1, 10)   # burst covers it — free
-        a.acquire(1, 50)
-        b.acquire(1, 50)   # second CLIENT pays for a's reservation too
-        dt = time.perf_counter() - t0
-        # 110 items, 10 free, 100/s -> >= ~1.0 s even split across
-        # two clients; the self-paid deficit makes it <= ~2 s.
-        assert dt >= 0.9, dt
-        assert dt <= 3.0, dt
-        assert srv.reservations == 3
-    finally:
-        srv.close()
 
 
 def test_escrow_budget_borrows_across_sink_latencies(spark, tmp_path):
@@ -548,143 +486,3 @@ def test_escrow_is_default_and_reported(spark, tmp_path):
     assert got == 40
     handle.close()
     assert handle.escrow_server is None
-
-
-def test_escrow_reply_cache_bounded_across_epochs():
-    """VERDICT r11 #1 (soak-shaped): every micro-batch builds fresh
-    EscrowClients with new uuids, so an unbounded idempotency cache
-    gains one entry per (partition × epoch) for the life of a
-    long-running streaming query (~17M entries/day at 200 partitions
-    × 1 s epochs). The cache is now LRU-bounded: drive many epochs ×
-    partitions through ONE server and assert the dict never exceeds
-    its cap while every reservation is still served."""
-    from batchprocessor_spark.streaming.flow import (
-        EscrowClient,
-        TokenEscrowServer,
-    )
-
-    srv = TokenEscrowServer(
-        tps=1e9, ips=1e9, tps_burst=1e9, ips_burst=1e9, replies_cap=32
-    )
-    try:
-        epochs, partitions = 100, 4
-        for _ in range(epochs):
-            clients = [
-                EscrowClient(("127.0.0.1", srv.port), srv.token)
-                for _ in range(partitions)
-            ]
-            for c in clients:
-                c.acquire(1.0, 50.0)
-            for c in clients:
-                c.close()
-            assert len(srv._replies) <= 32
-        assert srv.reservations == epochs * partitions
-        assert len(srv._replies) <= 32
-    finally:
-        srv.close()
-
-
-def test_escrow_replay_with_bounded_cache():
-    """A resent (cid, seq) — the write-succeeded/read-failed retry —
-    must replay the cached grant instead of double-deducting, and the
-    LRU bound must not evict the entry within a normal retry window
-    (eviction needs >cap OTHER reservations in between)."""
-    import socket
-
-    from batchprocessor_spark.streaming.flow import TokenEscrowServer
-
-    srv = TokenEscrowServer(tps=0.0, ips=10.0, tps_burst=1.0, ips_burst=5.0)
-    try:
-        conn = socket.create_connection(("127.0.0.1", srv.port))
-        rf = conn.makefile("rwb")
-        msg = f"{srv.token} clientA 1 1.0 30.0\n".encode()
-        rf.write(msg)
-        rf.flush()
-        first = float(rf.readline())
-        # replay the SAME seq on a NEW connection (the client resets
-        # its socket before retrying)
-        conn2 = socket.create_connection(("127.0.0.1", srv.port))
-        rf2 = conn2.makefile("rwb")
-        rf2.write(msg)
-        rf2.flush()
-        second = float(rf2.readline())
-        assert srv.reservations == 1  # no re-reserve
-        assert second == first  # identical cached grant
-        conn.close()
-        conn2.close()
-    finally:
-        srv.close()
-
-
-def test_escrow_warns_past_measured_ceiling():
-    """VERDICT r11 #2: the escrow's reservation ceiling is MEASURED
-    (scripts/escrow_bench.py, SCALE.md); configuring a rate whose
-    implied request rate exceeds half of it warns and points at
-    budget="proportional". Low rates and proportional mode stay
-    silent."""
-    import warnings
-
-    import pytest
-
-    def sink(chunk):
-        pass
-
-    with pytest.warns(RuntimeWarning, match="escrow"):
-        foreach_batch_sink(
-            sink, FlowControlConfig(tps=5000.0), distributed=True
-        )
-    # ips-implied request rate: ips / batch_size
-    with pytest.warns(RuntimeWarning, match="reservations/sec"):
-        foreach_batch_sink(
-            sink,
-            FlowControlConfig(ips=8_000_000.0, batch_size=1024),
-            distributed=True,
-        )
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        foreach_batch_sink(
-            sink, FlowControlConfig(tps=100.0), distributed=True
-        )
-        foreach_batch_sink(
-            sink,
-            FlowControlConfig(tps=5000.0),
-            distributed=True,
-            budget="proportional",
-        )
-        # tps binds before the huge implied-ips rate: no warning
-        foreach_batch_sink(
-            sink,
-            FlowControlConfig(tps=100.0, ips=8_000_000.0, batch_size=1024),
-            distributed=True,
-        )
-
-
-def test_escrow_server_closed_when_handle_dropped():
-    """ADVICE r11 #3: a user who drops the handle without close()
-    previously leaked the server socket + accept thread for the
-    process lifetime. A weakref finalizer now closes the server when
-    the handle is garbage-collected (close() remains the contract)."""
-    import gc
-
-    from batchprocessor_spark.streaming.processor import _ensure_escrow
-
-    def handle(df, epoch_id):
-        pass
-
-    handle.escrow_server = None
-    handle.escrow_addr = None
-
-    class _NoSpark:
-        @property
-        def sparkContext(self):
-            raise RuntimeError("no session")
-
-    addr, token = _ensure_escrow(
-        handle, FlowControlConfig(tps=10.0), _NoSpark()
-    )
-    srv = handle.escrow_server
-    assert addr is not None and token == srv.token
-    assert not srv._closed
-    del handle
-    gc.collect()
-    assert srv._closed
