@@ -62,7 +62,7 @@ class Engine:
         :meth:`categories` for the vocabulary); ``search`` keeps names
         whose id or registered doc contains the substring
         (case-insensitive) — the discovery path for a 300+-query
-        surface (VERDICT r5 #8)."""
+        surface."""
         names = sorted(self._registry)
         if category is not None:
             names = [n for n in names if self._registry[n].category == category]
@@ -96,42 +96,15 @@ class Engine:
         return self._registry[name].builder(self.spark, self.sf_dir)
 
     def query_sql(self, name: str) -> DataFrame:
-        """The same registered query through the SQL front-end: runs
-        the query's Spark-SQL twin text via :meth:`sql`. Twin/builder
-        value-equality for the §2.2 contract set is pinned by
-        tests/test_sql_twins.py.
+        """The same registered query through Spark's SQL front end: runs
+        the query's Spark-SQL twin text via :meth:`sql`. Only the
+        hand-written and §2.2 contract twins are served (58 names, each
+        value-checked against its builder by tests/test_sql_twins.py);
+        any other name raises ``KeyError`` before a view is registered
+        or a job runs. :meth:`query` serves every name."""
+        from batchprocessor_spark.plans.sql_twins import spark_sql_for
 
-        The fold-CC twins collect the threshold-filtered dup-pair
-        edge list into one row by documented contract; a size probe
-        (the twin's own candidate-pair prefix, counted) ENFORCES that
-        contract here (VERDICT r11 #3) — past the bound this raises
-        instead of silently collecting a huge graph into a single
-        task, and the distributed CC operator (operators/graph.py,
-        served by ``query(name)``) is the pointed-at path. The probe
-        re-runs the pair-generation prefix, so these four queries pay
-        roughly 2× through the SQL lane — the price of the enforced
-        guard; the DataFrame lane is unaffected."""
-        from batchprocessor_spark.plans.sql_twins import (
-            FOLD_CC_EDGE_BOUND,
-            fold_cc_probe,
-            spark_sql_for,
-        )
-
-        sql = spark_sql_for(name)  # KeyError before any probe work
-        probe = fold_cc_probe(name)
-        if probe is not None:
-            n = self.sql(probe).collect()[0][0]
-            if n > FOLD_CC_EDGE_BOUND:
-                raise RuntimeError(
-                    f"{name}: dup-pair graph has {n} directed edges, "
-                    f"past the fold twin's single-row contract "
-                    f"(FOLD_CC_EDGE_BOUND={FOLD_CC_EDGE_BOUND}); use "
-                    f"Engine.query({name!r}) — the DataFrame builder "
-                    f"routes through the distributed bounded-round "
-                    f"connected-components operator (operators/"
-                    f"graph.py), which is the huge-graph path"
-                )
-        return self.sql(sql)
+        return self.sql(spark_sql_for(name))
 
     def explain(self, name: str) -> str:
         return (

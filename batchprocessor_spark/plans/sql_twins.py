@@ -1,15 +1,21 @@
-"""Spark-SQL twins for the SURVEY §2.2 contract queries (VERDICT r4 #8).
+"""Spark-SQL twins: the registered queries ``Engine.query_sql`` serves.
 
-Every registered query carries a DuckDB oracle; most of that SQL is
-plain ANSI and runs unchanged through ``engine.sql()`` over the
-catalog views.  A handful use DuckDB dialect (``//`` integer division,
-``strftime``, ``list_aggregate``, named-window frame extension,
-``json_extract``, ``quantile_cont``) — this module provides the
-Spark-dialect equivalent so the declared ``engine.sql(str)`` lifecycle
-(SURVEY §3.4) is proven end-to-end for the whole contract set:
-``tests/test_sql_twins.py`` runs each twin through a real
-``spark.sql()`` and asserts the result is value-identical to the
-DataFrame builder's.
+Every registered query carries a DuckDB oracle and a DataFrame
+builder; ``Engine.query(name)`` serves every name.  This module holds
+the Spark-SQL texts for the names whose SQL lane a test compares
+against the builder (``tests/test_sql_twins.py`` runs each twin
+through a real ``spark.sql()`` and asserts the result is
+value-identical to the builder's):
+
+- ``SPARK_SQL_TWINS``: hand-written twins for contract queries whose
+  oracle uses DuckDB-only constructs;
+- ``_extended_twins()``: hand-written twins for user-facing extended
+  analytics;
+- the rest of the SURVEY §2.2 contract set (``VERIFIED_TWINS``),
+  served as the oracle text with ``//`` spelled ``DIV`` and bare
+  decimal literals suffixed ``D``.
+
+Every other name raises ``KeyError``.  Nothing is read from disk.
 
 Twin-writing rules (learned the exact-hash way):
 - numeric literals that the builder creates with ``F.lit(100.0)``
@@ -26,10 +32,6 @@ from __future__ import annotations
 import re
 
 from batchprocessor_spark.plans.registry import load_all
-from batchprocessor_spark.plans.sql_dialect import (
-    double_backslashes_in_literals,
-    structural_spark_sql,
-)
 
 # Queries whose oracle text is NOT valid/equivalent Spark SQL and need
 # a hand-written Spark-dialect twin (beyond the mechanical // -> DIV).
@@ -134,12 +136,12 @@ SPARK_SQL_TWINS: dict[str, str] = {
 
 
 def _extended_twins() -> dict[str, str]:
-    """Spark-SQL twins for the most user-facing EXTENDED operators
-    (VERDICT r7 #6): the analytics an analyst reaches for first —
-    funnels, rolling WAU, cohort LTV/retention, sessionization,
-    stickiness, snapshot diff, A/B stats — exposed through
-    ``engine.sql()`` with results value-identical to the DataFrame
-    builders (tests/test_sql_twins.py::test_extended_twin_matches_builder).
+    """Spark-SQL twins for the most user-facing EXTENDED operators:
+    the analytics an analyst reaches for first — funnels, rolling WAU,
+    cohort LTV/retention, sessionization, stickiness, snapshot diff,
+    A/B stats — exposed through ``engine.sql()`` with results
+    value-identical to the DataFrame builders
+    (tests/test_sql_twins.py::test_extended_twin_matches_builder).
 
     Same twin-writing discipline as the contract set: exact-integer
     lanes spelled with the builder's own operations (round→BIGINT
@@ -171,7 +173,7 @@ def _extended_twins() -> dict[str, str]:
     # concat() is NULL on any NULL argument (concat_ws would SKIP the
     # missing leads and fabricate short shingles), reproducing the
     # oracle's || NULL-propagation + QUALIFY. ONE copy so a future
-    # fix cannot diverge the twins (code-review r9 finding #4).
+    # fix cannot diverge the twins.
     shingle_cte = """    WITH docs AS (SELECT doc_id, split(text, ' ') AS ws FROM documents),
     words AS (
       SELECT doc_id, i, w FROM docs LATERAL VIEW posexplode(ws) t AS i, w),
@@ -861,269 +863,13 @@ def _extended_twins() -> dict[str, str]:
     """,
     }
 
-# Hand-written Spark twins for oracles whose DuckDB constructs have no
-# mechanical Spark equivalent (quantified subqueries, named-window
-# frame refinement, correlated aggregate FILTER). Unlike the contract
-# set these serve ONLY when TWINS.json records a measured pass whose
-# text fingerprint still matches (ADVICE r10 #1 — fail closed on text
-# drift). Same twin-writing discipline as the contract set (exact
-# integer lanes, D-suffixed float literals, identical fold order).
-DIALECT_TWINS: dict[str, str] = {
-    # `> ALL (subq)` / `< ANY (subq)` have no Spark grammar; with a
-    # non-null, non-empty comparison set they reduce to max().  The
-    # coalesce supplies the quantifier's empty-set identity (ALL over
-    # an empty set is TRUE, ANY is FALSE); supplier.s_acctbal is
-    # NOT NULL in the fixture, so the NULL case collapses to empty.
-    "q_subq_quantified": """
-    SELECT c_custkey, c_nationkey, c_acctbal,
-           coalesce(c_acctbal > (SELECT max(s_acctbal) FROM supplier s
-                                 WHERE s.s_nationkey = c.c_nationkey), TRUE)
-             AS beats_all,
-           coalesce(c_acctbal < (SELECT max(s_acctbal) FROM supplier s
-                                 WHERE s.s_nationkey = c.c_nationkey), FALSE)
-             AS below_any,
-           CAST((SELECT count(*) FROM supplier s
-                 WHERE s.s_nationkey = c.c_nationkey) AS BIGINT) AS n_sup
-    FROM customer c
-    """,
-    # DuckDB permits refining a named window with a frame
-    # (`OVER (w ROWS ...)`); Spark's grammar does not — inline the
-    # refined spec.
-    "q_win_rank_ext": """
-    SELECT o_orderkey, o_custkey,
-           round(percent_rank() OVER w, 6) AS pct_rank,
-           round(cume_dist() OVER w, 6) AS cume,
-           nth_value(o_orderkey, 2) OVER (
-             PARTITION BY o_orderstatus
-             ORDER BY o_totalprice DESC, o_orderkey
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS second_key
-    FROM orders
-    WINDOW w AS (PARTITION BY o_orderstatus
-                 ORDER BY o_totalprice DESC, o_orderkey)
-    """,
-    # The oracle's aggregate FILTER carries a correlated scalar
-    # subquery (best streak per user); Spark can't correlate into an
-    # aggregate filter — a per-user window max replaces it exactly.
-    "q_streaks_gaps_islands": """
-    WITH days AS (
-      SELECT DISTINCT user_id, date_trunc('day', ts) AS day FROM events),
-    grouped AS (
-      SELECT user_id, day,
-             datediff(day, DATE '2024-01-01')
-               - row_number() OVER (PARTITION BY user_id ORDER BY day)
-               AS grp
-      FROM days),
-    islands AS (
-      SELECT user_id, grp,
-             CAST(count(*) AS BIGINT) AS streak_days,
-             CAST(unix_micros(CAST(min(day) AS TIMESTAMP)) DIV 1000000
-                  AS BIGINT) AS start_s
-      FROM grouped GROUP BY user_id, grp),
-    x AS (
-      SELECT user_id, streak_days, start_s,
-             max(streak_days) OVER (PARTITION BY user_id) AS max_sd
-      FROM islands)
-    SELECT user_id,
-           CAST(max(streak_days) AS BIGINT) AS longest_streak,
-           CAST(count(*) AS BIGINT) AS n_streaks,
-           CAST(min(CASE WHEN streak_days = max_sd THEN start_s END)
-                AS BIGINT) AS best_start_s
-    FROM x GROUP BY user_id
-    """,
-    # The mapped DTW oracle is a 64-CTE unrolled anti-diagonal DP
-    # whose multi-megabyte expression tree wedges Spark's analyzer
-    # (gen_twins ANALYZER_PATHOLOGICAL since r9).  This twin runs the
-    # SAME recurrence as a nested aggregate() fold — the classic
-    # row-DP: carry dp[i-1][0..m] (1-based positions 1..m+1), build
-    # dp[i] left-to-right with array_append, so up = prev[j+1],
-    # diag = prev[j], left = cur[last].  Plan size is O(1) regardless
-    # of series length; per-pair work is the exact O(n·m) kernel.
-    # Boundedness (why this twin needs no serve-time guard, unlike
-    # the fold-CC family): pairs = o_orderpriority enum × itself
-    # (≤ 5·4/2 rows at ANY SF) and each series is one value per
-    # calendar quarter — both dimensions are fixed by the schema, not
-    # the data volume.
-    "q_ts_dtw": """
-    WITH q AS (
-      SELECT o_orderpriority AS p,
-             (year(o_orderdate) * 4 + (month(o_orderdate) - 1) DIV 3) AS qi,
-             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS v
-      FROM orders GROUP BY p, qi),
-    s AS (
-      SELECT p,
-             transform(array_sort(collect_list(struct(qi AS _s0, v AS _v))),
-                       x -> x._v) AS vs
-      FROM q GROUP BY p),
-    pairs AS (
-      SELECT a.p AS pa, b.p AS pb, a.vs AS va, b.vs AS vb
-      FROM s a JOIN s b ON a.p < b.p),
-    dtw AS (
-      SELECT pa, pb,
-             CAST(size(va) AS BIGINT) AS n_a,
-             CAST(size(vb) AS BIGINT) AS n_b,
-             element_at(
-               aggregate(
-                 sequence(1, size(va)),
-                 concat(array(CAST(0 AS BIGINT)),
-                        transform(vb, x ->
-                          CAST(999999999999999999 AS BIGINT))),
-                 (prev, i) -> aggregate(
-                   sequence(1, size(vb)),
-                   array(CAST(999999999999999999 AS BIGINT)),
-                   (cur, j) -> array_append(cur,
-                     abs(element_at(va, i) - element_at(vb, j))
-                     + least(element_at(prev, j + 1),
-                             element_at(prev, j),
-                             element_at(cur, size(cur)))))),
-               size(vb) + 1) AS dp
-      FROM pairs)
-    SELECT pa AS prio_a, pb AS prio_b, n_a, n_b,
-           CAST(dp AS BIGINT) AS dtw_cents,
-           CAST((1000 * dp) DIV (n_a + n_b) AS BIGINT) AS dtw_per_step_milli
-    FROM dtw
-    ORDER BY prio_a, prio_b
-    """,
-}
-
-# Queries whose oracles sum exact-cents PRODUCTS as BIGINT: DuckDB
-# silently widens to HUGEINT, Spark's ANSI BIGINT sum throws once the
-# sum crosses 2^63. corr_matrix/linreg were caught by the sf0.1 sweep
-# (r11, ~6e19 at 600k rows); mahalanobis by the sf1 sweep (r12 —
-# sum(price_cents²) ≈ 6e20 at 6M rows; its builder already folds
-# DECIMAL(38) sufficient statistics, so only the twin needed the
-# mirrored widening).
-_INT_SUM_WIDENED = (
-    "q_agg_corr_matrix",
-    "q_dq_mahalanobis",
-    "q_ml_linreg_normal_eq",
-)
-_SUM_TO_DOUBLE = re.compile(r"sum\(([^()]*)\)::DOUBLE")
-
-# The recursive min-label closure family: Spark 4.1's recursion only
-# supports UNION ALL, and this closure NEEDS the UNION set-dedup to
-# terminate; an unrolled CTE ladder is optimizer-pathological (CTE
-# inlining duplicates the candidate-pair prefix 2^(2R) times — r11,
-# measured). The fold twin sidesteps both: collect the (small,
-# threshold-filtered) edge list into ONE row and run min-label
-# propagation WITH pointer jumping as a map-fold — 32 rounds converge
-# for any graph of ≤ 2^32 nodes (each round at least halves every
-# node's label-distance to its component minimum), and the plan stays
-# O(1) regardless of rounds. Same scale contract as the oracle itself:
-# the dup-pair graph is candidate pairs above a similarity threshold
-# (tiny relative to the corpus); the engine's distributed bounded-round
-# CC operator (operators/graph.py) remains the path for huge graphs.
-_FOLD_CC = (
-    "q_llm_curation_pipeline",
-    "q_llm_dedup_canonical",
-    "q_llm_dedup_clusters",
-    "q_llm_dedup_clusters_star",
-)
-_WALK_IDIOM = re.compile(
-    r"walk\s*\(\s*node\s*,\s*label\s*\)\s*"
-    r"(?:MAX\s+RECURSION\s+LEVEL\s+\d+\s*)?AS\s+\(\s*"
-    r"SELECT\s+DISTINCT\s+a\s*,\s*a\s+FROM\s+edges\s+UNION\s+"
-    r"SELECT\s+e\.b\s*,\s*w\.label\s+FROM\s+walk\s+w\s+"
-    r"JOIN\s+edges\s+e\s+ON\s+e\.a\s*=\s*w\.node\s*\)"
-)
-_WALK_FOLD_CC = """__cc AS (
-      SELECT array_sort(array_distinct(collect_list(a))) AS ks,
-             collect_list(struct(a, b)) AS es
-      FROM edges),
-    __cc_lab AS (
-      SELECT ks,
-             aggregate(
-               sequence(1, 32),
-               map_from_arrays(ks, ks),
-               (m, r) -> map_from_arrays(ks, transform(ks, k ->
-                 element_at(m,
-                   least(element_at(m, k),
-                         coalesce(array_min(transform(
-                                    filter(es, e -> e.a = k),
-                                    e -> element_at(m, e.b))),
-                                  element_at(m, k))))))) AS mfin
-      FROM __cc),
-    walk AS (
-      SELECT k AS node, element_at(mfin, k) AS label
-      FROM __cc_lab LATERAL VIEW explode(ks) t AS k)"""
-
-
-# Serve-time size gate for the fold-CC twins (VERDICT r11 #3): the
-# fold collects the threshold-filtered dup-pair edge list into ONE row
-# — exact and measured at both SFs, but nothing previously ENFORCED
-# the small-graph contract; a pathological dup corpus would silently
-# collect a huge edge list into a single task. Engine.query_sql runs
-# the probe below (the twin's own prefix up to the edge CTE, counting
-# edges) and refuses past this bound, pointing at the distributed
-# bounded-round CC operator (operators/graph.py) via the DataFrame
-# builder. 1M directed edges ≈ tens of MB in one row — far past any
-# measured fixture (sf0.1 is in the hundreds) yet well inside driver
-# memory, so the guard trips only on genuinely out-of-contract inputs.
-FOLD_CC_EDGE_BOUND = 1_000_000
-_FOLD_CC_PROBES: dict[str, str] = {}
-
-
-def fold_cc_probe(name: str) -> str | None:
-    """The edge-count probe SQL for a fold-CC twin (None for every
-    other query). Derived from the served twin text itself — same
-    candidate-pair prefix, so the count the guard sees is exactly the
-    edge list the fold would collect."""
-    dialect_twins()  # warm the cache that fills _FOLD_CC_PROBES
-    return _FOLD_CC_PROBES.get(name)
-
-
-_DIALECT_CACHE: dict[str, str] | None = None
-
-
-def dialect_twins() -> dict[str, str]:
-    """DIALECT_TWINS plus the generated integer-sum-widening twins.
-
-    DuckDB ``sum(BIGINT)`` silently widens to HUGEINT; Spark's BIGINT
-    sum overflows under ANSI once the exact-cents PRODUCT sums cross
-    2^63 — which the sf0.1 twin sweep caught for the two moment-matrix
-    queries (sum(price·price) ≈ 6e19 at 600k rows). The twin mirrors
-    the widening with DECIMAL(38,0) — exact, then ONE cast to DOUBLE,
-    the same value DuckDB's HUGEINT→DOUBLE conversion produces. The
-    text is derived from the oracle itself (single source of truth)
-    and, like every dialect twin, serves only on a measured pass with
-    a matching fingerprint."""
-    global _DIALECT_CACHE
-    if _DIALECT_CACHE is None:
-        out = dict(DIALECT_TWINS)
-        reg = load_all()
-        for name in _INT_SUM_WIDENED:
-            sql = mechanical_spark_sql(reg[name].oracle)
-            out[name] = _SUM_TO_DOUBLE.sub(
-                r"CAST(sum(CAST(\1 AS DECIMAL(38,0))) AS DOUBLE)", sql
-            )
-        for name in _FOLD_CC:
-            sql = mechanical_spark_sql(reg[name].oracle)
-            if not _WALK_IDIOM.search(sql):
-                continue  # oracle reshaped — fall back to the mapped text
-            sql = _WALK_IDIOM.sub(_WALK_FOLD_CC, sql)
-            # no recursive member remains
-            sql = re.sub(r"\bWITH\s+RECURSIVE\b", "WITH", sql)
-            out[name] = sql
-            # companion guard probe: the twin's own prefix (everything
-            # before the injected fold, i.e. through the edges CTE)
-            # with a count head — see FOLD_CC_EDGE_BOUND
-            cut = sql.find("__cc AS (")
-            if cut != -1:
-                prefix = sql[:cut].rstrip().rstrip(",")
-                _FOLD_CC_PROBES[name] = (
-                    prefix + "\n    SELECT count(*) AS n FROM edges"
-                )
-        _DIALECT_CACHE = out
-    return _DIALECT_CACHE
-
-# The queries whose Spark-SQL lane is VERIFIED value-identical to the
-# DataFrame builder (tests/test_sql_twins.py) — the SURVEY §2.2
-# contract set. spark_sql_for refuses names outside it: most other
-# registered oracles use DuckDB-only functions (epoch_us, list_filter,
-# quantile_cont, ...) that would fail at runtime, and the mechanical
-# // -> DIV transform is only safe where the operands are known
-# non-negative (DuckDB // floors, Spark DIV truncates — they disagree
-# on negative quotients), which is audited per-twin, not globally.
+# The SURVEY §2.2 contract set: every member's Spark-SQL lane is
+# value-identical to its DataFrame builder (tests/test_sql_twins.py).
+# Members without a hand-written twin serve their oracle text through
+# the two rules below. The // -> DIV rule is only safe where the
+# operands are non-negative (DuckDB // floors, Spark DIV truncates —
+# they disagree on negative quotients); that is audited per member,
+# so the rules are not applied to any name outside this set.
 VERIFIED_TWINS: frozenset[str] = frozenset(
     {
         "q_scan_project", "q_filter_pred",
@@ -1146,161 +892,11 @@ VERIFIED_TWINS: frozenset[str] = frozenset(
 # inside string literals, so the token replace is exact FOR THIS SET.
 _DIV_RE = re.compile(r"\s*//\s*")
 
-# ---------------------------------------------------------------------------
-# Mechanical DuckDB → Spark dialect map (round 10, VERDICT r9 task 6).
-#
-# Each rule below is justified by an exact cross-engine semantic, and
-# every rewrite is MEASURED, never trusted: scripts/gen_twins.py runs
-# the mapped text through a real spark.sql() and value-compares against
-# the DataFrame builder at sf0.01 into TWINS.json; spark_sql_for serves
-# a mapped oracle only when its measured status is "pass". A rule that
-# mis-fires therefore shows up as a recorded dialect_fail/value_mismatch,
-# never as wrong answers handed to a user.
-
 # Bare decimal literals: Spark parses `100.0` as DECIMAL(4,1) (so
 # bigint/100.0 becomes DECIMAL division → Decimal-typed results), while
 # DuckDB's `/` always returns DOUBLE. Suffixing `D` reproduces DuckDB's
-# semantics exactly (this was the root cause of the measured
-# q_stream_custom_state / q_join_range_bands mismatches).
+# semantics exactly.
 _FLOAT_LIT_RE = re.compile(r"(?<![\w.'])(\d+\.\d+(?:[eE][+-]?\d+)?)(?![\w.'])")
-
-# DuckDB list indexing (1-based, including computed indices and
-# slices), [..] literals, and the other structural constructs are
-# rewritten by sql_dialect.structural_spark_sql before this map runs.
-
-# Function/type spellings with identical semantics on both engines.
-# string_split_regex MUST map before string_split (prefix collision);
-# plain string_split is only safe for regex-neutral delimiters — a
-# metachar delimiter surfaces as a measured mismatch, not a silent
-# serve. epoch_us needs the session to read naive timestamps as UTC
-# (the engine session default), matching DuckDB's TZ-less reading.
-_TOKEN_MAPS: list[tuple[re.Pattern[str], str]] = [
-    (re.compile(r"\bVARCHAR\b"), "STRING"),
-    (re.compile(r"\bquantile_cont\("), "percentile("),
-    (re.compile(r"\bstring_split_regex\("), "split("),
-    (re.compile(r"\bstring_split\("), "split("),
-    (re.compile(r"\blist_filter\("), "filter("),
-    (re.compile(r"\blist_transform\("), "transform("),
-    (re.compile(r"\blist_distinct\("), "array_distinct("),
-    (re.compile(r"\blist_sort\("), "array_sort("),
-    (re.compile(r"\blist_max\("), "array_max("),
-    (re.compile(r"\blist_min\("), "array_min("),
-    (re.compile(r"\blist_contains\("), "array_contains("),
-    (re.compile(r"\barray_to_string\("), "array_join("),
-    (re.compile(r"\bregexp_matches\("), "regexp_like("),
-    # DuckDB len() is list length (size on Spark); a len(string) use
-    # keeps failing on Spark exactly as the unresolved len() did.
-    (re.compile(r"\blen\("), "size("),
-    # scalar/list generators: same closed-interval semantics.
-    (re.compile(r"\bgenerate_series\("), "sequence("),
-    # single-generator unnest in SELECT/FROM == explode; multi-column
-    # unnest-with-alias forms fail parse and stay measured-unserved.
-    (re.compile(r"\bunnest\("), "explode("),
-    # DuckDB permits the shorthand aggregate FILTER (cond); Spark's
-    # grammar requires FILTER (WHERE cond). Uppercase-only so the
-    # lowercase lambda filter( (mapped from list_filter) is untouched.
-    # The WHERE lookahead sits BEFORE the whitespace consumption —
-    # with it after, the regex engine backtracks \s* one char and
-    # matches anyway, doubling the WHERE when a newline precedes it.
-    (re.compile(r"\bFILTER\s*\((?!\s*WHERE\b)\s*"), "FILTER (WHERE "),
-    # DuckDB HUGEINT is a 128-bit integer; DECIMAL(38,0) is Spark's
-    # widest exact integer lane (the engine's own exact-cents
-    # discipline) — products that genuinely need >38 digits overflow
-    # loudly and stay measured-unserved.
-    (re.compile(r"\bHUGEINT\b"), "DECIMAL(38,0)"),
-    # DuckDB's CTE materialization hint has no Spark spelling; drop it
-    # (Spark decides reuse itself).
-    (re.compile(r"\bAS\s+MATERIALIZED\s*\("), "AS ("),
-    # DuckDB puts IGNORE NULLS inside the window-function call;
-    # Spark's grammar wants it after the closing paren.
-    (re.compile(r"\s+IGNORE\s+NULLS\s*\)"), ") IGNORE NULLS"),
-    # Same aggregate, different name (value-at-extremum-of-key).
-    (re.compile(r"\barg_min\("), "min_by("),
-    (re.compile(r"\barg_max\("), "max_by("),
-    # Round-11 spellings (structural constructs live in sql_dialect).
-    # DuckDB's list() aggregate == collect_list (the ordered form is
-    # rewritten structurally before this map runs).
-    (re.compile(r"\blist\("), "collect_list("),
-    (re.compile(r"\bord\("), "ascii("),
-    (re.compile(r"\blist_extract\("), "element_at("),
-    (re.compile(r"\blist_concat\("), "concat("),
-    (re.compile(r"\blist_reverse\("), "reverse("),
-    (re.compile(r"\blist_append\("), "array_append("),
-    # json_extract returns JSON-typed text; the oracles only ever cast
-    # the result to numerics, where get_json_object's plain string is
-    # identical.
-    (re.compile(r"\bjson_extract\("), "get_json_object("),
-    (re.compile(r"\bBLOB\b"), "BINARY"),
-    (re.compile(r"\bfrom_base64\("), "unbase64("),
-]
-
-# DuckDB parses hex-prefixed strings in integer casts — the oracles'
-# deterministic-arm idiom is ('0x' || <hex-expr>)::BIGINT. Spark's
-# equivalent is conv(<hex-expr>, 16, 10) cast to BIGINT (both read the
-# hex as unsigned; the idiom only ever uses 8 hex chars = 32 bits, so
-# sign never diverges). Non-greedy: stops at the FIRST )::BIGINT, which
-# is the idiom's own closing paren in every oracle that uses it.
-_HEX_CAST_RE = re.compile(r"\(\s*'0x'\s*\|\|\s*(.+?)\)\s*::\s*BIGINT", re.S)
-
-# DuckDB's epoch-extraction functions take ONE argument and accept
-# naive timestamps; the Spark twins need the NTZ→TIMESTAMP cast closed
-# after that argument (identity under the engine's UTC session, which
-# matches DuckDB's TZ-less reading). A paren-matching rewrite handles
-# nesting (epoch_us(CAST(ts AS TIMESTAMP)) etc.).
-_EPOCH_FNS = [
-    (re.compile(r"\bepoch_us\("), "unix_micros"),
-    (re.compile(r"\bepoch_ms\("), "unix_millis"),
-    (re.compile(r"\bepoch\("), "unix_seconds"),
-]
-
-
-def _map_epoch_fns(sql: str) -> str:
-    for fn_re, target in _EPOCH_FNS:
-        out: list[str] = []
-        pos = 0
-        for m in fn_re.finditer(sql):
-            start, open_paren = m.start(), m.end() - 1
-            if start < pos:
-                continue  # inside an already-rewritten span
-            depth, i = 0, open_paren
-            while i < len(sql):
-                if sql[i] == "(":
-                    depth += 1
-                elif sql[i] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                i += 1
-            if depth != 0:
-                continue  # unbalanced — leave untouched, measurement flags it
-            inner = _map_epoch_fns(sql[open_paren + 1 : i])
-            out.append(sql[pos:start])
-            out.append(f"{target}(CAST({inner} AS TIMESTAMP))")
-            pos = i + 1
-        out.append(sql[pos:])
-        sql = "".join(out)
-    return sql
-
-
-def mechanical_spark_sql(sql: str) -> str:
-    """The mechanical DuckDB→Spark dialect map: ``//``→``DIV`` plus the
-    measured-class rewrites above. Pure text transform — correctness is
-    established per query by the TWINS.json value measurement, never
-    assumed from the mapping."""
-    sql = _DIV_RE.sub(" DIV ", sql)
-    sql = _map_epoch_fns(sql)
-    sql = _HEX_CAST_RE.sub(r"CAST(conv(\1, 16, 10) AS BIGINT)", sql)
-    sql = structural_spark_sql(sql)
-    for pat, rep in _TOKEN_MAPS:
-        sql = pat.sub(rep, sql)
-    sql = _FLOAT_LIT_RE.sub(r"\1D", sql)
-    # DuckDB literals are raw; Spark's are C-escaped — double every
-    # backslash so '\s+' stays a whitespace regex (measured
-    # value_mismatch class, r11). Applies only to MAPPED oracle text;
-    # hand twins are written in Spark dialect already.
-    sql = double_backslashes_in_literals(sql)
-    return sql
-
 
 # The extended-operator twin set (names only; texts built lazily by
 # _extended_twins so importing this module stays cheap).
@@ -1336,130 +932,23 @@ EXTENDED_TWIN_NAMES: frozenset[str] = frozenset(
 )
 
 
-def sql_fingerprint(sql: str) -> str:
-    """md5 of the exact text a measurement ran — recorded per query in
-    TWINS.json and re-checked at serve time, so editing an oracle or a
-    dialect rule AFTER generation can never serve unmeasured SQL under
-    a stale pass record (ADVICE r10 #1): the fingerprint mismatch
-    fails closed to KeyError until gen_twins re-measures."""
-    import hashlib
-
-    return hashlib.md5(sql.encode()).hexdigest()
-
-
-_MEASURED_PASS: dict[str, str] | None = None
-# test hook: where to read the TWINS artifacts from (None = repo root)
-_ARTIFACT_DIR: str | None = None
-
-
-def _measured_pass_fingerprints() -> dict[str, str]:
-    """name → fingerprint of the measured text, for every query whose
-    mapped/dialect twin MEASURED as value-identical to the builder
-    through a real spark.sql() (TWINS.json, regenerated by ``python -m
-    scripts.gen_twins`` and registry-gated in
-    tests/test_artifact_freshness.py). Empty when the artifact isn't
-    present (installed library without the repo evidence files) — the
-    curated sets still serve."""
-    global _MEASURED_PASS
-    if _MEASURED_PASS is None:
-        import json
-        import os
-
-        repo = _ARTIFACT_DIR or os.path.dirname(
-            os.path.dirname(os.path.dirname(__file__))
-        )
-
-        def records(fname: str) -> dict | None:
-            try:
-                with open(os.path.join(repo, fname)) as f:
-                    data = json.load(f)
-            except (OSError, ValueError):
-                return None
-            return data.get("queries", {})
-
-        def passes(fname: str) -> dict[str, str] | None:
-            recs = records(fname)
-            if recs is None:
-                return None
-            return {
-                n: rec.get("sql_md5", "")
-                for n, rec in recs.items()
-                if rec.get("status") == "pass"
-                and rec.get("source")
-                in ("oracle_div_mapped", "dialect_twin")
-            }
-
-        base = passes("TWINS.json") or {}
-        # The sf0.1 sweep exists because an sf0.01-only pass can hide
-        # scale-dependent divergence (BIGINT sum overflow where DuckDB
-        # widens to HUGEINT; recursion-level caps on longer rows —
-        # both found in r11). When present, a name serves only if it
-        # passed at BOTH SFs with the SAME measured text.
-        big = passes("TWINS_SF01.json")
-        if big is not None:
-            base = {
-                n: h
-                for n, h in base.items()
-                if big.get(n) == h
-            }
-        # Third SF (r12, VERDICT r11 #4): the sf1 sweep covers the
-        # non-mechanical twin set (extended + dialect + hand sources —
-        # the texts a human wrote or a structural rule generated,
-        # where a third divergence class would live). The artifact is
-        # PARTIAL by design, so it only constrains names it contains:
-        # present-but-not-pass (or text drifted since measurement)
-        # fails closed exactly like the other two lanes.
-        sf1 = records("TWINS_SF1.json")
-        if sf1 is not None:
-            base = {
-                n: h
-                for n, h in base.items()
-                if n not in sf1
-                or (
-                    sf1[n].get("status") == "pass"
-                    and sf1[n].get("sql_md5") == h
-                )
-            }
-        _MEASURED_PASS = base
-    return _MEASURED_PASS
-
-
 def spark_sql_for(name: str) -> str:
-    """The Spark-SQL text for a VERIFIED query: the hand-written twin
-    when one exists (contract set, the extended analytics set, or a
-    measured dialect twin), else the mechanically-mapped oracle text
-    when that mapping MEASURED as value-identical (TWINS.json, with
-    the measured text's fingerprint still matching — including the
-    r4-era VERIFIED_TWINS set, which carries no ungated shortcut
-    since r12). Raises KeyError for queries outside the
-    verified+measured sets — returning unvalidated dialect text would
-    be a runtime trap (review r5)."""
+    """The Spark-SQL twin text for ``name``: the hand-written twin
+    (contract or extended set), else, for the rest of the contract
+    set, the oracle with ``//`` → ``DIV`` and ``D``-suffixed decimal
+    literals. Every served text is value-checked against the builder
+    by tests/test_sql_twins.py. Raises KeyError for any other name —
+    its oracle is DuckDB dialect, and returning unchecked text would
+    fail (or mis-answer) at run time; ``Engine.query(name)`` serves
+    the same values."""
     if name in SPARK_SQL_TWINS:
         return SPARK_SQL_TWINS[name]
     if name in EXTENDED_TWIN_NAMES:
         return _extended_twins()[name]
-    measured = _measured_pass_fingerprints()
-    if name in dialect_twins():
-        sql = dialect_twins()[name]
-        if measured.get(name) == sql_fingerprint(sql):
-            return sql
-        raise KeyError(
-            f"{name}: dialect twin not (re)measured — run "
-            "`python -m scripts.gen_twins` and commit TWINS.json"
-        )
-    oracle = load_all()[name].oracle
-    if oracle is None:
-        raise KeyError(f"{name} has no oracle and no hand-written twin")
-    sql = mechanical_spark_sql(oracle)
-    # VERIFIED_TWINS gets no ungated shortcut (ADVICE r11 #4): its
-    # r4-era verification predates later structural passes, so members
-    # serve exactly like every other mapped oracle — on a measured
-    # pass whose fingerprint still matches the current derivation.
-    if measured.get(name) == sql_fingerprint(sql):
-        return sql
+    if name in VERIFIED_TWINS:
+        oracle = load_all()[name].oracle
+        return _FLOAT_LIT_RE.sub(r"\1D", _DIV_RE.sub(" DIV ", oracle))
     raise KeyError(
-        f"{name} has no verified Spark-SQL twin; use Engine.query() "
-        "(the DataFrame builder) — twins are served only where the "
-        "SQL text is hand-verified or measured value-identical with a "
-        "matching text fingerprint (TWINS.json)"
+        f"{name} has no Spark-SQL twin; use Engine.query({name!r}) "
+        "(the DataFrame builder), which serves every registered query"
     )

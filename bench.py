@@ -123,7 +123,7 @@ def _sf_of(sf_dir: str) -> float:
 
 
 # Scaling extras (VERDICT r5 #4): the most expensive non-headline
-# registry queries by PARITY_r05 sf0.1 wall time, plus the heavy
+# registry queries, ranked by sf0.1 parity-run wall time, plus the heavy
 # families the verdict named explicitly (minhash banded, simhash,
 # IVF ANN, WAV/DTW, assoc-rules, BPE train).  These get 3-point
 # slopes (sf0.001/0.01/0.1) in the scaling payload but do NOT count

@@ -161,136 +161,3 @@ def test_queries_md_tracks_registry(registry_names):
         f"QUERIES.md inventory drifted: missing={sorted(registry_names - listed)[:5]} "
         f"stale={sorted(listed - registry_names)[:5]} — regenerate it"
     )
-
-
-def test_twins_artifact_tracks_registry(registry_names):
-    """TWINS.json (VERDICT r9 task 6) measures — instead of curating —
-    which registered queries' SQL runs through a real ``spark.sql()``
-    value-identically to the DataFrame builder. The artifact must
-    cover exactly the registry (adding a query without re-running
-    ``python -m scripts.gen_twins`` fails here), every curated twin
-    must still measure as pass, and the summary counts must match the
-    per-query records (no hand-edited totals)."""
-    from batchprocessor_spark.plans import sql_twins as tw
-
-    data = json.loads((REPO / "TWINS.json").read_text())
-    keys = set(data["queries"])
-    assert keys == registry_names, (
-        f"TWINS.json drifted from the registry: "
-        f"missing={sorted(registry_names - keys)[:5]} "
-        f"stale={sorted(keys - registry_names)[:5]} — rerun "
-        "`python -m scripts.gen_twins --resume`"
-    )
-    statuses = [q["status"] for q in data["queries"].values()]
-    assert data["n"] == len(statuses)
-    assert data["n_pass"] == statuses.count("pass")
-    assert data["n_dialect_fail"] == statuses.count("dialect_fail")
-    assert data["n_value_mismatch"] == statuses.count("value_mismatch")
-    # Every query the SQL front end actually serves (the curated twin
-    # sets behind spark_sql_for) must measure green.
-    curated = (
-        set(tw.SPARK_SQL_TWINS)
-        | set(tw.EXTENDED_TWIN_NAMES)
-        | set(tw.VERIFIED_TWINS)
-    )
-    red_curated = {
-        n
-        for n in curated
-        if data["queries"].get(n, {}).get("status") != "pass"
-    }
-    assert not red_curated, (
-        f"curated twins no longer pass through spark.sql: "
-        f"{sorted(red_curated)}"
-    )
-    # builder_error means the measurement harness itself broke — never
-    # acceptable in a committed artifact.
-    assert statuses.count("builder_error") == 0
-    # Fingerprint gate (ADVICE r10): every pass record must carry the
-    # md5 of the EXACT text it measured, and that text must still be
-    # what the current oracle + dialect rules produce — editing either
-    # after generation fails here (and spark_sql_for fails closed at
-    # serve time) until gen_twins re-measures.
-    from scripts.gen_twins import candidate_sql
-
-    from batchprocessor_spark.plans.registry import load_all
-
-    registry = load_all()
-
-    def stale_passes(doc: dict) -> list[str]:
-        out = []
-        for n, rec in doc["queries"].items():
-            if rec["status"] != "pass" or registry[n].oracle is None:
-                continue
-            want = tw.sql_fingerprint(candidate_sql(n, registry[n].oracle))
-            if rec.get("sql_md5") != want:
-                out.append(n)
-        return out
-
-    stale = stale_passes(data)
-    assert not stale, (
-        f"TWINS.json pass records whose measured text drifted from the "
-        f"current oracle/dialect rules: {stale[:8]} — rerun "
-        "`python -m scripts.gen_twins --resume` (resume re-measures "
-        "fingerprint mismatches)"
-    )
-    # Second-SF sweep (r11): same gates. Serving intersects the two
-    # artifacts, so a stale/partial sf0.1 doc silently UN-serves
-    # queries — fail loudly here instead.
-    sf01_path = REPO / "TWINS_SF01.json"
-    if sf01_path.exists():
-        data01 = json.loads(sf01_path.read_text())
-        assert set(data01["queries"]) == registry_names, (
-            "TWINS_SF01.json drifted from the registry — rerun "
-            "`python -m scripts.gen_twins --sf-dir /root/testdata/sf0.1 "
-            "--out TWINS_SF01.json --resume --timeout 600`"
-        )
-        stale01 = stale_passes(data01)
-        assert not stale01, (
-            f"TWINS_SF01.json stale pass records: {stale01[:8]}"
-        )
-        assert (
-            sum(1 for q in data01["queries"].values() if q["status"] == "value_mismatch")
-            == 0
-        )
-    # Third-SF sweep (r12, VERDICT r11 #4, then extended to the FULL
-    # registry): sf0.1 caught BIGINT overflow and the recursion cap;
-    # the sf1 sweep promptly caught a third instance of the overflow
-    # class (q_dq_mahalanobis, sum(price_cents²) ≈ 6e20 at 6M rows).
-    # The artifact must cover the whole registry minus the three
-    # documented sf1 infeasibilities (same exclusions and reasons as
-    # PARITY_SF1.json); every covered record must pass with a current
-    # fingerprint (serving intersects the artifact for the names it
-    # contains, so staleness silently un-serves — fail loudly here).
-    SF1_TWIN_EXCLUSIONS = {
-        # declared O(n²) exactness baseline — the BUILDER is all-pairs
-        "q_llm_simsearch_neardup",
-        # builder is LSH-pruned but the twin text is the exact
-        # all-pairs oracle — O(n²) in vectors, infeasible at sf1
-        "q_llm_simsearch_neardup_lsh",
-        # sf1 fixture artifact: caesar-rotated copies dilute df
-        # fractions 10×, the stopword cut stops pruning, and the
-        # RESULT itself goes quadratic (2.17e9 pairs, r10-measured)
-        "q_llm_tfcos_pairs",
-    }
-    sf1_path = REPO / "TWINS_SF1.json"
-    if sf1_path.exists():
-        data1 = json.loads(sf1_path.read_text())
-        want1 = registry_names - SF1_TWIN_EXCLUSIONS
-        assert set(data1["queries"]) == want1, (
-            "TWINS_SF1.json drifted from registry-minus-exclusions "
-            f"(missing={sorted(want1 - set(data1['queries']))[:5]} "
-            f"stale={sorted(set(data1['queries']) - want1)[:5]}) — "
-            "rerun `python -m scripts.gen_twins --sf-dir "
-            "/root/repo/.testdata_big/sf1 --out TWINS_SF1.json "
-            "--resume --timeout 900`"
-        )
-        bad1 = {
-            n: q["status"]
-            for n, q in data1["queries"].items()
-            if q["status"] != "pass"
-        }
-        assert not bad1, f"TWINS_SF1.json non-pass records: {bad1}"
-        stale1 = stale_passes(data1)
-        assert not stale1, (
-            f"TWINS_SF1.json stale pass records: {stale1[:8]}"
-        )

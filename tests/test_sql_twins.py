@@ -1,9 +1,10 @@
-"""engine.sql() lifecycle proof for the SURVEY §2.2 contract set
-(VERDICT r4 #8): every contract query's Spark-SQL twin, run through a
-real ``spark.sql()`` over the registered catalog views, must be
-value-identical to the DataFrame builder's result — same check the
-oracle parity lane applies, but with Spark's OWN SQL front-end as the
-second engine instead of DuckDB."""
+"""engine.sql() lifecycle proof for the Spark-SQL twins: every twin
+``spark_sql_for`` serves (the SURVEY §2.2 contract set plus the
+extended analytics set), run through a real ``spark.sql()`` over the
+registered catalog views, must be value-identical to the DataFrame
+builder's result — same check the oracle parity lane applies, but with
+Spark's OWN SQL front-end as the second engine instead of DuckDB. No
+other name is served."""
 
 from __future__ import annotations
 
@@ -62,253 +63,35 @@ def test_verified_set_matches_contract():
     assert not (EXTENDED_TWIN_NAMES & VERIFIED_TWINS)
 
 
-def test_unverified_name_raises(monkeypatch):
-    """Names whose SQL is neither hand-verified nor measured
-    value-identical must raise, not return unvalidated DuckDB-dialect
-    text (runtime trap). Round 11 closed the last measured gaps
-    (401/401 at both SFs), so the unserved condition is synthesized:
-    an empty measurement set must refuse every mapped-oracle name."""
-    from batchprocessor_spark.plans import sql_twins as tw
-
-    monkeypatch.setattr(tw, "_MEASURED_PASS", {})
-    curated = (
-        set(tw.SPARK_SQL_TWINS)
-        | set(tw.EXTENDED_TWIN_NAMES)
-        | tw.VERIFIED_TWINS
-    )
-    name = sorted(set(REGISTRY) - curated - set(tw.dialect_twins()))[0]
-    with pytest.raises(KeyError, match="no verified Spark-SQL twin"):
-        tw.spark_sql_for(name)
-    # totally unknown names still raise through the same gate
-    with pytest.raises(KeyError):
-        tw.spark_sql_for("q_definitely_not_registered")
-
-
-def test_mechanical_dialect_map_rules():
-    """Pin every rewrite class of the mechanical DuckDB→Spark map
-    (round 10). Each rule is justified by an exact cross-engine
-    semantic; the live value proof is TWINS.json (281+ measured-pass
-    queries), this pin keeps the TEXT transforms from regressing."""
-    from batchprocessor_spark.plans.sql_twins import mechanical_spark_sql as m
-
-    # integer division + double literals: Spark parses bare 100.0 as
-    # DECIMAL(4,1) (decimal division) where DuckDB / returns DOUBLE
-    assert m("SELECT a // b, s / 100.0 FROM t") == (
-        "SELECT a DIV b, s / 100.0D FROM t"
-    )
-    # DuckDB 1-based list index -> element_at (also 1-based; -1 = last
-    # on both)
-    assert m("SELECT e[1], e[-1] FROM t") == (
-        "SELECT element_at(e, 1), element_at(e, -1) FROM t"
-    )
-    # epoch extraction with the NTZ cast closed around the argument
-    assert m("SELECT epoch_us(ts) FROM e") == (
-        "SELECT unix_micros(CAST(ts AS TIMESTAMP)) FROM e"
-    )
-    # hex-arm idiom -> conv (8 hex chars = 32 bits, sign-safe)
-    assert m("SELECT ('0x' || substr(h, 1, 8))::BIGINT % 2 FROM t") == (
-        "SELECT CAST(conv(substr(h, 1, 8), 16, 10) AS BIGINT) % 2 FROM t"
-    )
-    # shorthand aggregate FILTER gains WHERE; the spelled form and the
-    # lowercase lambda filter( are untouched
-    assert m("SELECT count(*) FILTER (x = 1) FROM t") == (
-        "SELECT count(*) FILTER (WHERE x = 1) FROM t"
-    )
-    assert m("SELECT count(*) FILTER (WHERE x = 1) FROM t") == (
-        "SELECT count(*) FILTER (WHERE x = 1) FROM t"
-    )
-    assert m("SELECT filter(l, x -> x > 0) FROM t") == (
-        "SELECT filter(l, x -> x > 0) FROM t"
-    )
-    # type + function spellings
-    assert m("SELECT CAST(x AS VARCHAR), i::HUGEINT FROM t") == (
-        "SELECT CAST(x AS STRING), i::DECIMAL(38,0) FROM t"
-    )
-    assert m("SELECT quantile_cont(v, 0.5) FROM t") == (
-        "SELECT percentile(v, 0.5D) FROM t"
-    )
-    assert m("SELECT arg_min(a, b), arg_max(a, b) FROM t") == (
-        "SELECT min_by(a, b), max_by(a, b) FROM t"
-    )
-    assert m("SELECT len(ws), list_max(l), unnest(ws) FROM d") == (
-        "SELECT size(ws), array_max(l), explode(ws) FROM d"
-    )
-    # CTE materialization hint dropped; in-call IGNORE NULLS moved out
-    assert m("WITH x AS MATERIALIZED (SELECT 1) SELECT 1") == (
-        "WITH x AS (SELECT 1) SELECT 1"
-    )
-    assert m("SELECT lag(v IGNORE NULLS) OVER w FROM t") == (
-        "SELECT lag(v) IGNORE NULLS OVER w FROM t"
-    )
-
-
-def test_measured_pass_serving_is_artifact_driven(tmp_path, monkeypatch):
-    """spark_sql_for serves a mechanically-mapped oracle ONLY when
-    TWINS.json measured it value-identical — the artifact is the
-    authority, not the mapping."""
-    import json
-
-    from batchprocessor_spark.plans import sql_twins as tw
-
-    twins = json.loads(
-        (__import__("pathlib").Path(__file__).resolve().parent.parent
-         / "TWINS.json").read_text()
-    )
-    served = [
-        n
-        for n, r in twins["queries"].items()
-        if r["status"] == "pass" and r["source"] == "oracle_div_mapped"
-    ]
-    assert served, "TWINS.json lost all measured passes"
-    # a served name returns mapped text without raising
-    text = spark_sql_for(sorted(served)[0])
-    assert "SELECT" in text.upper()
-
-
-def test_dialect_twin_serving_requires_matching_fingerprint(monkeypatch):
-    """ADVICE r10 #1: a measured pass is only servable while the text
-    it measured is byte-identical to what would be served NOW.
-    Simulate post-measurement drift (artifact md5 ≠ current text) —
-    spark_sql_for must fail closed instead of serving unmeasured SQL."""
-    from batchprocessor_spark.plans import sql_twins as tw
-
-    name = sorted(tw.dialect_twins())[0]
-    # record says pass but with a stale fingerprint
-    monkeypatch.setattr(tw, "_MEASURED_PASS", {name: "0" * 32})
-    with pytest.raises(KeyError, match="not \\(re\\)measured"):
-        tw.spark_sql_for(name)
-    # matching fingerprint serves
-    monkeypatch.setattr(
-        tw,
-        "_MEASURED_PASS",
-        {name: tw.sql_fingerprint(tw.dialect_twins()[name])},
-    )
-    assert "SELECT" in tw.spark_sql_for(name).upper()
-
-
-def test_mapped_oracle_serving_requires_matching_fingerprint(monkeypatch):
-    """Same fail-closed contract for mechanically-mapped oracles: a
-    rule or oracle edit after generation invalidates the pass record
-    at serve time (the freshness gate catches it repo-side too)."""
-    import json
-    from pathlib import Path
-
-    from batchprocessor_spark.plans import sql_twins as tw
-
-    twins = json.loads(
-        (Path(__file__).resolve().parent.parent / "TWINS.json").read_text()
-    )
-    curated = (
-        set(tw.SPARK_SQL_TWINS)
-        | set(tw.EXTENDED_TWIN_NAMES)
-        | tw.VERIFIED_TWINS
-        | set(tw.dialect_twins())
-    )
-    name = sorted(
-        n
-        for n, r in twins["queries"].items()
-        if r["status"] == "pass"
-        and r["source"] == "oracle_div_mapped"
-        and n not in curated
-    )[0]
-    monkeypatch.setattr(tw, "_MEASURED_PASS", {name: "0" * 32})
-    with pytest.raises(KeyError, match="no verified Spark-SQL twin"):
-        tw.spark_sql_for(name)
-
-
-def test_fold_cc_probe_exists_for_family_only():
-    from batchprocessor_spark.plans import sql_twins as tw
-
-    for name in tw._FOLD_CC:
-        probe = tw.fold_cc_probe(name)
-        assert probe is not None and "count(*)" in probe, name
-        assert "FROM edges" in probe
-        # the probe is the twin's own prefix: no fold, no walk
-        assert "__cc" not in probe and "walk" not in probe.lower()
-    assert tw.fold_cc_probe("q_agg_basic") is None
-
-
-def test_fold_cc_guard_trips_on_oversized_dup_graph(
-    spark, tmp_path, monkeypatch
-):
-    """VERDICT r11 #3: the fold-CC twins collect the dup-pair edge
-    list into ONE row by documented contract; the serve-time probe
-    now ENFORCES it. A synthetic corpus of 40 identical documents
-    (dense dup graph, 40·39 = 1560 directed edges) must trip a
-    lowered bound with a message routing to the distributed CC
-    operator — and serve normally at the default bound."""
-    import shutil
-
-    import pandas as pd
-    import pytest
-
+def test_served_set_is_exactly_the_checked_twins(spark):
+    """spark_sql_for serves text for exactly the 58 names the two
+    builder-equality tests above check, and raises KeyError for every
+    other registered name. Engine.query_sql on an unserved name raises
+    before it registers a view or runs a Spark job."""
     from batchprocessor_spark.engine import Engine
-    from batchprocessor_spark.plans import sql_twins as tw
+    from batchprocessor_spark.plans.sql_twins import EXTENDED_TWIN_NAMES
 
-    sf = tmp_path / "sf"
-    shutil.copytree("/root/testdata/sf0.001", sf)
-    (sf / "documents.parquet").unlink()
-    pd.DataFrame(
-        {
-            "doc_id": range(40),
-            "text": ["alpha beta gamma delta epsilon zeta"] * 40,
-            "lang": ["en"] * 40,
-            "source": ["synthetic"] * 40,
-            "n_chars": [35] * 40,
-        }
-    ).to_parquet(sf / "documents.parquet", index=False)
+    served = set()
+    for name in REGISTRY:
+        try:
+            text = spark_sql_for(name)
+        except KeyError:
+            continue
+        assert "SELECT" in text.upper(), name
+        served.add(name)
+    assert served == SEC_2_2 | EXTENDED_TWIN_NAMES
+    assert len(served) == 58
+    with pytest.raises(KeyError):
+        spark_sql_for("q_definitely_not_registered")
 
-    eng = Engine(spark=spark, sf_dir=str(sf))
-    monkeypatch.setattr(tw, "FOLD_CC_EDGE_BOUND", 100)
-    with pytest.raises(RuntimeError, match="graph.py"):
-        eng.query_sql("q_llm_dedup_clusters")
-
-    monkeypatch.setattr(tw, "FOLD_CC_EDGE_BOUND", 1_000_000)
-    rows = eng.query_sql("q_llm_dedup_clusters").collect()
-    assert len(rows) == 40
-    assert len({r.cluster_id for r in rows}) == 1  # one dense cluster
-
-
-def test_sf1_lane_constrains_only_names_it_contains(tmp_path, monkeypatch):
-    """VERDICT r11 #4: the sf1 twin artifact is PARTIAL (the
-    non-mechanical set). The serving gate must (a) leave names absent
-    from it governed by the two full-registry lanes, (b) fail closed
-    for a name it records as non-pass, and (c) fail closed for a pass
-    whose measured text drifted."""
-    import json as _json
-
-    from batchprocessor_spark.plans import sql_twins as tw
-
-    def write(sf1_queries):
-        base = {
-            "queries": {
-                "q_kept": {
-                    "status": "pass",
-                    "source": "dialect_twin",
-                    "sql_md5": "aa",
-                },
-                "q_probed": {
-                    "status": "pass",
-                    "source": "dialect_twin",
-                    "sql_md5": "bb",
-                },
-            }
-        }
-        (tmp_path / "TWINS.json").write_text(_json.dumps(base))
-        (tmp_path / "TWINS_SF01.json").write_text(_json.dumps(base))
-        (tmp_path / "TWINS_SF1.json").write_text(
-            _json.dumps({"queries": sf1_queries})
-        )
-        monkeypatch.setattr(tw, "_ARTIFACT_DIR", str(tmp_path))
-        monkeypatch.setattr(tw, "_MEASURED_PASS", None)
-        return tw._measured_pass_fingerprints()
-
-    # (a) absent from sf1 -> still served off the two full lanes
-    got = write({"q_probed": {"status": "pass", "sql_md5": "bb"}})
-    assert got == {"q_kept": "aa", "q_probed": "bb"}
-    # (b) recorded non-pass at sf1 -> dropped
-    got = write({"q_probed": {"status": "dialect_fail"}})
-    assert got == {"q_kept": "aa"}
-    # (c) sf1 pass with drifted text -> dropped
-    got = write({"q_probed": {"status": "pass", "sql_md5": "ZZ"}})
-    assert got == {"q_kept": "aa"}
+    eng = Engine(spark=spark, sf_dir=SF_ORACLE)
+    tracker = spark.sparkContext.statusTracker()
+    group = "test_served_set_unserved_name"
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        with pytest.raises(KeyError, match="Engine.query"):
+            eng.query_sql("q_llm_dedup_clusters")
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert tracker.getJobIdsForGroup(group) == []
+    assert not eng._views_registered
