@@ -595,9 +595,8 @@ def q_llm_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     document. r12 (guide §2.4): this replaces the explode +
     two-aggregate + join formulation — same values, but the per-doc
     max never needed a corpus-wide shuffle; the whole query is now a
-    single codegen'd scan+project (plan evidence
-    plans/r12/q_llm_repetition_stats_{before,after}.txt, 7.7 s →
-    1.6 s at sf0.1). The r3 per-row transform×filter scan stays
+    single codegen'd scan+project with no Exchange in its plan
+    (7.7 s → 1.6 s at sf0.1). The r3 per-row transform×filter scan stays
     rejected — it was O(n²) per document; the sorted-run fold is not."""
     d = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
@@ -938,10 +937,9 @@ def q_llm_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     no common-subexpression elimination — with the split inline the
     lambda re-split the text for every chunk, O(words²/stride) per
     document. A Generate does not collapse into its child Project, so
-    the split now runs exactly once per row (plan evidence
-    plans/r12/q_llm_chunk_documents_{before,after}.txt: ``split``
-    appears once, below the Generate; measured 1.6 s → 0.26 s at
-    sf0.01 on the shared prototype session)."""
+    the split now runs exactly once per row (the plan shows ``split``
+    once, below the Generate; measured 1.6 s → 0.26 s at sf0.01 on
+    the shared prototype session)."""
     d = load_table(spark, sf_dir, "documents")
     ws = F.col("__ws")
     chunks = F.transform(
@@ -1483,53 +1481,59 @@ def q_llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision — model-sized, same discipline as k-means centroids),
     and the merge itself is a map-side replace. At 100 TB rounds are
     bounded by vocab size, never corpus size."""
-    d = load_table(spark, sf_dir, "documents")
+    _, merges = _bpe_merges(load_table(spark, sf_dir, "documents"))
+    return spark.createDataFrame(
+        merges, "round BIGINT, tok_a STRING, tok_b STRING, cnt BIGINT"
+    )
+
+
+def _bpe_merges(d: DataFrame) -> tuple[DataFrame, list[tuple[int, str, str, int]]]:
+    """The BPE trainer loop: documents → weighted word vocabulary →
+    double-separator token sequences → 3 greedy merge rounds. Returns
+    the merged (w, freq, seq) vocabulary and the merge table rows
+    (round, tok_a, tok_b, cnt). Corpus-sized work happens ONCE, in the
+    vocabulary's materialization; each round is one aggregate over
+    that vocab-sized frame and one 1-row collect (the merge decision —
+    model-sized, same discipline as k-means centroids), and the merge
+    itself is a map-side replace."""
     words = (
-        d.select(
-            F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("w")
-        )
+        d.select(F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("w"))
         .where(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    seqs = words.select(
+    cur = words.select(
+        "w",
         "freq",
         F.concat(
             F.lit(" "),
             F.rtrim(F.regexp_replace("w", "(.)", "$1  ")),
             F.lit("  _ "),
         ).alias("seq"),
-    ).transform(materialize)  # corpus-sized work happens ONCE; the three
-    # merge rounds (pair count + replace) run over this vocab-sized
-    # materialization, which is the claim the docstring makes.
+    ).transform(materialize)
     pair_expr = (
         "transform(sequence(1, size(split(trim(seq), '  ')) - 1), "
         "i -> concat(element_at(split(trim(seq), '  '), i), '  ', "
         "element_at(split(trim(seq), '  '), i + 1)))"
     )
-    out_rows = []
-    cur = seqs
+    merges = []
     for r in range(3):
-        pairs = cur.select("freq", F.explode(F.expr(pair_expr)).alias("pair"))
         best = (
-            pairs.groupBy("pair")
+            cur.select("freq", F.explode(F.expr(pair_expr)).alias("pair"))
+            .groupBy("pair")
             .agg(F.sum("freq").cast("long").alias("cnt"))
             .orderBy(F.col("cnt").desc(), F.col("pair").asc())
             .limit(1)
-            .collect()[0]  # model-sized: ONE merge decision per round
+            .collect()[0]
         )
         tok_a, tok_b = best["pair"].split("  ")
-        out_rows.append((r + 1, tok_a, tok_b, best["cnt"]))
-        merged = tok_a + tok_b
+        merges.append((r + 1, tok_a, tok_b, best["cnt"]))
         cur = cur.select(
+            "w",
             "freq",
-            F.expr(
-                f"replace(seq, ' {best['pair']} ', ' {merged} ')"
-            ).alias("seq"),
+            F.expr(f"replace(seq, ' {best['pair']} ', ' {tok_a}{tok_b} ')").alias("seq"),
         )
-    return spark.createDataFrame(
-        out_rows, "round BIGINT, tok_a STRING, tok_b STRING, cnt BIGINT"
-    )
+    return cur, merges
 
 
 @register(
@@ -1895,42 +1899,7 @@ def q_llm_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocab build, token count), each a keyed aggregate; merges apply
     map-side; the only collects are the three 1-row merge decisions."""
     d = load_table(spark, sf_dir, "documents")
-    words = (
-        d.select(F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("w"))
-        .where(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    seqs = words.select(
-        "w",
-        "freq",
-        F.concat(
-            F.lit(" "),
-            F.rtrim(F.regexp_replace("w", "(.)", "$1  ")),
-            F.lit("  _ "),
-        ).alias("seq"),
-    ).transform(materialize)
-    pair_expr = (
-        "transform(sequence(1, size(split(trim(seq), '  ')) - 1), "
-        "i -> concat(element_at(split(trim(seq), '  '), i), '  ', "
-        "element_at(split(trim(seq), '  '), i + 1)))"
-    )
-    cur = seqs
-    for _ in range(3):
-        pairs = cur.select("freq", F.explode(F.expr(pair_expr)).alias("pair"))
-        best = (
-            pairs.groupBy("pair")
-            .agg(F.sum("freq").cast("long").alias("cnt"))
-            .orderBy(F.col("cnt").desc(), F.col("pair").asc())
-            .limit(1)
-            .collect()[0]  # model-sized: ONE merge decision per round
-        )
-        merged = best["pair"].replace("  ", "")
-        cur = cur.select(
-            "w",
-            "freq",
-            F.expr(f"replace(seq, ' {best['pair']} ', ' {merged} ')").alias("seq"),
-        )
+    cur, _ = _bpe_merges(d)
     enc = cur.select(
         "w",
         F.size(F.split(F.trim(F.col("seq")), "  ")).cast("long").alias("n_tok"),
@@ -3499,8 +3468,8 @@ def q_text_rouge_l_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interpreted-expression evaluations per pair. The sequential
     # inner fold is the textbook O(n·m) recurrence: same integer
     # values (the prefix-max form is exactly the expansion of this
-    # recurrence), ~7× measured (sf0.01 interleaved: 10.6 s → 1.4 s;
-    # sf0.1: see OPTIMIZATION_r12.md). The inner fold still append-
+    # recurrence), ~7× measured (interleaved: 10.6 s → 1.4 s at
+    # sf0.01, 4.6 s → 1.35 s at sf0.1). The inner fold still append-
     # copies its row array per step (arrays are immutable in
     # expression land) — O(m) longs per step — but a copy is ~50×
     # cheaper than an interpreted greatest/element_at chain, and the

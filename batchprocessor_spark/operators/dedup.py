@@ -23,7 +23,7 @@ from batchprocessor_spark.operators.skew import (
 )
 from batchprocessor_spark.plans.registry import register
 from batchprocessor_spark.sources.catalog import load_table, spread, spread_keyed
-from batchprocessor_spark.session import materialize
+from batchprocessor_spark.session import iterate, materialize
 
 # Word-trigram shingling is shared by all text near-dup operators.
 _SHINGLE_WIDTH = 3
@@ -710,44 +710,34 @@ def connected_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     """Min-label propagation over an undirected pair list
     (d1, d2) → (node, label) where label = the component's smallest
     node. Distributed join + min-agg per round; the driver holds only
-    the convergence flag. Property-tested against a python union-find
-    in tests/test_properties.py."""
-    # Materialize the pair join ONCE before anything fans out: the edge
-    # set references `pairs` twice (both union branches), and every
-    # propagation round re-reads edges — without this pin an expensive
-    # upstream (e.g. the Jaccard shingle join) would be recomputed per
-    # reference. materialize rather than cache: labels is referenced
-    # three times per round, so un-truncated lineage also grows
-    # exponentially with rounds (the plan itself would OOM on deep graphs).
-    pairs = pairs.transform(materialize)
-    edges = (
-        pairs.union(pairs.select(F.col("d2"), F.col("d1"))).toDF("a", "b").transform(materialize)
-    )
-    pairs.unpersist()
-    labels = (
-        edges.select(F.col("a").alias("node")).distinct()
-        .select("node", F.col("node").alias("label"))
-        .transform(materialize)
-    )
-    for _ in range(max_rounds):
+    the convergence signature. Property-tested against a python
+    union-find in tests/test_properties.py."""
+    # One explode emits both directions, so `pairs` (e.g. the Jaccard
+    # shingle join) is read once, by the edge list's materialization.
+    edges = pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("d1").alias("a"), F.col("d2").alias("b")),
+                F.struct(F.col("d2").alias("a"), F.col("d1").alias("b")),
+            )
+        ).alias("e")
+    ).select("e.*").transform(materialize)
+
+    def propagate(labels: DataFrame) -> DataFrame:
         prop = edges.join(labels, edges.a == labels.node).select(
             F.col("b").alias("node"), "label"
         )
-        new_labels = (
-            labels.union(prop)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .transform(materialize)
-        )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("label", "old"), "node")
-            .where(F.col("label") != F.col("old"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
+        return labels.union(prop).groupBy("node").agg(F.min("label").alias("label"))
+
+    # Labels only fall and the node set is fixed, so their sum repeats
+    # exactly when no label moved.
+    labels = iterate(
+        edges.select(F.col("a").alias("node")).distinct()
+        .select("node", F.col("node").alias("label")),
+        propagate,
+        [F.sum(F.col("label").cast("decimal(38,0)"))],
+        max_rounds,
+    )
     edges.unpersist()
     return labels
 
@@ -789,18 +779,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _edge_checksum(edges: DataFrame) -> tuple[int, int]:
-    """Order-insensitive fingerprint of an edge set (count + hash sum)
-    for fixpoint detection without materializing the set twice."""
-    r = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        # bit_xor: order-insensitive and cannot overflow (a hash SUM
-        # trips ANSI long-overflow).
-        F.expr("bit_xor(xxhash64(a, b))").alias("h"),
-    ).collect()[0]
-    return (r.n, r.h)
-
-
 def connected_components_star(pairs: DataFrame, max_rounds: int = 30) -> DataFrame:
     """Connected components via alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
@@ -816,7 +794,6 @@ def connected_components_star(pairs: DataFrame, max_rounds: int = 30) -> DataFra
     Output: (node, label) like ``connected_components`` — property
     tests pin both against a python union-find, and a chain test pins
     the logarithmic round count."""
-    spark = pairs.sparkSession
 
     def sym(e: DataFrame) -> DataFrame:
         return e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -838,36 +815,24 @@ def connected_components_star(pairs: DataFrame, max_rounds: int = 30) -> DataFra
         ).where(F.col("na") != F.col("nb"))
         return out.select(F.col("na").alias("a"), F.col("nb").alias("b")).distinct()
 
-    # materialize (not cache): each round's plan references the
-    # previous round several times, so lineage grows EXPONENTIALLY —
-    # by round ~10 the logical plan itself OOMs the driver. Eager
-    # checkpointing cuts the lineage to the materialized result, the
-    # standard hygiene for iterative DataFrame algorithms.
-    edges = (
+    edges = iterate(
         pairs.select(F.least("d1", "d2").alias("a"), F.greatest("d1", "d2").alias("b"))
         .where(F.col("a") != F.col("b"))
-        .distinct()
-        .transform(materialize)
+        .distinct(),
+        lambda e: star(star(e, large=True), large=False),
+        # Order-insensitive edge-set fingerprint; bit_xor cannot
+        # overflow where a hash SUM trips ANSI long overflow.
+        [F.count(F.lit(1)), F.expr("bit_xor(xxhash64(a, b))")],
+        max_rounds,
     )
-    prev = _edge_checksum(edges)
-    for _ in range(max_rounds):
-        edges2 = star(star(edges, large=True), large=False).transform(materialize)
-        cur = _edge_checksum(edges2)
-        edges.unpersist()
-        edges = edges2
-        if cur == prev:
-            break
-        prev = cur
     # Fixpoint: edges connect every non-minimum node to its component
-    # minimum (possibly transitively collapsed already).
-    labels = (
+    # minimum. The returned plan reads `edges`, so it stays persisted.
+    return (
         sym(edges)
         .groupBy("a")
         .agg(F.min("b").alias("mn"))
         .select(F.col("a").alias("node"), F.least("a", "mn").alias("label"))
     )
-    edges.unpersist()
-    return labels
 
 
 @register(

@@ -22,10 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from batchprocessor_spark.operators.hierarchy import pointer_double
 from batchprocessor_spark.operators.similarity import spatial_eps_pairs
 from batchprocessor_spark.plans.registry import register
 from batchprocessor_spark.sources.catalog import load_table
-from batchprocessor_spark.session import materialize
+from batchprocessor_spark.session import iterate, materialize
 
 # ε for the embedding-space neighbor graph: sparse but connected-ish at
 # every fixture SF (sf0.01: ~5k edges / 500 nodes; sf0.1: ~80k / 2000).
@@ -308,31 +309,43 @@ def q_graph_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     picks broadcast when it fits; reached-set anti-joins shuffle at
     most |V| ids. Unbounded-diameter BFS would iterate the same loop
     to an empty frontier with the same per-round cost envelope."""
+    pts = load_table(spark, sf_dir, "embeddings").select("vec_id")
+    seeds = pts.filter(F.expr(_BFS_SRC_SQL)).select(F.col("vec_id").alias("v"))
+    return _bfs_reached(spark, sf_dir, seeds).select(F.col("v").alias("vec_id"), "hop")
+
+
+def _bfs_reached(spark: SparkSession, sf_dir: str, seeds: DataFrame) -> DataFrame:
+    """Frontier BFS over the ε-graph for ``_BFS_HOPS`` hops: ``seeds``
+    holds ``v`` plus optional key columns (``src`` keeps each seed's
+    reached set independent); returns seeds at hop 0 and every
+    (key, v) first reached at hop h. Per round ONE equi-join of the
+    frontier against the symmetric adjacency list, a distinct, and an
+    anti-join against the reached set; materialize per round truncates
+    the frontier lineage."""
     edges = _eps_edges(spark, sf_dir)
     # Materialize the adjacency list ONCE: without this every round's
     # eager checkpoint job re-executes the grid-bucketed ε-self-join
-    # (the dominant cost) — the frontier checkpoints below only
-    # truncate the frontier lineage, not the edge build's.
+    # (the dominant cost).
     ed = (
         edges.select(F.col("d1").alias("v"), F.col("d2").alias("w"))
         .unionAll(edges.select(F.col("d2").alias("v"), F.col("d1").alias("w")))
         .transform(materialize)
     )
-    pts = load_table(spark, sf_dir, "embeddings").select("vec_id")
-    frontier = pts.filter(F.expr(_BFS_SRC_SQL)).select(F.col("vec_id").alias("v"))
-    reached = frontier.select("v", F.lit(0).cast("long").alias("hop"))
+    keys = [c for c in seeds.columns if c != "v"]
+    frontier = seeds.select(*keys, "v")
+    reached = frontier.select(*keys, "v", F.lit(0).cast("long").alias("hop"))
     for h in range(1, _BFS_HOPS + 1):
         nxt = (
             ed.join(frontier, "v")
-            .select(F.col("w").alias("v"))
+            .select(*keys, F.col("w").alias("v"))
             .distinct()
-            .join(reached, "v", "left_anti")
-            .select("v", F.lit(h).cast("long").alias("hop"))
+            .join(reached.select(*keys, "v"), [*keys, "v"], "left_anti")
+            .select(*keys, "v", F.lit(h).cast("long").alias("hop"))
             .transform(materialize)
         )
         reached = reached.unionAll(nxt)
-        frontier = nxt.select("v")
-    return reached.select(F.col("v").alias("vec_id"), "hop")
+        frontier = nxt.select(*keys, "v")
+    return reached
 
 
 # k-core peeling: k and the fixed number of synchronous peel rounds
@@ -394,11 +407,8 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     (degree union ×2 + two semi-joins), so a skipped barrier trades
     one cheap localCheckpoint job for re-evaluating a full peel plan;
     per-round stays."""
-    # Materialize the ε-edge build once — round 1's plan references the
-    # edge list twice (degree branch + both semi-joins) and would
-    # otherwise run the grid self-join multiple times.
-    e = _eps_edges(spark, sf_dir).transform(materialize)
-    for _ in range(_KCORE_ROUNDS):
+
+    def peel(e: DataFrame) -> DataFrame:
         deg = (
             e.select(F.col("d1").alias("v"))
             .unionAll(e.select(F.col("d2").alias("v")))
@@ -406,12 +416,15 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("d"))
         )
         keep = deg.filter(F.col("d") >= _KCORE_K).select("v")
-        e = (
+        return (
             e.join(keep.withColumnRenamed("v", "d1"), "d1", "left_semi")
             .join(keep.withColumnRenamed("v", "d2"), "d2", "left_semi")
             .select("d1", "d2")
-            .transform(materialize)
         )
+
+    # A peel only removes edges, so an unchanged count is a fixpoint
+    # and the remaining declared rounds would return it unchanged.
+    e = iterate(_eps_edges(spark, sf_dir), peel, [F.count(F.lit(1))], _KCORE_ROUNDS)
     return (
         e.select(F.col("d1").alias("v"))
         .unionAll(e.select(F.col("d2").alias("v")))
@@ -487,20 +500,29 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    labels = ed.select("v").distinct().select("v", F.col("v").alias("lab"))
-    for _ in range(_LPA_ROUNDS):
+    def relabel(labels: DataFrame) -> DataFrame:
         counted = (
             ed.join(labels.select(F.col("v").alias("w"), "lab"), "w")
             .groupBy("v", "lab")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
         win = Window.partitionBy("v").orderBy(F.col("cnt").desc(), F.col("lab").asc())
-        labels = (
+        return (
             counted.withColumn("rn", F.row_number().over(win))
             .filter(F.col("rn") == 1)
             .select("v", "lab")
-            .transform(materialize)
         )
+
+    # Round 1 runs inside the initial state, so the identity labelling
+    # is never materialized on its own. A repeated labelling is a
+    # fixpoint of the synchronous update, so stopping there returns
+    # what the declared rounds would.
+    labels = iterate(
+        relabel(ed.select("v").distinct().select("v", F.col("v").alias("lab"))),
+        relabel,
+        [F.count(F.lit(1)), F.expr("bit_xor(xxhash64(v, lab))")],
+        _LPA_ROUNDS - 1,
+    )
     return (
         labels.groupBy(F.col("lab").alias("community"))
         .agg(F.count(F.lit(1)).alias("n_members"))
@@ -635,50 +657,25 @@ def scc_functional(nodes: DataFrame) -> DataFrame:
     succ^(2^k − 1)(x)}``; one self-equi-join per round squares the
     jump and folds the path minimum. ``b`` is monotone nonincreasing
     and stops changing exactly when every path has covered its tail
-    plus one full cycle wrap, so convergence is detected with a 1-row
-    count instead of a fixed round budget. At the fixpoint ``j(x)``
+    plus one full cycle wrap, so the loop stops on b's signature
+    instead of a fixed round budget. At the fixpoint ``j(x)``
     lies ON x's cycle, and for any on-cycle node ``b`` equals the
     cycle minimum — so ``scc_id(x) = b(j(x))`` lands with one final
     join, and the cycle membership set is exactly the image of ``j``
     (succ is a bijection on each cycle).
 
-    Returns (x, scc_id, on_cycle). materialize per round
-    truncates the self-join lineage (the q_graph_bfs_layers
-    discipline)."""
-    jt = nodes.select(
-        F.col("x").cast("long").alias("x"),
-        F.col("succ").cast("long").alias("j"),
-        F.least(F.col("x"), F.col("succ")).cast("long").alias("b"),
-    ).transform(materialize)
-    while True:
-        nxt = (
-            jt.alias("a")
-            .join(
-                jt.select(
-                    F.col("x").alias("jx"),
-                    F.col("j").alias("jj"),
-                    F.col("b").alias("jb"),
-                ).alias("h"),
-                F.col("a.j") == F.col("jx"),
-            )
-            .select(
-                F.col("a.x").alias("x"),
-                F.col("jj").alias("j"),
-                F.least(F.col("a.b"), F.col("jb")).alias("b"),
-            )
-            .transform(materialize)
-        )
-        changed = (
-            nxt.alias("n")
-            .join(jt.select("x", F.col("b").alias("pb")).alias("p"), "x")
-            .where(F.col("b") != F.col("pb"))
-            .count()
-        )
-        prev = jt
-        jt = nxt
-        prev.unpersist()
-        if changed == 0:
-            break
+    Returns (x, scc_id, on_cycle). The doubling itself is
+    ``pointer_double`` with ``b`` folded by ``min``; 64 rounds cover
+    any path a BIGINT id space can hold."""
+    jt = pointer_double(
+        nodes.select(
+            F.col("x").cast("long").alias("node"),
+            F.col("succ").cast("long").alias("ptr"),
+            F.least(F.col("x"), F.col("succ")).cast("long").alias("acc"),
+        ),
+        F.least,
+        64,
+    ).select(F.col("node").alias("x"), F.col("ptr").alias("j"), F.col("acc").alias("b"))
     reps = jt.select(
         "x", F.col("j").alias("far")
     )
@@ -1278,29 +1275,11 @@ def q_graph_closeness_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference scope: the reference engine has no graph surface; this
     extends SURVEY.md §2.4's graph family beside q_graph_bfs_layers.
     """
-    edges = _eps_edges(spark, sf_dir)
-    ed = (
-        edges.select(F.col("d1").alias("v"), F.col("d2").alias("w"))
-        .unionAll(edges.select(F.col("d2").alias("v"), F.col("d1").alias("w")))
-        .transform(materialize)
-    )
     pts = load_table(spark, sf_dir, "embeddings").select("vec_id")
     seeds = pts.filter(F.expr(_CLOSENESS_SRC_SQL)).select(
         F.col("vec_id").alias("src")
     )
-    frontier = seeds.select("src", F.col("src").alias("v"))
-    reached = frontier.select("src", "v", F.lit(0).cast("long").alias("hop"))
-    for h in range(1, _BFS_HOPS + 1):
-        nxt = (
-            ed.join(frontier, "v")
-            .select("src", F.col("w").alias("v"))
-            .distinct()
-            .join(reached.select("src", "v"), ["src", "v"], "left_anti")
-            .select("src", "v", F.lit(h).cast("long").alias("hop"))
-            .transform(materialize)
-        )
-        reached = reached.unionAll(nxt)
-        frontier = nxt.select("src", "v")
+    reached = _bfs_reached(spark, sf_dir, seeds.select("src", F.col("src").alias("v")))
     agg = (
         reached.where(F.col("hop") > 0)
         .groupBy("src")

@@ -18,62 +18,65 @@ connected-components resolvers in operators/dedup.py do.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import operator
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from batchprocessor_spark.plans.registry import register
 from batchprocessor_spark.sources.catalog import load_table
-from batchprocessor_spark.session import materialize
+from batchprocessor_spark.session import iterate, materialize
 
 _N_ROOTS = 3  # doc_id 0..2 are forest roots; parent(v) = v // 3 otherwise
 
 
+def pointer_double(
+    state: DataFrame, fold: Callable[[Column, Column], Column], max_rounds: int
+) -> DataFrame:
+    """Pointer doubling over (node, ptr, acc): each round every
+    pointer jumps to its pointer's pointer and ``acc`` folds in the
+    jumped-over node's ``acc`` — ONE self-equi-join per round, fully
+    distributed. After k rounds ptr = parent^(2^k)(node), so any chain
+    of length L settles in ceil(log2 L) rounds (Wyllie's list
+    ranking). The loop stops once ``acc`` stops changing: ``fold`` must
+    be monotone (``+`` over non-negative hops, ``min``), which makes
+    (row count, sum of acc) an exact signature. Nodes whose pointer
+    leaves the node set drop out at the join."""
+
+    def jump(s: DataFrame) -> DataFrame:
+        hop = s.select(
+            F.col("node").alias("h_node"),
+            F.col("ptr").alias("h_ptr"),
+            F.col("acc").alias("h_acc"),
+        )
+        return s.join(hop, F.col("ptr") == F.col("h_node")).select(
+            "node", F.col("h_ptr").alias("ptr"), fold(F.col("acc"), F.col("h_acc")).alias("acc")
+        )
+
+    return iterate(
+        state,
+        jump,
+        [F.count(F.lit(1)), F.sum(F.col("acc").cast("decimal(38,0)"))],
+        max_rounds,
+    )
+
+
 def pointer_jump_ancestry(nodes: DataFrame, max_rounds: int = 40) -> DataFrame:
     """(node, parent nullable) → (node, root_id, depth) by pointer
-    jumping. Roots carry parent NULL.
-
-    Per round: self-join state on ptr = other.node; each node's
-    pointer jumps to its pointer's pointer, depth accumulates the
-    jumped-over hop count. Roots self-loop with hop 0, so converged
-    nodes are fixpoints. Rounds needed: ceil(log2(max depth)) —
-    depth 1e6 chains finish in 20 rounds, each ONE equi-join + ONE
-    projection, fully distributed; the driver holds only the
-    convergence counter. materialize per round keeps the plan
-    from growing exponentially (same hygiene as
-    connected_components in operators/dedup.py).
+    doubling with depth folded by ``+``. Roots carry parent NULL and
+    self-loop with hop 0, so they are fixpoints; every non-root holds
+    depth ≥ 1, so depth stops changing in exactly the round the
+    pointers stop moving. Depth 1e6 chains finish in 20 rounds.
     """
     state = nodes.select(
         "node",
         F.coalesce("parent", F.col("node")).alias("ptr"),
-        F.when(F.col("parent").isNull(), 0).otherwise(1).alias("d"),
-    ).transform(materialize)
-    for _ in range(max_rounds):
-        nxt = state.select(
-            F.col("node").alias("j_node"),
-            F.col("ptr").alias("j_ptr"),
-            F.col("d").alias("j_d"),
-        )
-        jumped = (
-            state.join(nxt, state.ptr == nxt.j_node)
-            .select(
-                "node",
-                F.col("j_ptr").alias("ptr"),
-                (F.col("d") + F.col("j_d")).alias("d"),
-            )
-            .transform(materialize)
-        )
-        moved = (
-            jumped.join(
-                state.select("node", F.col("ptr").alias("old_ptr")), "node"
-            )
-            .where(F.col("ptr") != F.col("old_ptr"))
-            .count()
-        )
-        state.unpersist()
-        state = jumped
-        if moved == 0:
-            break
-    return state.select("node", F.col("ptr").alias("root_id"), F.col("d").alias("depth"))
+        F.when(F.col("parent").isNull(), 0).otherwise(1).alias("acc"),
+    )
+    return pointer_double(state, operator.add, max_rounds).select(
+        "node", F.col("ptr").alias("root_id"), F.col("acc").alias("depth")
+    )
 
 
 @register(
@@ -323,19 +326,29 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes_deg = nodes.join(deg, "node", "left").transform(materialize)
     n_nodes = nodes_deg.count()
     base = _PR_SCALE // n_nodes
-    ranks = nodes_deg.select(
-        "node", "outdeg", F.lit(base).cast("long").alias("pr")
-    ).transform(materialize)
-    # Track the live checkpointed frame explicitly: `ranks` itself is
-    # NOT checkpointed on the skipped rounds, so unpersisting `ranks`
-    # when the next checkpoint lands would usually be a no-op and the
-    # earlier checkpoint blocks would wait for ContextCleaner GC
-    # (ADVICE r4). Unpersist the PREVIOUS checkpoint instead.
-    last_ckpt = ranks
+    ranks = _pagerank_rounds(
+        edges,
+        nodes_deg,
+        nodes_deg.select("node", "outdeg", F.lit(base).cast("long").alias("pr")),
+        f"CAST((15 * CAST({base} AS BIGINT)"
+        f" + 85 * (coalesce(s, CAST(0 AS BIGINT)) + m DIV {n_nodes}))"
+        " DIV 100 AS BIGINT)",
+        dangling=True,
+    )
+    return ranks.select("node", "pr")
+
+
+def _pagerank_rounds(
+    edges: DataFrame, nodes_deg: DataFrame, ranks: DataFrame, update: str, dangling: bool
+) -> DataFrame:
+    """``_PR_ROUNDS`` rounds of fixed-point PageRank from the initial
+    (node, outdeg, pr) ``ranks``: ONE shuffle join of the ``pr DIV outdeg``
+    contributions onto edges (on src), ONE aggregate onto dst as
+    ``s``, then ``update`` (SQL over s, and over the 1-row dangling
+    mass ``m`` when ``dangling``, crossJoined by broadcast) gives the
+    next ``pr``. The driver holds only loop control."""
+    last_ckpt = ranks = ranks.transform(materialize)
     for i in range(_PR_ROUNDS):
-        dang = ranks.where(F.col("outdeg").isNull()).agg(
-            F.coalesce(F.sum("pr"), F.lit(0)).cast("long").alias("m")
-        )
         contrib = (
             edges.join(
                 ranks.where(F.col("outdeg").isNotNull()).select(
@@ -347,32 +360,28 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("c").cast("long").alias("s"))
         )
-        nxt = (
-            nodes_deg.join(contrib, "node", "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "node",
-                "outdeg",
-                F.expr(
-                    f"CAST((15 * CAST({base} AS BIGINT)"
-                    f" + 85 * (coalesce(s, CAST(0 AS BIGINT)) + m DIV {n_nodes}))"
-                    " DIV 100 AS BIGINT)"
-                ).alias("pr"),
+        nxt = nodes_deg.join(contrib, "node", "left")
+        if dangling:
+            dang = ranks.where(F.col("outdeg").isNull()).agg(
+                F.coalesce(F.sum("pr"), F.lit(0)).cast("long").alias("m")
             )
-        )
+            nxt = nxt.crossJoin(F.broadcast(dang))
+        nxt = nxt.select("node", "outdeg", F.expr(update).alias("pr"))
         # Checkpoint every SECOND round (and the last): all loop
         # inputs are themselves checkpointed, so one un-checkpointed
         # round only doubles a shallow plan, while halving the
         # materialization jobs — the dominant per-round cost at scale
         # (VERDICT r3 #7). ranks is referenced twice per round (dang +
         # contrib), so unbounded skipping would grow re-evaluation
-        # 2^k; every-other bounds it at one re-evaluation.
+        # 2^k; every-other bounds it at one re-evaluation. `ranks` is
+        # not checkpointed on the skipped rounds, so the frame to
+        # release is the previous checkpoint, tracked in last_ckpt.
         if i % 2 == 1 or i == _PR_ROUNDS - 1:
             nxt = nxt.transform(materialize)
             last_ckpt.unpersist()
             last_ckpt = nxt
         ranks = nxt
-    return ranks.select("node", "pr")
+    return ranks
 
 
 @register(
@@ -765,34 +774,17 @@ def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOTE: the symmetrized edge list has no dangling nodes (every
     # node is a src), so there is no dangling-mass aggregate here —
     # q_graph_pagerank needs one because its directed graph has sinks
-    ranks = nodes_deg.selectExpr(
-        "node",
-        "outdeg",
-        f"CAST(({seed_case}) * CAST({base} AS BIGINT) AS BIGINT) AS pr",
-    ).transform(materialize)
-    last_ckpt = ranks
-    for i in range(_PR_ROUNDS):
-        contrib = (
-            edges.join(
-                ranks.where(F.col("outdeg").isNotNull()).select(
-                    F.col("node").alias("src"),
-                    F.expr("pr DIV outdeg").alias("c"),
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("c").cast("long").alias("s"))
-        )
-        nxt = nodes_deg.join(contrib, "node", "left").selectExpr(
+    ranks = _pagerank_rounds(
+        edges,
+        nodes_deg,
+        nodes_deg.selectExpr(
             "node",
             "outdeg",
-            f"CAST((15 * ({seed_case}) * CAST({base} AS BIGINT)"
-            f" + 85 * coalesce(s, CAST(0 AS BIGINT)))"
-            " DIV 100 AS BIGINT) AS pr",
-        )
-        if i % 2 == 1 or i == _PR_ROUNDS - 1:
-            nxt = nxt.transform(materialize)
-            last_ckpt.unpersist()
-            last_ckpt = nxt
-        ranks = nxt
+            f"CAST(({seed_case}) * CAST({base} AS BIGINT) AS BIGINT) AS pr",
+        ),
+        f"CAST((15 * ({seed_case}) * CAST({base} AS BIGINT)"
+        f" + 85 * coalesce(s, CAST(0 AS BIGINT)))"
+        " DIV 100 AS BIGINT)",
+        dangling=False,
+    )
     return ranks.where(F.col("pr") > 0).select("node", "pr")

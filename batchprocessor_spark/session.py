@@ -10,9 +10,10 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Callable
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 # Spark's own default for spark.sql.files.maxPartitionBytes — the
 # engine keeps it in production and merely makes it explicit (and
@@ -164,6 +165,14 @@ def materialize(df: DataFrame) -> DataFrame:
     truncated lineage unrecoverable. This helper is the single place
     that decision lives; call sites use ``df.transform(materialize)``
     wherever they previously called ``df.localCheckpoint()``.
+
+    Freeing the result: ``unpersist()`` frees the replicated-persist
+    cache and nothing else. On the two checkpoint modes the blocks
+    belong to the plan's own ``LogicalRDD`` RDD, which
+    ``unpersist()`` leaves registered (``getPersistentRDDs()`` stays
+    at 1 on local[4]); the ContextCleaner reclaims them once the
+    frame is unreachable. Unpersisting that RDD directly frees them
+    at once, but breaks every later read of the frame.
     """
     spark = df.sparkSession
     mode = materialization_mode(
@@ -187,6 +196,50 @@ def materialize(df: DataFrame) -> DataFrame:
     out = df.persist(StorageLevel.MEMORY_AND_DISK_2)
     out.count()
     return out
+
+
+
+def iterate(
+    init: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    signature: list[Column],
+    max_rounds: int,
+) -> DataFrame:
+    """The round barrier of every iterative DataFrame operator: a loop
+    on the driver over distributed steps.
+
+    Materializes ``init``, then for up to ``max_rounds`` rounds
+    materializes ``step(state)`` and unpersists the state it
+    replaced. Materializing truncates each state's lineage: a step
+    that reads its input several times would otherwise grow the plan
+    exponentially with the round count. ``signature`` is a list of aggregate columns that
+    fold each state to one row (a count, a checksum, the sum of a
+    monotone column); the loop stops early once that row repeats the
+    previous round's. The row is gathered with ``observe`` inside each
+    materialization job, so convergence costs no Spark job of its own.
+    Stopping early is only sound when the step of a repeated state
+    returns it again, and the signature must change whenever the state
+    does (exactly for monotone columns, up to a 64-bit hash otherwise).
+
+    Returns the final state, materialized and not released: the
+    caller owns it, and must not release anything a plan built on it
+    still reads.
+    """
+
+    def barrier(df: DataFrame) -> tuple[DataFrame, dict]:
+        seen = Observation()
+        out = df.observe(seen, *signature).transform(materialize)
+        return out, seen.get
+
+    state, sig = barrier(init)
+    for _ in range(max_rounds):
+        nxt, nxt_sig = barrier(step(state))
+        state.unpersist()
+        state = nxt
+        if nxt_sig == sig:
+            break
+        sig = nxt_sig
+    return state
 
 
 _REPLICATED_WARNED = False

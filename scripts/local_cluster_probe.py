@@ -53,6 +53,12 @@ PROBE_QUERIES = [
     # (The RocksDB-stateful streaming family gets its own dedicated
     # check below so the provider conf is pinned for the run.)
     "q_llm_simsearch_neardup_bucketed",
+    # The round barrier (session.iterate): convergence signatures are
+    # gathered by `observe` inside each materialization job, so their
+    # values travel back from real executors here; pointer doubling
+    # and the star CC kernel both stop on them.
+    "q_hier_ancestry",
+    "q_llm_dedup_clusters_star",
 ]
 
 

@@ -82,7 +82,7 @@ WHITELIST: dict[str, tuple[int, str]] = {
     "operators/graph.py::q_graph_hits.half_step": (1, "1-row L1 mass total"),
     "operators/graph.py::q_graph_louvain_matching": (4, "1-row edge/node/community counts"),
     "operators/graph.py::q_graph_modularity": (2, "customer/supplier dimension tables"),
-    "operators/hierarchy.py::q_graph_pagerank": (1, "1-row dangling mass"),
+    "operators/hierarchy.py::_pagerank_rounds": (1, "1-row dangling mass"),
     "operators/joins.py::q_join_cross": (1, "nation dimension (25 rows)"),
     "operators/joins.py::q_join_inner_broadcast": (1, "part dimension table"),
     "operators/joins.py::q_join_interval_overlap": (1, "DECLARED: >48h interval long tail, rare by construction (docstring documents the residual)"),

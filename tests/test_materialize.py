@@ -76,3 +76,33 @@ def test_materialize_result_is_reusable_across_actions(spark):
     a = out.where("id < 5").count()
     b = out.where("id >= 5").count()
     assert (a, b) == (5, 5)
+
+
+def test_iterate_stops_on_repeated_signature_or_round_budget(spark):
+    from pyspark.sql import functions as F
+
+    from batchprocessor_spark.session import iterate
+
+    rounds = []
+
+    def step(df):
+        rounds.append(1)
+        return df.select(F.least(F.col("x") + 1, F.lit(3)).alias("x"))
+
+    init = spark.range(4).select(F.lit(0).cast("long").alias("x"))
+    sig = [F.count(F.lit(1)), F.sum("x")]
+    # x climbs 0 → 1 → 2 → 3 → 3: round 4 repeats round 3's signature.
+    out = iterate(init, step, sig, 10)
+    assert (len(rounds), {r.x for r in out.collect()}) == (4, {3})
+    rounds.clear()
+    out = iterate(init, step, sig, 2)
+    assert (len(rounds), {r.x for r in out.collect()}) == (2, {2})
+
+    # The result is a materialized state: its plan is the same size
+    # after 2 rounds as after 8.
+    def plan_lines(n):
+        grow = iterate(init, lambda df: df.select((F.col("x") + 1).alias("x")), sig, n)
+        assert grow.collect()[0].x == n
+        return grow._jdf.queryExecution().analyzed().treeString().count("\n")
+
+    assert plan_lines(2) == plan_lines(8)

@@ -8,7 +8,8 @@ driver's verification budget):
 - DEFAULT (fast) lane: the driver's 50-query window at sf0.01 — the
   exact queries and SF the external driver re-checks, so the default
   ``pytest tests/ -q`` stays a faithful pre-flight of the driver's
-  own correctness gate and completes in single-digit minutes.
+  own correctness gate — plus the round-loop queries (ROUND_LOOPS),
+  about a minute more at sf0.01.
 - SLOW (opt-in) lane, ``-m slow``: the full registry at sf0.01 plus
   EVERYTHING at sf0.1 — a query whose parity holds at one SF but
   breaks at 10× (sampling thresholds, rounding drift under different
@@ -35,6 +36,28 @@ ROWS_ONLY = sorted(name for name, spec in REGISTRY.items() if not spec.oracle)
 # iteration order (frozen by tests/test_registry_order.py).
 DRIVER_WINDOW = frozenset(list(REGISTRY)[:50])
 
+# The round-loop queries (session.iterate, pointer doubling, and the
+# shared BFS, PageRank and BPE loops) also run in the default lane:
+# one shared loop can break all of them at once.
+ROUND_LOOPS = frozenset({
+    "q_llm_dedup_clusters",
+    "q_llm_dedup_clusters_star",
+    "q_llm_dedup_canonical",
+    "q_llm_curation_pipeline",
+    "q_hier_ancestry",
+    "q_hier_rollup",
+    "q_graph_scc",
+    "q_graph_bfs_layers",
+    "q_graph_closeness_bfs",
+    "q_graph_kcore",
+    "q_graph_label_propagation",
+    "q_graph_pagerank",
+    "q_graph_ppr",
+    "q_llm_bpe_train",
+    "q_llm_bpe_apply",
+})
+DEFAULT_LANE = DRIVER_WINDOW | ROUND_LOOPS
+
 
 def _parity_params():
     for name in SQL_QUERIES:
@@ -42,7 +65,7 @@ def _parity_params():
             name,
             SF_ORACLE,
             id=f"{name}-sf0.01",
-            marks=() if name in DRIVER_WINDOW else (pytest.mark.slow,),
+            marks=() if name in DEFAULT_LANE else (pytest.mark.slow,),
         )
         yield pytest.param(
             name, SF_ORACLE_BIG, id=f"{name}-sf0.1", marks=pytest.mark.slow

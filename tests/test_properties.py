@@ -5,10 +5,16 @@ results are checked against python-computed ground truth.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Window
 from pyspark.sql import functions as F
+
+from batchprocessor_spark.operators.dedup import (
+    connected_components,
+    connected_components_star,
+)
 
 SETTINGS = settings(
     max_examples=12,
@@ -119,6 +125,12 @@ def test_shingle_sets_match_python(spark, texts):
         assert got[i] == expected, (t, got[i], expected)
 
 
+CC_KERNELS = pytest.mark.parametrize(
+    "kernel", [connected_components, connected_components_star], ids=lambda f: f.__name__
+)
+
+
+@CC_KERNELS
 @given(
     edges=st.lists(
         st.tuples(st.integers(0, 15), st.integers(0, 15)).filter(lambda t: t[0] != t[1]),
@@ -127,18 +139,14 @@ def test_shingle_sets_match_python(spark, texts):
     )
 )
 @SETTINGS
-def test_connected_components_vs_union_find(spark, edges):
-    """Distributed min-label propagation must agree with a python
-    union-find on arbitrary small graphs (chains, cycles, stars,
-    disconnected pieces — whatever hypothesis produces)."""
-    from batchprocessor_spark.operators.dedup import connected_components
-
+def test_connected_components_vs_union_find(spark, kernel, edges):
+    """Min-label propagation and large-star/small-star must agree with
+    a python union-find on arbitrary small graphs (chains, cycles,
+    stars, disconnected pieces — whatever hypothesis produces)."""
     pairs = spark.createDataFrame(
         [(min(a, b), max(a, b)) for a, b in edges], "d1 BIGINT, d2 BIGINT"
     )
-    got = {
-        r.node: r.label for r in connected_components(pairs, max_rounds=40).collect()
-    }
+    got = {r.node: r.label for r in kernel(pairs, max_rounds=40).collect()}
 
     parent: dict[int, int] = {}
 
@@ -185,44 +193,6 @@ def test_pack_cumsum_vs_python(spark, rows, nparts):
     assert got == want
 
 
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 15), st.integers(0, 15)).filter(lambda t: t[0] != t[1]),
-        min_size=1,
-        max_size=25,
-    )
-)
-@SETTINGS
-def test_star_components_vs_union_find(spark, edges):
-    """The large-star/small-star algorithm must agree with union-find
-    on arbitrary small graphs, exactly like min-label propagation."""
-    from batchprocessor_spark.operators.dedup import connected_components_star
-
-    pairs = spark.createDataFrame(
-        [(min(a, b), max(a, b)) for a, b in edges], "d1 BIGINT, d2 BIGINT"
-    )
-    got = {
-        r.node: r.label
-        for r in connected_components_star(pairs, max_rounds=30).collect()
-    }
-
-    parent: dict[int, int] = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in parent}
-    assert got == want
-
-
 def test_star_components_deep_chain(spark):
     """A 64-node chain: min-label propagation needs ~diameter rounds;
     the star algorithm must collapse it within O(log n) rounds — this
@@ -239,15 +209,12 @@ def test_star_components_deep_chain(spark):
     assert labels == {i: 0 for i in range(n)}
 
 
-def test_connected_components_evaluates_pairs_once(spark):
+@CC_KERNELS
+def test_connected_components_evaluates_pairs_once(spark, kernel):
     """The pair graph feeding CC can be an expensive join (Jaccard at
-    100 TB); connected_components must materialize it exactly once —
-    not once per union branch or per propagation round. Pinned with an
-    accumulator incremented on every evaluated pair row."""
-    import pandas as pd
-
-    from batchprocessor_spark.operators.dedup import connected_components
-
+    100 TB); each kernel must evaluate it exactly once — not once per
+    edge direction or per round. Pinned with an accumulator
+    incremented on every evaluated pair row."""
     acc = spark.sparkContext.accumulator(0)
     base = spark.createDataFrame(
         [(0, 1), (1, 2), (5, 6)], "d1 BIGINT, d2 BIGINT"
@@ -259,7 +226,7 @@ def test_connected_components_evaluates_pairs_once(spark):
             yield pdf
 
     pairs = base.repartition(2).mapInPandas(count_rows, "d1 BIGINT, d2 BIGINT")
-    labels = {r.node: r.label for r in connected_components(pairs).collect()}
+    labels = {r.node: r.label for r in kernel(pairs).collect()}
     assert labels == {0: 0, 1: 0, 2: 0, 5: 5, 6: 5}
     assert acc.value == 3, f"pair graph evaluated {acc.value / 3:.1f}x"
 
