@@ -355,16 +355,19 @@ _KCORE_ROUNDS = 4
 
 
 def _kcore_oracle() -> str:
-    parts = [f"e0 AS (SELECT d1, d2 FROM e)"]
+    # Each round's edge list is read three times; MATERIALIZED keeps
+    # DuckDB from inlining, and so re-expanding, every earlier round
+    # at each read.
+    parts = [f"e0 AS MATERIALIZED (SELECT d1, d2 FROM e)"]
     for r in range(1, _KCORE_ROUNDS + 1):
         parts.append(
-            f"dg{r} AS (SELECT v, count(*)::BIGINT AS d FROM"
+            f"dg{r} AS MATERIALIZED (SELECT v, count(*)::BIGINT AS d FROM"
             f" (SELECT d1 AS v FROM e{r-1} UNION ALL SELECT d2 FROM e{r-1})"
             f" GROUP BY v)"
         )
-        parts.append(f"v{r} AS (SELECT v FROM dg{r} WHERE d >= {_KCORE_K})")
+        parts.append(f"v{r} AS MATERIALIZED (SELECT v FROM dg{r} WHERE d >= {_KCORE_K})")
         parts.append(
-            f"e{r} AS (SELECT d1, d2 FROM e{r-1}"
+            f"e{r} AS MATERIALIZED (SELECT d1, d2 FROM e{r-1}"
             f" WHERE d1 IN (SELECT v FROM v{r}) AND d2 IN (SELECT v FROM v{r}))"
         )
     last = _KCORE_ROUNDS

@@ -230,6 +230,9 @@ _PR_ROUNDS = 5
 
 
 def _pagerank_oracle() -> str:
+    # Each round's ranks are read twice (dangling mass and inflow);
+    # MATERIALIZED keeps DuckDB from inlining, and so re-expanding,
+    # every earlier round at each read.
     prev = "r0"
     iters = []
     for k in range(1, _PR_ROUNDS + 1):
@@ -242,7 +245,7 @@ def _pagerank_oracle() -> str:
       FROM edges e JOIN {prev} p ON e.src = p.node
       JOIN deg d ON e.src = d.node
       GROUP BY 1),
-    r{k} AS (
+    r{k} AS MATERIALIZED (
       SELECT n.node,
              ((15 * (SELECT b FROM base)
                + 85 * (coalesce(i.s, 0) + (SELECT m FROM dang{k}) // (SELECT n FROM base)))
@@ -259,7 +262,7 @@ def _pagerank_oracle() -> str:
     deg AS (SELECT src AS node, count(*)::BIGINT AS outdeg FROM edges GROUP BY 1),
     base AS (SELECT ({_PR_SCALE} // count(*))::BIGINT AS b,
                     count(*)::BIGINT AS n FROM nodes),
-    r0 AS (SELECT node, (SELECT b FROM base) AS pr FROM nodes),
+    r0 AS MATERIALIZED (SELECT node, (SELECT b FROM base) AS pr FROM nodes),
     {",".join(iters)}
     SELECT node, pr FROM {prev}
     """

@@ -17,41 +17,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def range_bin_join(
-    points: DataFrame,
-    intervals: DataFrame,
-    point_col: str,
-    lo_col: str,
-    hi_col: str,
-    bin_width: float,
-    how: str = "inner",
-) -> DataFrame:
-    """Scalable range join: ``points ⋈ intervals ON lo <= p < hi``.
-
-    A naive non-equi join of two LARGE sides is a broadcast/cartesian
-    nested loop — O(n·m). Binning converts it to an equi join: every
-    interval is exploded to the bins it overlaps, every point maps to
-    exactly one bin, the join runs hash/SMJ on ``__bin``, and the
-    residual range predicate filters within matching bins. Cost is
-    O(n + m·span/bin_width + matches) with ONE shuffle per side —
-    the plan that survives when neither side broadcasts.
-
-    ``bin_width`` should be ≈ the typical interval span (smaller →
-    more interval replication; larger → more false candidates).
-    """
-    p_bin = F.floor(F.col(point_col) / bin_width).cast("long")
-    lo_bin = F.floor(F.col(lo_col) / bin_width).cast("long")
-    hi_bin = F.floor((F.col(hi_col)) / bin_width).cast("long")
-    binned_points = points.withColumn("__bin", p_bin)
-    binned_intervals = intervals.withColumn(
-        "__bin", F.explode(F.sequence(lo_bin, hi_bin))
-    )
-    joined = binned_points.join(binned_intervals, "__bin", how).where(
-        (F.col(point_col) >= F.col(lo_col)) & (F.col(point_col) < F.col(hi_col))
-    )
-    return joined.drop("__bin")
-
-
 def salted_join(
     big: DataFrame,
     small: DataFrame,

@@ -2,14 +2,14 @@
 
 At 100 TB the single biggest shuffle saving is to bucket both fact
 tables by the join key at write time — the sort-merge join then reads
-co-located buckets with NO Exchange on either side. These helpers
-wrap ``bucketBy``/``saveAsTable`` (bucketed layouts require the table
+co-located buckets with NO Exchange on either side. ``save_bucketed``
+wraps ``bucketBy``/``saveAsTable`` (bucketed layouts require the table
 catalog; plain ``save(path)`` cannot record bucket metadata).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def save_bucketed(
@@ -34,11 +34,3 @@ def save_bucketed(
         writer = writer.option("path", path)
     writer.saveAsTable(table)
 
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str | list[str], how: str = "inner"
-) -> DataFrame:
-    """Join two identically-bucketed tables — the plan must contain a
-    SortMergeJoin with no Exchange (verified in tests/test_skew.py)."""
-    keys = [key] if isinstance(key, str) else key
-    return spark.table(left_table).join(spark.table(right_table), keys, how)

@@ -37,21 +37,12 @@ class FlowControlConfig:
     ips: float = 0.0                # items/sec, 0 = unlimited
     max_retry_count: int = 3        # retries before DLQ
     retry_delay_s: float = 0.1      # base delay, doubles per attempt
-    # Token-bucket burst capacities. None = the driver-mode defaults
-    # (tps: one second's tokens; ips: max(ips, 2·batch_size)).
-    # Distributed mode pins these to the MINIMUM a controller needs to
-    # make progress (1 flush / batch_size items): each partition's
-    # controller is rebuilt per micro-batch, so any larger burst would
-    # be re-granted every epoch and break the global-rate story.
-    tps_burst: float | None = None
-    ips_burst: float | None = None
     # (host, port) of a driver-side TokenEscrowServer. When set, the
     # controller draws tps/ips from that ONE shared limiter instead of
     # local buckets — the reference's process-global MixedLimiter
-    # semantics (V1/MixedLimiter.java:16-43) across executors, and the
-    # work-conserving distributed mode: a partition whose sink is slow
-    # per row simply reserves less, and the unreserved budget flows to
-    # whoever asks next.
+    # semantics (V1/MixedLimiter.java:16-43) across executors: a
+    # partition whose sink is slow per row simply reserves less, and
+    # the unreserved budget flows to whoever asks next.
     escrow_addr: tuple[str, int] | None = None
     # per-query shared secret for the escrow protocol — every request
     # carries it, and the server drops unauthenticated peers
@@ -91,7 +82,7 @@ class TokenBucket:
 # grows with client count while throughput holds — queueing, not
 # collapse). One reservation per FLUSH, so this is the aggregate
 # flushes/sec one escrow can arbitrate. foreach_batch_sink warns past
-# half of it and points at budget="proportional" (zero-coordination).
+# half of it and points at a larger batch_size (fewer flushes).
 ESCROW_CEILING_FLUSHES_PER_SEC = 7000.0
 
 
@@ -107,9 +98,7 @@ class TokenEscrowServer:
     non-blocking (a reservation is O(1) under each bucket's lock) and
     makes the budget work-conserving by construction: budget a slow-sink
     partition never reserves is immediately available to the next
-    requester — no shares, no epochs, no re-grants (the proportional
-    division fixes row-count skew but cannot let a partition with
-    atypically slow per-row sinks lend its idle budget mid-epoch).
+    requester — no shares, no epochs, no re-grants.
 
     Scale: one request per FLUSH (not per item), so 1000 executors at
     the configured aggregate tps generate exactly tps requests/sec in
@@ -377,7 +366,8 @@ class FlowController:
     library whose sinks are remote calls (RPC/HTTP bulk APIs); the
     global semaphore is the point. For executor-side fan-out use
     ``foreach_batch_sink(..., distributed=True)`` (processor.py), which
-    applies the same policy per partition.
+    runs one controller per partition, all drawing their rates from
+    one shared escrow.
     """
 
     def __init__(self, sink: Sink, config: FlowControlConfig, dlq_path: str | None = None):
@@ -403,15 +393,8 @@ class FlowController:
             self._escrow = EscrowClient(config.escrow_addr, config.escrow_token)
             self._gate = self._escrow.acquire
         else:
-            tps = TokenBucket(config.tps, burst=config.tps_burst)
-            ips = TokenBucket(
-                config.ips,
-                burst=(
-                    config.ips_burst
-                    if config.ips_burst is not None
-                    else max(config.ips, config.batch_size * 2.0)
-                ),
-            )
+            tps = TokenBucket(config.tps)
+            ips = TokenBucket(config.ips, burst=max(config.ips, config.batch_size * 2.0))
 
             def gate(n_flushes: float, n_items: float) -> None:
                 wait = max(tps.reserve(n_flushes), ips.reserve(n_items))

@@ -22,8 +22,10 @@ Scale posture: the facade is driver-side because the reference is a
 client-side batching library (its sinks are remote bulk APIs and the
 GLOBAL concurrency cap is the contract). For executor-side sinks at
 cluster scale use ``foreach_batch_sink(..., distributed=True)``,
-which applies the same flow-control policy per partition via
-``foreachPartition`` — concurrency/rates then bound each partition.
+which runs the flow-control policy per partition via
+``foreachPartition``: each partition gets a row share of the
+concurrency cap, and every partition draws its rates from one
+driver-side token escrow.
 """
 
 from __future__ import annotations
@@ -44,9 +46,11 @@ from pyspark.sql import types as T
 
 from batchprocessor_spark.scratch import scratch_dir
 from batchprocessor_spark.streaming.flow import (
+    ESCROW_CEILING_FLUSHES_PER_SEC,
     FlowControlConfig,
     FlowController,
     Sink,
+    TokenEscrowServer,
 )
 
 
@@ -434,7 +438,6 @@ def foreach_batch_sink(
     config: FlowControlConfig | None = None,
     dlq_path: str | None = None,
     distributed: bool = False,
-    budget: str = "escrow",
 ):
     """Standalone foreachBatch wrapper for arbitrary streaming queries:
     ``df.writeStream.foreachBatch(foreach_batch_sink(my_sink, cfg))``.
@@ -444,97 +447,31 @@ def foreach_batch_sink(
     bulk-API sinks).
     distributed=True: flow control runs inside each partition on the
     executors — the shape that scales to 1000 executors; pair with
-    ``df.repartition(n)`` to set fan-out. The GLOBAL budget is
-    preserved: each micro-batch divides tps/ips
-    across its partitions so the AGGREGATE rate across executors
-    stays bounded by the configured global rate (the reference's
-    limits are process-global, V1/MixedLimiter.java:16-43 — a naive
-    per-partition copy would multiply "tps=100" into partitions×100).
+    ``df.repartition(n)`` to set fan-out. The GLOBAL rate is
+    preserved (the reference's limits are process-global,
+    V1/MixedLimiter.java:16-43 — a naive per-partition copy would
+    multiply "tps=100" into partitions×100): ONE driver-side
+    TokenEscrowServer holds the tps/ips buckets for the whole query,
+    and every partition's flush reserves from it over a tiny
+    line-oriented TCP exchange (executors already reach the driver
+    host). This is the reference's single shared MixedLimiter made
+    distributed: work-conserving with NO shares and NO epochs — a
+    partition whose sink is slow per row just reserves less, and its
+    idle budget flows to whichever partition asks next, mid-epoch.
+    The burst is granted ONCE per query (1 flush / batch_size items),
+    so across epochs: delivered ≤ rate·elapsed + that one-time burst.
+    Executors that cannot reach the escrow fail the flush with a
+    ConnectionError (fail closed) rather than exceed the rate.
 
-    The division is WORK-CONSERVING: each partition's share is
-    proportional to its ROW COUNT in the micro-batch (one cheap
-    counting pass over the persisted batch RDD), so a partition
-    holding share w of the rows drains at tps·w and EVERY partition
-    finishes at ≈ total_rows / global_rate — the same wall clock as
-    the reference's single shared limiter (V1/MixedLimiter.java:16-43),
-    with zero cross-executor coordination. A static nparts-division
-    would waste the fast partitions' unused rate under skew (a
-    90%-skewed partition would run at tps/nparts while the other
-    budgets idle); proportional shares eliminate exactly that idle
-    budget while keeping Σ tps_i = tps exact. Empty partitions get no
-    budget and no controller.
-
-    ``budget`` selects how the global rate is enforced across
-    partitions (distributed mode only):
-
-    - ``"escrow"`` (default): ONE driver-side
-      TokenEscrowServer holds the tps/ips buckets for the whole
-      query; every partition's flush reserves from it over a tiny
-      line-oriented TCP exchange (executors already reach the driver
-      host). This is literally the reference's single shared
-      MixedLimiter (V1/MixedLimiter.java:16-43) made distributed:
-      work-conserving with NO shares and NO epochs — a partition
-      whose sink is atypically slow per row just reserves less, and
-      its idle budget flows to whichever partition asks next,
-      mid-epoch. The burst is granted ONCE per query (1 flush /
-      batch_size items), not per epoch, so the cross-epoch statement
-      tightens to: delivered ≤ rate·elapsed + that one-time burst.
-    - ``"proportional"``: the zero-coordination division —
-      each nonempty partition gets rate × its row share from one
-      counting pass. Work-conserving for ROW-COUNT skew (Σ shares =
-      1, every partition drains in ≈ total/global_rate) but shares
-      are fixed at dispatch: heterogeneous per-row sink LATENCY
-      cannot borrow idle budget until the next epoch. Kept for
-      deployments where the executors cannot open a connection to
-      the driver (locked-down networks).
-
-    Concurrency divides proportionally too but floors at 1 per
-    nonempty partition; when nonempty partitions exceed the
-    configured cap the true aggregate in-flight bound is that count.
-    The per-epoch division and its worst-case aggregate bounds are
+    Concurrency divides by ROW SHARE (one counting pass over the
+    persisted batch RDD) but floors at 1 per nonempty partition; when
+    nonempty partitions exceed the configured cap the true aggregate
+    in-flight bound is that count. Empty partitions get no
+    controller. The per-epoch division and the aggregate bounds are
     surfaced on the returned handle as ``handle.last_budget`` (the
-    distributed analogue of the driver controller's stat()). Because
-    each partition's controller is rebuilt per micro-batch,
-    distributed mode pins the bucket bursts to the progress minimum
-    (1 flush / batch_size items per partition), so the cross-epoch
-    statement is: sustained aggregate rate ≤ the configured tps/ips
-    + epochs-per-second × the reported per_epoch_burst_* allowance —
-    never the driver-mode default burst re-granted every epoch.
+    distributed analogue of the driver controller's stat()).
     """
     cfg = config or FlowControlConfig()
-    if budget not in ("escrow", "proportional"):
-        raise ValueError(f"unknown budget mode {budget!r}")
-
-    if distributed and budget == "escrow":
-        # One reservation RPC per flush: the steady-state request rate
-        # is capped by whichever configured rate binds first. Past
-        # half the MEASURED single-server ceiling
-        # (scripts/escrow_bench.py, SCALE.md) the escrow stops being a
-        # negligible ~100 µs detour and becomes a queue — warn and
-        # point at the zero-coordination mode rather than silently
-        # degrading every flush.
-        from batchprocessor_spark.streaming.flow import (
-            ESCROW_CEILING_FLUSHES_PER_SEC,
-        )
-
-        implied = [r for r in (
-            cfg.tps if cfg.tps > 0 else None,
-            cfg.ips / cfg.batch_size if cfg.ips > 0 else None,
-        ) if r is not None]
-        if implied and min(implied) > 0.5 * ESCROW_CEILING_FLUSHES_PER_SEC:
-            import warnings
-
-            warnings.warn(
-                f"configured rate implies ~{min(implied):.0f} escrow "
-                f"reservations/sec, past the safe region of the "
-                f"measured single-server ceiling "
-                f"(~{ESCROW_CEILING_FLUSHES_PER_SEC:.0f}/s sustained, "
-                f"scripts/escrow_bench.py); use a larger batch_size "
-                f'or budget="proportional" (zero-coordination) '
-                f"to keep flush latency flat",
-                RuntimeWarning,
-                stacklevel=2,
-            )
 
     if not distributed:
         controller = FlowController(sink, cfg, dlq_path=dlq_path)
@@ -551,21 +488,38 @@ def foreach_batch_sink(
         handle.controller = controller  # expose stats to callers
         return handle
 
+    # One reservation RPC per flush: the steady-state request rate is
+    # capped by whichever configured rate binds first. Past half the
+    # MEASURED single-server ceiling (scripts/escrow_bench.py, SCALE.md)
+    # the escrow stops being a negligible ~100 µs detour and becomes a
+    # queue — warn rather than silently degrade every flush.
+    implied = [r for r in (
+        cfg.tps if cfg.tps > 0 else None,
+        cfg.ips / cfg.batch_size if cfg.ips > 0 else None,
+    ) if r is not None]
+    if implied and min(implied) > 0.5 * ESCROW_CEILING_FLUSHES_PER_SEC:
+        import warnings
+
+        warnings.warn(
+            f"configured rate implies ~{min(implied):.0f} escrow "
+            f"reservations/sec, past the safe region of the "
+            f"measured single-server ceiling "
+            f"(~{ESCROW_CEILING_FLUSHES_PER_SEC:.0f}/s sustained, "
+            f"scripts/escrow_bench.py); use a larger batch_size "
+            f"to keep flush latency flat",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+
     def handle_distributed(df: DataFrame, epoch_id: int) -> None:
         import dataclasses
 
         from pyspark import StorageLevel
 
-        # WORK-CONSERVING proportional division: one counting pass
-        # over the persisted micro-batch RDD gives each partition's row
-        # count, and each nonempty partition receives the global rate ×
-        # its row share. Σ shares = 1, so the aggregate stays exactly at
-        # the configured rate, and every partition drains in
-        # ≈ total_rows / global_rate wall clock — no partition's unused
-        # budget idles while a skewed one throttles. The counting pass
-        # is one scan of a batch the dispatch pass scans anyway;
-        # persist makes it one materialization, and the rate-limited
-        # sink I/O dominates both.
+        # One counting pass over the persisted micro-batch RDD gives
+        # each partition's row count, which sizes its share of the
+        # concurrency cap. It is one scan of a batch the dispatch pass
+        # scans anyway; persist makes it one materialization.
         rdd = df.rdd
         rdd.persist(StorageLevel.MEMORY_AND_DISK)
         try:
@@ -577,73 +531,38 @@ def foreach_batch_sink(
             total = sum(counts.values())
             nparts = max(1, len(counts))
             nonempty = {i: c for i, c in counts.items() if c}
-            use_escrow = budget == "escrow" and (cfg.tps > 0 or cfg.ips > 0)
             escrow_addr, escrow_token = None, ""
-            if use_escrow:
+            if cfg.tps > 0 or cfg.ips > 0:
                 escrow_addr, escrow_token = _ensure_escrow(
                     handle_distributed, cfg, df.sparkSession
                 )
 
             def share(w: float) -> FlowControlConfig:
-                """Partition config for row share w. Each partition's
-                controller (and so its token buckets) is rebuilt per
-                micro-batch, so burst capacity is RE-GRANTED every
-                epoch: the burst is pinned to the minimum that lets a
-                controller make progress (1 flush / one batch of items)
-                so the per-epoch free allowance stays bounded and
-                reported. In escrow mode the ONE shared escrow bucket
-                enforces the rates; per-partition tps/ips stay at the
-                global value purely for stat reporting."""
-                if use_escrow:
-                    rates = dict(escrow_addr=escrow_addr, escrow_token=escrow_token)
-                else:
-                    rates = dict(tps=max(cfg.tps, 0.0) * w, ips=max(cfg.ips, 0.0) * w)
+                """Partition config for row share w: its slice of the
+                concurrency cap; the rates come from the shared escrow
+                (unlimited when no rate is set)."""
                 return dataclasses.replace(
                     cfg,
                     concurrency=max(1, int(cfg.concurrency * w)),
-                    tps_burst=1.0,
-                    ips_burst=float(cfg.batch_size),
-                    **rates,
+                    escrow_addr=escrow_addr,
+                    escrow_token=escrow_token,
                 )
 
             budgets = {i: share(c / total) for i, c in nonempty.items()}
             handle_distributed.last_budget = {
                 "epoch_id": epoch_id,
-                "mode": (
-                    "escrow_shared_limiter"
-                    if use_escrow
-                    else "work_conserving_proportional"
-                ),
                 "escrow_addr": escrow_addr,
                 "num_partitions": nparts,
                 "nonempty_partitions": len(nonempty),
                 "rows_total": total,
                 "rows_by_partition": dict(sorted(nonempty.items())),
-                "tps_by_partition": {
-                    i: b.tps for i, b in sorted(budgets.items())
-                },
-                "ips_by_partition": {
-                    i: b.ips for i, b in sorted(budgets.items())
-                },
                 "concurrency_by_partition": {
                     i: b.concurrency for i, b in sorted(budgets.items())
                 },
-                # Aggregate SUSTAINED-rate bounds. Proportional mode:
-                # bucket refill across partitions — Σ tps·wᵢ = tps
-                # exactly, plus a per-epoch allowance from the minimum
-                # burst each rebuilt bucket starts with (the honest
-                # cross-epoch statement is rate ≤ bound +
-                # epochs_per_sec · burst_per_epoch). Escrow mode: ONE
-                # persistent bucket pair for the query, so the burst
-                # is granted once TOTAL (per_epoch_* = 0).
+                # Aggregate SUSTAINED-rate bounds: ONE persistent escrow
+                # bucket pair for the query, whose burst is granted once.
                 "aggregate_tps_bound": cfg.tps,
                 "aggregate_ips_bound": cfg.ips,
-                "per_epoch_burst_flushes": 0 if use_escrow else len(nonempty),
-                "per_epoch_burst_items": (
-                    0 if use_escrow else len(nonempty) * cfg.batch_size
-                ),
-                "query_burst_flushes": 1 if use_escrow else 0,
-                "query_burst_items": cfg.batch_size if use_escrow else 0,
                 # Concurrency can exceed the global cap by the
                 # per-partition floor of 1 when the nonempty
                 # partition count exceeds cap.
@@ -662,11 +581,10 @@ def foreach_batch_sink(
                 tc = TaskContext.get()
                 pid = tc.partitionId() if tc else 0
                 # A partition the count called empty still gets its rows
-                # delivered, but on a 1/nparts share, never the UNDIVIDED
-                # global rate or concurrency: if the count and dispatch
-                # passes ever disagreed, a full grant per surprise
-                # partition could exceed the aggregate cap by up to the
-                # whole global budget.
+                # delivered, but on a 1/nparts concurrency share, never
+                # the UNDIVIDED cap: if the count and dispatch passes
+                # ever disagreed, a full grant per surprise partition
+                # could exceed the aggregate cap by up to the whole cap.
                 pp_cfg = budgets.get(pid) or share(1 / nparts)
                 # Retry→DLQ must survive distribution: each
                 # partition's controller appends under its own
@@ -720,8 +638,6 @@ def _ensure_escrow(
     if handle.escrow_addr is not None:
         return handle.escrow_addr, handle.escrow_server.token
     import weakref
-
-    from batchprocessor_spark.streaming.flow import TokenEscrowServer
 
     try:
         host = spark.sparkContext.getConf().get("spark.driver.host")

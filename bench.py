@@ -23,31 +23,11 @@ import time
 
 from batchprocessor_spark.plans.registry import load_all
 from batchprocessor_spark.session import get_spark
-from scripts.fixture_layout import ensure_multifile
-
 # Headline set: one representative per operator family (scan, joins,
-# aggregates, windows, sort, dedup, similarity, text, timeseries).
-HEADLINE = [
-    "q_agg_basic",
-    "q_filter_pred",
-    "q_join_inner_broadcast",
-    "q_join_inner_sortmerge",
-    "q_join_asof",
-    "q_join_multiway",
-    "q_agg_rollup",
-    "q_win_rank",
-    "q_win_frame",
-    "q_topk_per_group",
-    "q_sort_limit",
-    "q_dedup_exact",
-    "q_llm_dedup_minhash",
-    "q_llm_simsearch_topk",
-    "q_llm_text_stats",
-    "q_llm_quality_filter",
-    "q_fn_json",
-    "q_win_tumbling",
-    "q_win_session",
-]
+# aggregates, windows, sort, dedup, similarity, text, timeseries),
+# shared with perfbench's query workloads.
+from perfbench.query_workload import HEADLINE
+from scripts.fixture_layout import ensure_multifile
 
 
 def calibrate() -> float:

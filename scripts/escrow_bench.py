@@ -22,7 +22,8 @@ queueing slope, not a collapse). SCALE.md records the numbers;
 batchprocessor_spark.streaming.flow pins the sustained figure as
 ESCROW_CEILING_FLUSHES_PER_SEC, and foreach_batch_sink warns when a
 configured rate implies a request rate past half of it (the safe
-region), pointing at budget="proportional".
+region), pointing at a larger batch_size (fewer flushes, so fewer
+reservations).
 """
 
 from __future__ import annotations

@@ -13,6 +13,7 @@ from batchprocessor_spark.streaming.flow import (
     FlowControlConfig,
     FlowController,
     TokenBucket,
+    TokenEscrowServer,
 )
 from batchprocessor_spark.streaming.processor import foreach_batch_sink
 
@@ -33,41 +34,30 @@ def test_flush_larger_than_ips_burst_completes():
     """A 100-item flush against a 10-item ips burst must pay about
     0.3 s for 300 items at 1000/s and return. A bucket that waits for
     the whole chunk to fit under its burst never delivers the first
-    flush, and shutdown() then blocks on the stuck flush thread."""
+    flush, and shutdown() then blocks on the stuck flush thread. The
+    escrow is the one limiter whose burst can be set below a flush."""
+    srv = TokenEscrowServer(tps=0.0, ips=1000.0, ips_burst=10.0)
     done = []
-    ctrl = FlowController(
-        lambda chunk: done.append(len(chunk)),
-        FlowControlConfig(batch_size=100, concurrency=4, ips=1000.0, ips_burst=10.0),
-    )
-    t0 = time.perf_counter()
-    for f in ctrl.submit_batch(pd.DataFrame({"id": range(300)})):
-        f.result(timeout=5.0)  # fail instead of waiting on a stuck flush
-    dt = time.perf_counter() - t0
-    ctrl.shutdown()
+    try:
+        ctrl = FlowController(
+            lambda chunk: done.append(len(chunk)),
+            FlowControlConfig(
+                batch_size=100,
+                concurrency=4,
+                ips=1000.0,
+                escrow_addr=("127.0.0.1", srv.port),
+                escrow_token=srv.token,
+            ),
+        )
+        t0 = time.perf_counter()
+        for f in ctrl.submit_batch(pd.DataFrame({"id": range(300)})):
+            f.result(timeout=5.0)  # fail instead of waiting on a stuck flush
+        dt = time.perf_counter() - t0
+        ctrl.shutdown()
+    finally:
+        srv.close()
     assert sum(done) == 300
     assert 0.25 <= dt < 5.0, dt
-
-
-def test_flow_controller_burst_pins_apply():
-    """The distributed-mode burst pins wire through FlowController:
-    with tps=10 and tps_burst=1, six 1-row flushes need five refills
-    (≥ ~0.5 s) — under the driver-mode default burst they would all
-    be free."""
-    import time
-
-    from batchprocessor_spark.streaming.flow import FlowController
-
-    done = []
-    ctrl = FlowController(
-        lambda chunk: done.append(len(chunk)),
-        FlowControlConfig(batch_size=1, concurrency=2, tps=10.0, tps_burst=1.0),
-    )
-    t0 = time.perf_counter()
-    ctrl.wait(ctrl.submit_batch(pd.DataFrame({"id": range(6)})))
-    dt = time.perf_counter() - t0
-    ctrl.shutdown()
-    assert sum(done) == 6
-    assert dt >= 0.45, dt
 
 
 def test_token_escrow_reserve_semantics():
@@ -180,9 +170,8 @@ def test_escrow_replay_with_bounded_cache():
 def test_escrow_warns_past_measured_ceiling():
     """The escrow's reservation ceiling is MEASURED
     (scripts/escrow_bench.py, SCALE.md); configuring a rate whose
-    implied request rate exceeds half of it warns and points at
-    budget="proportional". Low rates and proportional mode stay
-    silent."""
+    implied request rate exceeds half of it warns and points at a
+    larger batch_size. Low rates stay silent."""
     import warnings
 
     import pytest
@@ -205,12 +194,6 @@ def test_escrow_warns_past_measured_ceiling():
         warnings.simplefilter("error")
         foreach_batch_sink(
             sink, FlowControlConfig(tps=100.0), distributed=True
-        )
-        foreach_batch_sink(
-            sink,
-            FlowControlConfig(tps=5000.0),
-            distributed=True,
-            budget="proportional",
         )
         # tps binds before the huge implied-ips rate: no warning
         foreach_batch_sink(

@@ -10,9 +10,9 @@ What one big JVM can never prove, this lane does:
   stay oracle-exact under them across process boundaries;
 - cloudpickled executor-side sinks (distributed flow control) cross
   a real process boundary with chunk-granular DLQ, zero loss;
-- the driver-side token escrow (r11 default budget) is dialed from
-  real separate worker processes — the deployment question for a
-  cluster-global rate limiter;
+- the driver-side token escrow (the one distributed rate budget) is
+  dialed from real separate worker processes — the deployment
+  question for a cluster-global rate limiter;
 - RocksDB-backed stateful streaming (JNI inside each executor
   process) stays oracle-exact;
 - headline plans (broadcast star, window frame, graph rounds, the
@@ -77,6 +77,6 @@ def test_local_cluster_probe_all_green(tmp_path):
         "materialize_reliable_checkpoint",
         "snm_block_ids_deterministic",
         "distributed_flow_dlq",
-        "work_conserving_budget",
+        "escrow_budget",
     } <= names
     assert sum(k.startswith("parity:") for k in names) >= 6

@@ -1,48 +1,10 @@
-"""Binned range join (big×big, no nested loop) + compaction tests."""
+"""Small-file compaction tests."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from batchprocessor_spark.operators.skew import range_bin_join
 from batchprocessor_spark.sources.compaction import compact
-
-
-def _points(spark, n=2000):
-    return spark.range(n).select(
-        F.col("id").alias("pid"), (F.col("id") * 0.37 % 100).alias("x")
-    )
-
-
-def _intervals(spark, n=300):
-    return spark.range(n).select(
-        F.col("id").alias("iid"),
-        (F.col("id") * 0.31 % 95).alias("lo"),
-        ((F.col("id") * 0.31 % 95) + (F.col("id") % 7) + 0.5).alias("hi"),
-    )
-
-
-def test_range_bin_join_equals_naive(spark):
-    p, iv = _points(spark), _intervals(spark)
-    naive = p.join(iv, (p.x >= iv.lo) & (p.x < iv.hi)).select("pid", "iid")
-    binned = range_bin_join(p, iv, "x", "lo", "hi", bin_width=4.0).select("pid", "iid")
-    assert sorted(map(tuple, binned.collect())) == sorted(map(tuple, naive.collect()))
-    assert binned.count() > 0
-
-
-def test_range_bin_join_is_equi_not_nested_loop(spark):
-    """With broadcast disabled (the big×big situation) the binned join
-    must plan as SortMergeJoin on __bin — never a nested loop."""
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        binned = range_bin_join(
-            _points(spark), _intervals(spark), "x", "lo", "hi", bin_width=4.0
-        )
-        plan = binned._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan
-        assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
 def test_compact_reduces_files_preserves_data(spark, tmp_path):

@@ -19,7 +19,7 @@ from batchprocessor_spark.operators.skew import (
     hot_key_salted_equi_join,
     salted_join,
 )
-from batchprocessor_spark.sources.bucketing import bucketed_join, save_bucketed
+from batchprocessor_spark.sources.bucketing import save_bucketed
 
 # Adversarial corpus: a 20% mass-duplicated boilerplate cluster (the
 # LSH hot-bucket regime — every band bucket holds the whole cluster)
@@ -198,7 +198,7 @@ def test_bucketed_join_has_no_exchange(spark, warehouse):
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = bucketed_join(spark, "b_orders", "b_lineitem", "key")
+        joined = spark.table("b_orders").join(spark.table("b_lineitem"), "key")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan, plan
         assert "Exchange" not in plan, f"bucketed join still shuffles:\n{plan}"
