@@ -12,11 +12,20 @@ Reference → engine mapping (paths relative to /root/reference/):
 | time-based force flush (O6)                 | interval spool of a buffer |
 |                                             | flush_interval_s old       |
 | explicit flush (O7)                         | flush() → next micro-batch |
+| worker hands the batch to the sink          | micro-batch handler reads  |
+|                                             | its spools with pyarrow    |
+|                                             | (no Spark job per batch)   |
 | async sink + semaphore + rate (O9–O11)      | FlowController             |
 | retry + drop (O12)                          | retry + DLQ parquet        |
 | block/reject backpressure (O13)             | pending-cap block/reject   |
 | start/stop lifecycle (O14/O15)              | start()/stop() drain       |
 | Stat tree (O16)                             | stat() dict                |
+
+Spark keeps the control plane: offsets, commit, restart and progress.
+Each micro-batch is planned but never scanned by Spark. The handler
+takes the spool paths from the planned file scan, reads them with
+pyarrow and converts them as ``DataFrame.toPandas()`` would, and the
+file source deletes each spool once its batch commits.
 
 Scale posture: the facade is driver-side because the reference is a
 client-side batching library (its sinks are remote bulk APIs and the
@@ -32,17 +41,21 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import threading
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from enum import Enum
 from typing import Any
+from urllib.parse import urlparse
+from urllib.request import url2pathname
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import _create_converter_to_pandas, to_arrow_schema
 
 from batchprocessor_spark.scratch import scratch_dir
 from batchprocessor_spark.streaming.flow import (
@@ -138,7 +151,7 @@ class BatchProcessor:
         self._query = None
         self._timer: threading.Thread | None = None
         self._timer_stop = threading.Event()
-        self._handle = foreach_batch_sink(
+        self._controller = FlowController(
             sink,
             FlowControlConfig(
                 batch_size=self.config.batch_size,
@@ -150,8 +163,7 @@ class BatchProcessor:
             ),
             dlq_path=self.dlq_dir,
         )
-        self._controller = self._handle.controller
-        self._arrow_schema = None
+        self._arrow_schema = to_arrow_schema(self.schema)
 
     # ------------------------------------------------------------ state
 
@@ -170,12 +182,17 @@ class BatchProcessor:
             if self._state != State.NEW:
                 raise RuntimeError(f"cannot start from state {self._state}")
             self._state = State.STARTED
+        # cleanSource=delete: the file source deletes a spool once the
+        # batch that read it commits, so the ingest directory (which
+        # the source lists every trigger) holds only unconsumed spools,
+        # and a restart still finds an uncommitted batch's files.
         stream = (
             self.spark.readStream.schema(self.schema)
             .option("maxFilesPerTrigger", self.config.max_files_per_trigger)
+            .option("cleanSource", "delete")
             .parquet(self.ingest_dir)
         )
-        writer = stream.writeStream.foreachBatch(self._handle).option(
+        writer = stream.writeStream.foreachBatch(self._on_batch).option(
             "checkpointLocation", self.ckpt_dir
         )
         # Stream-scoped confs, set on the caller's session only while
@@ -343,13 +360,6 @@ class BatchProcessor:
         self._write_spool([], seq)
 
     def _write_spool(self, batch: list[tuple], seq: int) -> None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        if self._arrow_schema is None:
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            self._arrow_schema = to_arrow_schema(self.schema)
         cols = list(zip(*batch)) if batch else [[] for _ in self.schema.fields]
         table = pa.Table.from_arrays(
             [pa.array(list(c), type=f.type) for c, f in zip(cols, self._arrow_schema)],
@@ -360,6 +370,88 @@ class BatchProcessor:
         os.rename(
             tmp,
             os.path.join(self.ingest_dir, f"spool_{self._instance}_{seq:08d}.parquet"),
+        )
+
+    # ------------------------------------------------------- micro-batch
+
+    def _on_batch(self, df: DataFrame, epoch_id: int) -> None:
+        """The micro-batch handler. Spark has planned the batch (offsets
+        logged, the spools it covers listed into the scan's file index)
+        but runs no job for it: the handler reads those spools with
+        pyarrow, on the driver where they were written, and never
+        touches ``df``. Blocks until the batch's flushes finish, so the
+        commit that follows implies delivery (at-least-once)."""
+        execution, scan = self._batch_scan(epoch_id)
+        table = pq.read_table(self._scan_paths(scan), schema=self._arrow_schema)
+        # Progress takes numInputRows from the scan's numOutputRows
+        # metric, which only a scan job would fill: credit it here.
+        scan.metrics().apply("numOutputRows").add(table.num_rows)
+        if table.num_rows:
+            # The batch's session: the one df.toPandas() would read.
+            conf = execution.sparkSession().sessionState().conf()
+            pdf = self._to_pandas(table, conf)
+            self._controller.wait(self._controller.submit_batch(pdf))
+
+    def _batch_scan(self, epoch_id: int):
+        """The running batch's JVM ``IncrementalExecution`` and the one
+        file scan (``FileSourceScanExec``) in its executed plan. The
+        query is found by the id Spark sets on the thread that runs the
+        batch, since this can run before ``writer.start()`` returns (a
+        restart with a backlog)."""
+        query_id = self.spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+        query = self.spark._jsparkSession.streams().get(query_id)
+        if query is None:
+            raise RuntimeError(f"no active streaming query {query_id!r}")
+        execution = query.streamingQuery().lastExecution()
+        if execution.currentBatchId() != epoch_id:
+            raise RuntimeError(
+                f"last execution is batch {execution.currentBatchId()}, "
+                f"handler was called for batch {epoch_id}"
+            )
+        leaves = execution.executedPlan().collectLeaves()
+        scans = [leaves.apply(i) for i in range(leaves.size())]
+        names = [leaf.getClass().getSimpleName() for leaf in scans]
+        if names != ["FileSourceScanExec"]:
+            raise RuntimeError(f"expected one FileSourceScanExec leaf, got {names}")
+        return execution, scans[0]
+
+    def _scan_paths(self, scan) -> list[str]:
+        """Local paths of the files ``scan`` would read."""
+        uris = scan.relation().location().inputFiles()
+        # One py4j call for the whole list, not one per element.
+        seq = self.spark._jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(uris)
+        paths = []
+        for uri in seq.mkString("\n").splitlines():
+            parsed = urlparse(uri)
+            if parsed.scheme != "file":
+                raise RuntimeError(f"spool {uri!r} is not on the local filesystem")
+            paths.append(url2pathname(parsed.path))
+        return paths
+
+    def _to_pandas(self, table: pa.Table, conf) -> pd.DataFrame:
+        """``table`` as the frame ``DataFrame.toPandas()`` returns on its
+        Arrow path (pyspark/sql/pandas/conversion.py): the same
+        ``to_pandas`` options, then the per-field converter with the
+        time zone and struct-handling mode of ``conf`` (a JVM SQLConf)."""
+        timezone = conf.sessionLocalTimeZone()
+        struct_in_pandas = conf.pandasStructHandlingMode()
+        legacy = struct_in_pandas == "legacy"
+        pdf = table.rename_columns(
+            [f"col_{i}" for i in range(table.num_columns)]
+        ).to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
+        pdf.columns = self.schema.names
+        return pd.concat(
+            [
+                _create_converter_to_pandas(
+                    field.dataType,
+                    field.nullable,
+                    timezone=timezone,
+                    struct_in_pandas="dict" if legacy else struct_in_pandas,
+                    error_on_duplicated_field_names=legacy,
+                )(pser)
+                for (_, pser), field in zip(pdf.items(), self.schema.fields)
+            ],
+            axis="columns",
         )
 
     # ------------------------------------------------------------ flush

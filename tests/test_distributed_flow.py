@@ -204,8 +204,6 @@ def test_distributed_budget_holds_across_epochs(spark, tmp_path):
     flushes free again; the escrow bucket lives for the query and
     grants its 1-token burst once, so the TOTAL span must cover both
     epochs' refills."""
-    import time
-
     src = tmp_path / "src"
     src.mkdir()
     marks = tmp_path / "marks"

@@ -229,3 +229,97 @@ def test_kill_mid_flush_restart_is_exactly_once(spark, tmp_path):
     assert stats["dlq_items"] == 0
     assert p2.dlq() is None
     p2.close()
+
+
+# ---------------------------------------------------------------------------
+# The handler reads the spools listed in the batch's planned file scan,
+# not the file-source log: these pin that it delivers each spool once
+# wherever Spark's logs put it.
+# ---------------------------------------------------------------------------
+
+
+def test_compacted_source_log_batches_deliver_exactly_once(spark, tmp_path):
+    """22 micro-batches of one spool each: the file source compacts its
+    log at batches 9 and 19, and every id arrives exactly once."""
+    import os
+
+    sink = CollectingSink()
+    p = BatchProcessor(
+        spark, SCHEMA, sink,
+        ProcessorConfig(batch_size=10, spool_size=10, flush_interval_s=0.2),
+        workdir=str(tmp_path / "proc"),
+    ).start()
+    for wave in range(22):
+        p.put_many([(wave * 10 + i, "c") for i in range(10)])
+        p.flush(wait=True)
+    p.stop()
+    log = set(os.listdir(os.path.join(p.ckpt_dir, "sources", "0")))
+    p.close()
+    assert {"9.compact", "19.compact"} <= log
+    assert sorted(sink.ids) == list(range(220))
+
+
+def test_restart_with_backlog_delivers_every_id(spark, tmp_path):
+    """A processor stopped without draining leaves its spools
+    unconsumed; the next one on the same workdir delivers all of them,
+    starting with a micro-batch that can run before ``start()`` has the
+    query handle."""
+    workdir = str(tmp_path / "proc")
+    # flush_interval_s=20: the idle stream polls every 5 s, so nothing
+    # is consumed between put_many and stop.
+    cfg = ProcessorConfig(batch_size=100, spool_size=100, flush_interval_s=20.0)
+    sink1 = CollectingSink()
+    p1 = BatchProcessor(spark, SCHEMA, sink1, cfg, workdir=workdir).start()
+    p1.put_many([(i, "b") for i in range(5000)])
+    p1.stop(wait_for_completion=False)
+    assert sink1.ids == []
+
+    sink2 = CollectingSink()
+    p2 = BatchProcessor(spark, SCHEMA, sink2, cfg, workdir=workdir).start()
+    p2.stop()
+    p2.close()
+    assert sorted(sink2.ids) == list(range(5000))
+
+
+def test_source_log_ahead_of_offset_log(spark, tmp_path):
+    """A driver that dies after the file source logs batch N+1 but
+    before the offset log does leaves an orphan source-log batch. On
+    restart the next micro-batch covers both that batch and the new
+    one, so micro-batch ids and source-log batch ids part ways from
+    then on; every spool is still delivered once."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    workdir = str(tmp_path / "proc")
+    cfg = ProcessorConfig(batch_size=100, spool_size=100)
+    sink1 = CollectingSink()
+    p1 = BatchProcessor(spark, SCHEMA, sink1, cfg, workdir=workdir).start()
+    p1.put_many([(i, "a") for i in range(100)])
+    p1.stop()
+    last = max(int(n) for n in os.listdir(os.path.join(p1.ckpt_dir, "offsets")) if n.isdigit())
+
+    def spool(name: str, ids: range) -> str:
+        path = os.path.join(p1.ingest_dir, name)
+        table = pa.table({"id": pa.array(ids, pa.int64()), "payload": ["o"] * len(ids)})
+        pq.write_table(table, path)
+        return path
+
+    orphan = spool("spool_orphan_1.parquet", range(100, 200))
+    entry = {"path": f"file://{orphan}", "timestamp": int(os.path.getmtime(orphan) * 1000),
+             "batchId": last + 1}
+    with open(os.path.join(p1.ckpt_dir, "sources", "0", str(last + 1)), "w") as f:
+        f.write("v1\n" + json.dumps(entry))
+    spool("spool_orphan_2.parquet", range(200, 300))
+
+    sink2 = CollectingSink()
+    p2 = BatchProcessor(spark, SCHEMA, sink2, cfg, workdir=workdir).start()
+    for wave in range(3):
+        p2.put_many([(300 + wave * 100 + i, "b") for i in range(100)])
+        p2.flush(wait=True)
+    p2.stop()
+    p2.close()
+    assert sorted(sink1.ids) == list(range(100))
+    assert sorted(sink2.ids) == list(range(100, 600))
