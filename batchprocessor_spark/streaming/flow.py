@@ -38,11 +38,10 @@ class FlowControlConfig:
     max_retry_count: int = 3        # retries before DLQ
     retry_delay_s: float = 0.1      # base delay, doubles per attempt
     # (host, port) of a driver-side TokenEscrowServer. When set, the
-    # controller draws tps/ips from that ONE shared limiter instead of
-    # local buckets — the reference's process-global MixedLimiter
-    # semantics (V1/MixedLimiter.java:16-43) across executors: a
-    # partition whose sink is slow per row simply reserves less, and
-    # the unreserved budget flows to whoever asks next.
+    # controller takes its permits and tps/ips tokens from that ONE
+    # shared budget instead of a local semaphore and buckets — the
+    # reference's process-global semaphore and MixedLimiter
+    # (V1/MixedLimiter.java:16-43) across executors.
     escrow_addr: tuple[str, int] | None = None
     # per-query shared secret for the escrow protocol — every request
     # carries it, and the server drops unauthenticated peers
@@ -75,36 +74,31 @@ class TokenBucket:
             return max(0.0, -self._tokens / self.rate)
 
 
-# Measured sustained reservation ceiling of ONE TokenEscrowServer
-# (scripts/escrow_bench.py, recorded in SCALE.md): ~14k req/s at
-# 4 concurrent client processes, plateauing at ~7k req/s from 8-16
-# (per-connection server threads contend on the GIL; p50 latency
-# grows with client count while throughput holds — queueing, not
-# collapse). One reservation per FLUSH, so this is the aggregate
-# flushes/sec one escrow can arbitrate. foreach_batch_sink warns past
-# half of it and points at a larger batch_size (fewer flushes).
+# Sustained ceiling of ONE TokenEscrowServer in aggregate flushes/sec
+# (scripts/escrow_bench.py; numbers and hosts in SCALE.md). A flush
+# makes two round trips, a take and a give; a 4-vCPU host sustained
+# 11.5k-14.1k flushes/sec at 8-16 clients, so this figure is a
+# conservative floor. foreach_batch_sink warns past half of it and
+# points at a larger batch_size (fewer flushes).
 ESCROW_CEILING_FLUSHES_PER_SEC = 7000.0
 
 
 class TokenEscrowServer:
-    """Driver-side shared rate limiter — the reference's single
-    process-global MixedLimiter (V1/MixedLimiter.java:16-43) lifted to
-    a tiny line-oriented TCP service so every executor partition draws
-    from ONE tps bucket and ONE ips bucket.
+    """Driver-side shared flow-control budget: the reference's one
+    process-global semaphore and MixedLimiter (V1/MixedLimiter.java:
+    16-43, :30-33) as a tiny line-oriented TCP service, so every
+    executor partition draws from ONE pool of ``concurrency`` permits,
+    ONE tps bucket and ONE ips bucket.
 
-    Reservation semantics (Guava RateLimiter's reserve): token
-    balances may go negative; the reply is how long the requester must
-    sleep before its flush may proceed. This keeps the server
-    non-blocking (a reservation is O(1) under each bucket's lock) and
-    makes the budget work-conserving by construction: budget a slow-sink
-    partition never reserves is immediately available to the next
-    requester — no shares, no epochs, no re-grants.
-
-    Scale: one request per FLUSH (not per item), so 1000 executors at
-    the configured aggregate tps generate exactly tps requests/sec in
-    total — trivial for a threaded accept loop; executors already
-    reach the driver host for blocks/files, so no new topology is
-    assumed."""
+    A flush takes a permit and reserves its rate tokens in one round
+    trip (the reply is the sleep it owes, Guava reserve semantics), and
+    gives the permit back when it ends. A take blocks until a permit is
+    free, so clients send takes on their own connection and gives and
+    retry reservations on another, which never blocks: a release is
+    never queued behind a blocked take. When a take connection closes,
+    the permits it took come back, so a lost task cannot strand the
+    cap. Idle permits and budget go to the next requester: no shares,
+    no epochs, no re-grants."""
 
     def __init__(
         self,
@@ -114,12 +108,15 @@ class TokenEscrowServer:
         ips_burst: float | None = None,
         bind_host: str | None = None,
         replies_cap: int = 65536,
+        concurrency: int = 16,
     ):
         import socket
         import uuid
 
         self._tps = TokenBucket(tps, burst=tps_burst)
         self._ips = TokenBucket(ips, burst=float(ips_burst or 0.0))
+        self._permits = threading.Semaphore(concurrency)
+        self._held: dict[str, int] = {}  # client id -> permits it holds
         self._lock = threading.Lock()
         self.reservations = 0
         # Every request must carry this per-query secret — an open
@@ -137,25 +134,15 @@ class TokenEscrowServer:
         if self._srv is None:
             self._srv = socket.create_server(("0.0.0.0", 0))
         self.port = self._srv.getsockname()[1]
-        # idempotency cache: client_id -> (seq, wait). A client retries
-        # the SAME seq after a write-succeeded/read-failed exchange;
-        # replaying the cached grant instead of re-reserving keeps a
-        # flaky connection from double-deducting budget. One in-flight
-        # request per client (the client serializes under its lock), so
-        # caching only the latest is exact.
-        #
-        # LRU-bounded: every micro-batch builds fresh EscrowClients
-        # with new uuids, so an unbounded dict gains one
-        # entry per (partition × epoch) for the life of the query —
-        # GBs of driver RSS over a week of 1 s epochs. The cache only
-        # has to survive one client's in-flight retry window
-        # (milliseconds); evicting the oldest beyond `replies_cap`
-        # keeps it exact unless >cap OTHER reservations land inside
-        # that window, i.e. a sustained request rate far beyond the
-        # single-thread ceiling documented in SCALE.md. Eviction on
-        # connection close would be WRONG here: the client resets its
-        # socket before resending, so the cached grant must outlive
-        # the disconnect it is protecting against.
+        # Idempotency cache for gives and reservations, client_id ->
+        # (seq, wait): a client resends the SAME seq after a
+        # write-succeeded/read-failed exchange, and the cached reply is
+        # replayed, so a flaky connection never double-deducts budget
+        # or double-releases a permit. The client serializes these
+        # requests, so caching only the latest is exact. LRU-bounded
+        # (every epoch's clients have new ids): the cache only has to
+        # survive one retry window, and it must outlive the disconnect
+        # the client resets before resending.
         from collections import OrderedDict
 
         self._replies: OrderedDict[str, tuple[int, float]] = OrderedDict()
@@ -172,6 +159,16 @@ class TokenEscrowServer:
             self.reservations += 1
         return max(self._tps.reserve(n_flushes), self._ips.reserve(n_items))
 
+    def _give(self, cid: str) -> float:
+        """Return one of ``cid``'s permits; a give owes no wait."""
+        with self._lock:
+            held = self._held.get(cid, 0)
+            if held:
+                self._held[cid] = held - 1
+        if held:  # a give after its take connection closed frees nothing
+            self._permits.release()
+        return 0.0
+
     def _serve(self) -> None:
         while not self._closed:
             try:
@@ -183,34 +180,50 @@ class TokenEscrowServer:
             ).start()
 
     def _client(self, conn) -> None:
+        taker = None  # the client whose take connection this is
         try:
             rf = conn.makefile("rwb")
             while True:
                 line = rf.readline()
                 if not line:
                     return
-                token, cid, seq_s, f, i = line.split()
-                if token.decode() != self.token:
+                token, op, cid, seq_s, f, i = line.decode().split()
+                if token != self.token:
                     return  # unauthenticated peer — drop silently
-                cid_s, seq = cid.decode(), int(seq_s)
-                with self._lock:
-                    cached = self._replies.get(cid_s)
-                    if cached is not None:
-                        self._replies.move_to_end(cid_s)
-                if cached is not None and cached[0] == seq:
-                    wait = cached[1]  # retry replay — no re-reserve
-                else:
-                    wait = self.reserve(float(f), float(i))
+                if op == "take":
+                    self._permits.acquire()
+                    taker = cid
                     with self._lock:
-                        self._replies[cid_s] = (seq, wait)
-                        self._replies.move_to_end(cid_s)
-                        while len(self._replies) > self._replies_cap:
-                            self._replies.popitem(last=False)
+                        self._held[cid] = self._held.get(cid, 0) + 1
+                    wait = self.reserve(float(f), float(i))
+                else:
+                    seq = int(seq_s)
+                    with self._lock:
+                        cached = self._replies.get(cid)
+                        if cached is not None:
+                            self._replies.move_to_end(cid)
+                    if cached is not None and cached[0] == seq:
+                        wait = cached[1]  # retry replay — no re-apply
+                    else:
+                        wait = (
+                            self._give(cid) if op == "give"
+                            else self.reserve(float(f), float(i))
+                        )
+                        with self._lock:
+                            self._replies[cid] = (seq, wait)
+                            self._replies.move_to_end(cid)
+                            while len(self._replies) > self._replies_cap:
+                                self._replies.popitem(last=False)
                 rf.write(f"{wait:.6f}\n".encode())
                 rf.flush()
         except (OSError, ValueError):
             pass
         finally:
+            if taker is not None:
+                with self._lock:
+                    n = self._held.pop(taker, 0)
+                if n:
+                    self._permits.release(n)
             try:
                 conn.close()
             except OSError:
@@ -225,75 +238,78 @@ class TokenEscrowServer:
 
 
 class EscrowClient:
-    """Executor-side client for TokenEscrowServer: one persistent
-    connection per controller, one request per flush (request/response
-    framing under a lock; the granted sleep happens OUTSIDE the lock so
-    concurrent flush threads pipeline their reservations). Connection
-    failure fails CLOSED after bounded retries — silently falling back
-    to an unlimited local bucket would break the aggregate-rate cap."""
+    """Executor-side client for TokenEscrowServer, one per controller:
+    a take connection, used only by the dispatching thread, and a give
+    connection for releases and retry reservations. A failed take is
+    not retried (the server may already have freed this client's
+    permits with the broken connection); gives and reservations retry
+    under one seq, which the server replays instead of re-applying.
+    Either way the client fails CLOSED with ``ConnectionError`` —
+    falling back to local limits would break the aggregate caps."""
 
     def __init__(self, addr: tuple[str, int], token: str = ""):
+        import itertools
         import uuid
 
         self._addr = tuple(addr)
         self._token = token
         self._cid = uuid.uuid4().hex
-        self._seq = 0
-        self._sock = None
-        self._rf = None
-        self._lock = threading.Lock()
+        self._seq = itertools.count(1)
+        self._conns: dict[str, tuple] = {}
+        self._locks = {"take": threading.Lock(), "give": threading.Lock()}
 
-    def _connect(self):
+    def take(self, n_items: float) -> float:
+        """Block until a permit is free and reserve one flush of
+        ``n_items``; returns the seconds the flush owes."""
+        return self._call("take", 1.0, n_items)
+
+    def give(self) -> None:
+        self._call("give", 0.0, 0.0)
+
+    def reserve(self, n_flushes: float, n_items: float) -> float:
+        """Rate tokens only (a retry); returns the seconds owed."""
+        return self._call("reserve", n_flushes, n_items)
+
+    def _call(self, op: str, n_flushes: float, n_items: float) -> float:
         import socket
 
-        self._sock = socket.create_connection(self._addr, timeout=30)
-        self._rf = self._sock.makefile("rwb")
-
-    def _reset(self):
-        try:
-            if self._sock is not None:
-                self._sock.close()
-        except OSError:
-            pass
-        self._sock = None
-        self._rf = None
-
-    def acquire(self, n_flushes: float, n_items: float) -> None:
-        last_err: Exception | None = None
-        with self._lock:
-            # one seq per logical request: retries RESEND the same seq
-            # and the server replays the cached grant instead of
-            # re-reserving (no double-deduct on write-ok/read-fail)
-            self._seq += 1
-            msg = (
-                f"{self._token} {self._cid} {self._seq} "
-                f"{n_flushes} {n_items}\n"
-            ).encode()
-            for attempt in range(5):
+        line = "take" if op == "take" else "give"
+        seq = next(self._seq)
+        msg = f"{self._token} {op} {self._cid} {seq} {n_flushes} {n_items}\n".encode()
+        tries = 1 if op == "take" else 5
+        with self._locks[line]:
+            for attempt in range(tries):
                 try:
-                    if self._sock is None:
-                        self._connect()
-                    self._rf.write(msg)
-                    self._rf.flush()
-                    line = self._rf.readline()
-                    if not line:
+                    if line not in self._conns:
+                        sock = socket.create_connection(self._addr, timeout=30)
+                        if line == "take":  # waits while sinks hold every permit
+                            sock.settimeout(None)
+                        self._conns[line] = (sock, sock.makefile("rwb"))
+                    rf = self._conns[line][1]
+                    rf.write(msg)
+                    rf.flush()
+                    reply = rf.readline()
+                    if not reply:
                         raise ConnectionError("escrow server closed")
-                    wait = float(line)
-                    break
-                except (OSError, ValueError, ConnectionError) as e:
-                    last_err = e
-                    self._reset()
-                    time.sleep(0.2 * (attempt + 1))
-            else:
-                raise ConnectionError(
-                    f"token escrow unreachable at {self._addr}: {last_err}"
-                )
-        if wait > 0:
-            time.sleep(wait)
+                    return float(reply)
+                except (OSError, ValueError) as e:
+                    err = e
+                    self._reset(line)
+                    if attempt + 1 < tries:
+                        time.sleep(0.2 * (attempt + 1))
+        raise ConnectionError(f"token escrow unreachable at {self._addr}: {err}")
+
+    def _reset(self, line: str) -> None:
+        for f in self._conns.pop(line, ()):
+            try:
+                f.close()
+            except OSError:
+                pass
 
     def close(self) -> None:
-        with self._lock:
-            self._reset()
+        for line, lock in self._locks.items():
+            with lock:
+                self._reset(line)
 
 
 @dataclass
@@ -359,15 +375,15 @@ Sink = Callable[[pd.DataFrame], None]
 
 class FlowController:
     """Dispatches sink calls for micro-batch chunks under a global
-    concurrency semaphore + rate limits, with bounded retry and a
-    dead-letter parquet table.
+    concurrency cap + rate limits, with bounded retry and a dead-letter
+    parquet table.
 
     Driver-side by design: the reference is a client-side batching
     library whose sinks are remote calls (RPC/HTTP bulk APIs); the
     global semaphore is the point. For executor-side fan-out use
     ``foreach_batch_sink(..., distributed=True)`` (processor.py), which
-    runs one controller per partition, all drawing their rates from
-    one shared escrow.
+    runs one controller per partition, all drawing their permits and
+    rates from one shared escrow.
     """
 
     def __init__(self, sink: Sink, config: FlowControlConfig, dlq_path: str | None = None):
@@ -381,28 +397,31 @@ class FlowController:
         if hasattr(sink, "open"):
             sink.open()
         self.stats = FlowStats()
-        self._sem = threading.Semaphore(config.concurrency)
         self._pool = ThreadPoolExecutor(max_workers=config.concurrency, thread_name_prefix="bp-flush")
-        # The rate gate, chosen once: gate(n_flushes, n_items) sleeps
-        # whatever the limiter says this flush owes. With an escrow
-        # address, ONE shared limiter for the whole query (reference
-        # semantics): a single round trip reserves the flush token and
-        # the item tokens together.
+        # The permit and rate source, chosen once: take(n_items) blocks
+        # for a permit and reserves the flush's rate tokens, returning
+        # the seconds the flush owes; give() returns the permit;
+        # reserve(n_flushes, n_items) re-reserves for a retry. With an
+        # escrow address, ONE escrow serves the whole query.
         self._escrow = None
-        if config.escrow_addr is not None and (config.tps > 0 or config.ips > 0):
+        if config.escrow_addr is not None:
             self._escrow = EscrowClient(config.escrow_addr, config.escrow_token)
-            self._gate = self._escrow.acquire
+            self._take, self._give, self._reserve = (
+                self._escrow.take, self._escrow.give, self._escrow.reserve
+            )
         else:
+            sem = threading.Semaphore(config.concurrency)
             tps = TokenBucket(config.tps)
             ips = TokenBucket(config.ips, burst=max(config.ips, config.batch_size * 2.0))
 
-            def gate(n_flushes: float, n_items: float) -> None:
-                wait = max(tps.reserve(n_flushes), ips.reserve(n_items))
-                # no sleep(0) per flush when unlimited or within burst
-                if wait > 0:
-                    time.sleep(wait)
+            def reserve(n_flushes: float, n_items: float) -> float:
+                return max(tps.reserve(n_flushes), ips.reserve(n_items))
 
-            self._gate = gate
+            def take(n_items: float) -> float:
+                sem.acquire()
+                return reserve(1.0, n_items)
+
+            self._take, self._give, self._reserve = take, sem.release, reserve
         self._dlq_lock = threading.Lock()
         self._dlq_seq = 0
 
@@ -410,25 +429,27 @@ class FlowController:
 
     def submit_batch(self, pdf: pd.DataFrame) -> list[Future]:
         """Split a micro-batch into ≤batch_size chunks and dispatch
-        each through the semaphore/rate gate (O5 count trigger +
-        O9 async dispatch)."""
+        each through the permit/rate gate (O5 count trigger + O9 async
+        dispatch)."""
         futures: list[Future] = []
         n = len(pdf)
         bs = self.config.batch_size
         for lo in range(0, n, bs):
             chunk = pdf.iloc[lo : lo + bs]
-            # Acquire the permit on the CALLER thread (backpressure on
-            # the micro-batch loop), release when the flush completes —
-            # same shape as V1/InnerEventHandler.java:78-95. The
-            # waiter count around the blocking acquire is the
+            # Take the permit on the CALLER thread (backpressure on
+            # the micro-batch loop), give it back when the flush
+            # completes — same shape as V1/InnerEventHandler.java:78-95.
+            # The waiter count around the blocking take is the
             # semaphore-queue gauge of the reference Stat tree.
             with self.stats._lock:
                 self.stats.sem_waiters += 1
-            self._sem.acquire()
-            with self.stats._lock:
-                self.stats.sem_waiters -= 1
-            fut = self._pool.submit(self._flush_with_retry, chunk)
-            fut.add_done_callback(lambda _f: self._sem.release())
+            try:
+                wait = self._take(float(len(chunk)))
+            finally:
+                with self.stats._lock:
+                    self.stats.sem_waiters -= 1
+            fut = self._pool.submit(self._flush_with_retry, chunk, wait)
+            fut.add_done_callback(lambda _f: self._give())
             futures.append(fut)
         return futures
 
@@ -439,7 +460,7 @@ class FlowController:
 
     # -- flush path ---------------------------------------------------
 
-    def _flush_with_retry(self, chunk: pd.DataFrame) -> None:
+    def _flush_with_retry(self, chunk: pd.DataFrame, wait: float) -> None:
         me = threading.current_thread().name
         with self.stats._lock:
             self.stats.in_flight += 1
@@ -447,7 +468,7 @@ class FlowController:
             w["busy"] = True
             w["current_items"] = len(chunk)
         try:
-            self._flush_with_retry0(chunk, me)
+            self._flush_with_retry0(chunk, me, wait)
         finally:
             with self.stats._lock:
                 self.stats.in_flight -= 1
@@ -455,10 +476,12 @@ class FlowController:
                 w["busy"] = False
                 w["current_items"] = 0
 
-    def _flush_with_retry0(self, chunk: pd.DataFrame, me: str) -> None:
+    def _flush_with_retry0(self, chunk: pd.DataFrame, me: str, wait: float) -> None:
         attempts = 0
         while True:
-            self._gate(1.0, float(len(chunk)))
+            # no sleep(0) per flush when unlimited or within burst
+            if wait > 0:
+                time.sleep(wait)
             try:
                 self.sink(chunk)
             except Exception:
@@ -471,6 +494,7 @@ class FlowController:
                         self.stats.retries += 1
                         self.stats.worker(me)["retries"] += 1
                     time.sleep(self.config.retry_delay_s * (2 ** (attempts - 1)))
+                    wait = self._reserve(1.0, float(len(chunk)))
                     continue
                 self._to_dlq(chunk, me)
                 return
@@ -505,8 +529,8 @@ class FlowController:
     def shutdown(self) -> None:
         self._pool.shutdown(wait=True)
         if self._escrow is not None:
-            # drop the TCP connection promptly — per-epoch controllers
-            # otherwise leave a socket + a driver-side handler thread
+            # drop the TCP connections promptly — per-epoch controllers
+            # otherwise leave sockets + driver-side handler threads
             # alive until GC
             self._escrow.close()
         if hasattr(self.sink, "close"):

@@ -30,15 +30,15 @@ file source deletes each spool once its batch commits.
 Scale posture: the facade is driver-side because the reference is a
 client-side batching library (its sinks are remote bulk APIs and the
 GLOBAL concurrency cap is the contract). For executor-side sinks at
-cluster scale use ``foreach_batch_sink(..., distributed=True)``,
-which runs the flow-control policy per partition via
-``foreachPartition``: each partition gets a row share of the
-concurrency cap, and every partition draws its rates from one
+cluster scale use ``foreach_batch_sink(..., distributed=True)``: each
+partition gets its rows as Arrow batches through ``mapInArrow`` and
+runs the flow-control policy, drawing its permits and rates from one
 driver-side token escrow.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import threading
@@ -230,6 +230,7 @@ class BatchProcessor:
         # start-blocks-until-workers-ready semantics
         # (V1/DisruptorBatchProcessor.java:229-257).
         poll_ms = max(1, int(self.config.flush_interval_s * 1000 / 4))
+        restart = os.path.isdir(os.path.join(self.ckpt_dir, "commits"))
         stream_confs = {
             _POLLING_DELAY: f"{poll_ms}ms",
             _CHECKPOINT_FILE_MANAGER: _FS_CHECKPOINT_FILE_MANAGER,
@@ -248,9 +249,36 @@ class BatchProcessor:
                         self.spark.conf.unset(k)
                     else:
                         self.spark.conf.set(k, v)
+        if restart:
+            self._delete_folded_spools()
         self._timer = threading.Thread(target=self._interval_spooler, daemon=True)
         self._timer.start()
         return self
+
+    def _delete_folded_spools(self) -> None:
+        """Delete the spools of source-log batches below the last
+        committed micro-batch's end. A commit makes the file source
+        delete only the files of the batch it ends at, so a batch logged
+        before the driver died, which the restart (the pre-warm) folds
+        into a larger micro-batch, would stay in the ingest dir."""
+        commits = os.listdir(os.path.join(self.ckpt_dir, "commits"))
+        last = max(int(n) for n in commits if n.isdigit())
+        with open(os.path.join(self.ckpt_dir, "offsets", str(last))) as f:
+            end = json.loads(f.read().splitlines()[-1])["logOffset"]
+        log_dir = os.path.join(self.ckpt_dir, "sources", "0")
+        ingest = os.path.abspath(self.ingest_dir)
+        for name in os.listdir(log_dir):
+            if not name.split(".")[0].isdigit():
+                continue  # checksum and temp files
+            with open(os.path.join(log_dir, name)) as f:
+                lines = f.read().splitlines()[1:]
+            for entry in map(json.loads, lines):
+                path = url2pathname(urlparse(entry["path"]).path)
+                if entry["batchId"] < end and os.path.dirname(path) == ingest:
+                    try:
+                        os.remove(path)
+                    except FileNotFoundError:
+                        pass
 
     def _interval_spooler(self) -> None:
         """O6: force-flush aged partial buffers (the v2 scheduler
@@ -389,7 +417,8 @@ class BatchProcessor:
         if table.num_rows:
             # The batch's session: the one df.toPandas() would read.
             conf = execution.sparkSession().sessionState().conf()
-            pdf = self._to_pandas(table, conf)
+            tz, structs = conf.sessionLocalTimeZone(), conf.pandasStructHandlingMode()
+            pdf = _arrow_to_pandas(table, self.schema, tz, structs)
             self._controller.wait(self._controller.submit_batch(pdf))
 
     def _batch_scan(self, epoch_id: int):
@@ -427,32 +456,6 @@ class BatchProcessor:
                 raise RuntimeError(f"spool {uri!r} is not on the local filesystem")
             paths.append(url2pathname(parsed.path))
         return paths
-
-    def _to_pandas(self, table: pa.Table, conf) -> pd.DataFrame:
-        """``table`` as the frame ``DataFrame.toPandas()`` returns on its
-        Arrow path (pyspark/sql/pandas/conversion.py): the same
-        ``to_pandas`` options, then the per-field converter with the
-        time zone and struct-handling mode of ``conf`` (a JVM SQLConf)."""
-        timezone = conf.sessionLocalTimeZone()
-        struct_in_pandas = conf.pandasStructHandlingMode()
-        legacy = struct_in_pandas == "legacy"
-        pdf = table.rename_columns(
-            [f"col_{i}" for i in range(table.num_columns)]
-        ).to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
-        pdf.columns = self.schema.names
-        return pd.concat(
-            [
-                _create_converter_to_pandas(
-                    field.dataType,
-                    field.nullable,
-                    timezone=timezone,
-                    struct_in_pandas="dict" if legacy else struct_in_pandas,
-                    error_on_duplicated_field_names=legacy,
-                )(pser)
-                for (_, pser), field in zip(pdf.items(), self.schema.fields)
-            ],
-            axis="columns",
-        )
 
     # ------------------------------------------------------------ flush
 
@@ -525,6 +528,33 @@ class BatchProcessor:
         return self.spark.read.parquet(self.dlq_dir)
 
 
+def _arrow_to_pandas(
+    table: pa.Table, schema: T.StructType, timezone: str, struct_in_pandas: str
+) -> pd.DataFrame:
+    """``table`` as the frame ``DataFrame.toPandas()`` returns on its
+    Arrow path (pyspark/sql/pandas/conversion.py): the same
+    ``to_pandas`` options, then the per-field converter with the
+    session's time zone and struct-handling mode."""
+    legacy = struct_in_pandas == "legacy"
+    pdf = table.rename_columns(
+        [f"col_{i}" for i in range(table.num_columns)]
+    ).to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
+    pdf.columns = schema.names
+    return pd.concat(
+        [
+            _create_converter_to_pandas(
+                field.dataType,
+                field.nullable,
+                timezone=timezone,
+                struct_in_pandas="dict" if legacy else struct_in_pandas,
+                error_on_duplicated_field_names=legacy,
+            )(pser)
+            for (_, pser), field in zip(pdf.items(), schema.fields)
+        ],
+        axis="columns",
+    )
+
+
 def foreach_batch_sink(
     sink: Sink,
     config: FlowControlConfig | None = None,
@@ -539,29 +569,19 @@ def foreach_batch_sink(
     bulk-API sinks).
     distributed=True: flow control runs inside each partition on the
     executors — the shape that scales to 1000 executors; pair with
-    ``df.repartition(n)`` to set fan-out. The GLOBAL rate is
-    preserved (the reference's limits are process-global,
-    V1/MixedLimiter.java:16-43 — a naive per-partition copy would
-    multiply "tps=100" into partitions×100): ONE driver-side
-    TokenEscrowServer holds the tps/ips buckets for the whole query,
-    and every partition's flush reserves from it over a tiny
-    line-oriented TCP exchange (executors already reach the driver
-    host). This is the reference's single shared MixedLimiter made
-    distributed: work-conserving with NO shares and NO epochs — a
-    partition whose sink is slow per row just reserves less, and its
-    idle budget flows to whichever partition asks next, mid-epoch.
-    The burst is granted ONCE per query (1 flush / batch_size items),
-    so across epochs: delivered ≤ rate·elapsed + that one-time burst.
-    Executors that cannot reach the escrow fail the flush with a
-    ConnectionError (fail closed) rather than exceed the rate.
-
-    Concurrency divides by ROW SHARE (one counting pass over the
-    persisted batch RDD) but floors at 1 per nonempty partition; when
-    nonempty partitions exceed the configured cap the true aggregate
-    in-flight bound is that count. Empty partitions get no
-    controller. The per-epoch division and the aggregate bounds are
-    surfaced on the returned handle as ``handle.last_budget`` (the
-    distributed analogue of the driver controller's stat()).
+    ``df.repartition(n)`` to set fan-out. Each epoch is one
+    ``mapInArrow`` action that hands each partition's rows, converted
+    as ``toPandas()`` would, to a controller in that partition. The
+    caps stay GLOBAL (the reference's semaphore and limiter are
+    process-global, V1/MixedLimiter.java:16-43): ONE driver-side
+    TokenEscrowServer holds the ``concurrency`` permits and the
+    tps/ips buckets for the whole query, and idle permits and budget
+    go to whichever partition asks next. The rate burst is granted
+    ONCE per query (1 flush / batch_size items), so across epochs
+    delivered ≤ rate·elapsed + that burst. Executors that cannot
+    reach the escrow fail with a ConnectionError (fail closed). Each
+    epoch's rows per partition and the aggregate bounds are surfaced
+    on the returned handle as ``handle.last_budget``.
     """
     cfg = config or FlowControlConfig()
 
@@ -580,11 +600,9 @@ def foreach_batch_sink(
         handle.controller = controller  # expose stats to callers
         return handle
 
-    # One reservation RPC per flush: the steady-state request rate is
-    # capped by whichever configured rate binds first. Past half the
-    # MEASURED single-server ceiling (scripts/escrow_bench.py, SCALE.md)
-    # the escrow stops being a negligible ~100 µs detour and becomes a
-    # queue — warn rather than silently degrade every flush.
+    # The flush rate is capped by whichever configured rate binds
+    # first; past half the MEASURED escrow ceiling the escrow becomes
+    # a queue — warn rather than silently degrade every flush.
     implied = [r for r in (
         cfg.tps if cfg.tps > 0 else None,
         cfg.ips / cfg.batch_size if cfg.ips > 0 else None,
@@ -606,94 +624,51 @@ def foreach_batch_sink(
     def handle_distributed(df: DataFrame, epoch_id: int) -> None:
         import dataclasses
 
-        from pyspark import StorageLevel
+        escrow_addr, escrow_token = _ensure_escrow(
+            handle_distributed, cfg, df.sparkSession
+        )
+        part_cfg = dataclasses.replace(
+            cfg, escrow_addr=escrow_addr, escrow_token=escrow_token
+        )
+        schema, jconf = df.schema, df.sparkSession._jconf  # as toPandas() reads it
+        tz, structs = jconf.sessionLocalTimeZone(), jconf.pandasStructHandlingMode()
 
-        # One counting pass over the persisted micro-batch RDD gives
-        # each partition's row count, which sizes its share of the
-        # concurrency cap. It is one scan of a batch the dispatch pass
-        # scans anyway; persist makes it one materialization.
-        rdd = df.rdd
-        rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            counts = dict(
-                rdd.mapPartitionsWithIndex(
-                    lambda i, it: [(i, sum(1 for _ in it))]
-                ).collect()
-            )
-            total = sum(counts.values())
-            nparts = max(1, len(counts))
-            nonempty = {i: c for i, c in counts.items() if c}
-            escrow_addr, escrow_token = None, ""
-            if cfg.tps > 0 or cfg.ips > 0:
-                escrow_addr, escrow_token = _ensure_escrow(
-                    handle_distributed, cfg, df.sparkSession
-                )
+        def per_partition(batches):
+            from pyspark import TaskContext
 
-            def share(w: float) -> FlowControlConfig:
-                """Partition config for row share w: its slice of the
-                concurrency cap; the rates come from the shared escrow
-                (unlimited when no rate is set)."""
-                return dataclasses.replace(
-                    cfg,
-                    concurrency=max(1, int(cfg.concurrency * w)),
-                    escrow_addr=escrow_addr,
-                    escrow_token=escrow_token,
-                )
-
-            budgets = {i: share(c / total) for i, c in nonempty.items()}
-            handle_distributed.last_budget = {
-                "epoch_id": epoch_id,
-                "escrow_addr": escrow_addr,
-                "num_partitions": nparts,
-                "nonempty_partitions": len(nonempty),
-                "rows_total": total,
-                "rows_by_partition": dict(sorted(nonempty.items())),
-                "concurrency_by_partition": {
-                    i: b.concurrency for i, b in sorted(budgets.items())
-                },
-                # Aggregate SUSTAINED-rate bounds: ONE persistent escrow
-                # bucket pair for the query, whose burst is granted once.
-                "aggregate_tps_bound": cfg.tps,
-                "aggregate_ips_bound": cfg.ips,
-                # Concurrency can exceed the global cap by the
-                # per-partition floor of 1 when the nonempty
-                # partition count exceeds cap.
-                "aggregate_concurrency_bound": sum(
-                    b.concurrency for b in budgets.values()
-                ),
-            }
-
-            def per_partition(rows):
-                import pandas as pd  # executor-side import
-                from pyspark import TaskContext
-
-                pdf = pd.DataFrame([r.asDict() for r in rows])
-                if len(pdf) == 0:
-                    return
-                tc = TaskContext.get()
-                pid = tc.partitionId() if tc else 0
-                # A partition the count called empty still gets its rows
-                # delivered, but on a 1/nparts concurrency share, never
-                # the UNDIVIDED cap: if the count and dispatch passes
-                # ever disagreed, a full grant per surprise partition
-                # could exceed the aggregate cap by up to the whole cap.
-                pp_cfg = budgets.get(pid) or share(1 / nparts)
-                # Retry→DLQ must survive distribution: each
-                # partition's controller appends under its own
-                # epoch/partition subpath (unique dirs, no cross-task
-                # clobbering; works on any shared filesystem pandas
-                # can write parquet to). With no dlq_path the
-                # reference's log-and-drop semantics apply.
+            pid = TaskContext.get().partitionId()
+            batches = list(batches)
+            rows = sum(b.num_rows for b in batches)
+            if rows:
+                # Each partition dead-letters under its own
+                # epoch/partition subpath (no cross-task clobbering);
+                # with no dlq_path, the reference's log-and-drop.
                 part_dlq = None
                 if dlq_path is not None:
                     part_dlq = f"{dlq_path}/epoch={epoch_id}/partition={pid}"
-                ctrl = FlowController(sink, pp_cfg, dlq_path=part_dlq)
-                ctrl.wait(ctrl.submit_batch(pdf))
-                ctrl.shutdown()
+                pdf = _arrow_to_pandas(pa.Table.from_batches(batches), schema, tz, structs)
+                ctrl = FlowController(sink, part_cfg, dlq_path=part_dlq)
+                try:
+                    ctrl.wait(ctrl.submit_batch(pdf))
+                finally:
+                    ctrl.shutdown()
+            yield pa.record_batch(
+                [pa.array([pid], pa.int32()), pa.array([rows], pa.int64())],
+                names=["partition", "rows"],
+            )
 
-            rdd.foreachPartition(per_partition)
-        finally:
-            rdd.unpersist()
+        out = df.mapInArrow(per_partition, "partition INT, rows BIGINT").collect()
+        handle_distributed.last_budget = {
+            "epoch_id": epoch_id,
+            "escrow_addr": escrow_addr,
+            "num_partitions": len(out),
+            "rows_by_partition": {r.partition: r.rows for r in sorted(out) if r.rows},
+            # Aggregate bounds: ONE persistent escrow for the query,
+            # whose rate burst is granted once.
+            "aggregate_tps_bound": cfg.tps,
+            "aggregate_ips_bound": cfg.ips,
+            "aggregate_concurrency_bound": cfg.concurrency,
+        }
 
     handle_distributed.last_budget = None  # set per epoch
     handle_distributed.escrow_server = None  # started on first epoch
@@ -721,12 +696,11 @@ def _ensure_escrow(
     that interface (wildcard only as fallback); the per-query token
     authenticates every request.
 
-    Lifetime: ``handle.close()`` is the contract for releasing the
-    server (socket + accept thread) — call it when the streaming
-    query stops. As a backstop, a weakref finalizer closes the server
-    when the handle itself is garbage-collected, so a dropped handle
-    does not leak the listener for the process lifetime. The rates are frozen from the config at first use; to
-    re-rate a query, close() the handle and build a new sink."""
+    Lifetime: ``handle.close()`` releases the server — call it when
+    the streaming query stops; a weakref finalizer closes it when the
+    handle is garbage-collected. The rates and the permit count are
+    frozen from the config at first use; to change them, close() the
+    handle and build a new sink."""
     if handle.escrow_addr is not None:
         return handle.escrow_addr, handle.escrow_server.token
     import weakref
@@ -743,6 +717,7 @@ def _ensure_escrow(
         tps_burst=1.0,
         ips_burst=float(cfg.batch_size),
         bind_host=host,
+        concurrency=cfg.concurrency,
     )
     handle.escrow_server = server
     handle.escrow_addr = (host or "127.0.0.1", server.port)

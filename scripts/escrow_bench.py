@@ -1,29 +1,24 @@
-"""Measure the TokenEscrowServer reservation ceiling (VERDICT r11 #2).
+"""Measure the TokenEscrowServer ceiling in flushes per second.
 
-The escrow is a single accept-loop thread plus one lock; its capacity
-ceiling was previously ASSERTED in STATUS.md ("fine to ~10k
-flushes/sec") without an artifact. This bench measures it: N client
-PROCESSES (the same topology as N executor partitions mid-epoch —
-separate processes, so the client-side GIL doesn't pollute the
-server-capacity number), each with its own persistent EscrowClient
-connection, hammer reserve(1 flush, batch items) over loopback for a
-fixed window. The rate is set astronomically high so no granted sleep
-is owed — the measurement isolates RPC + lock cost, which is the
-ceiling; the token math runs either way.
+The escrow is one accept loop plus one thread and one lock per
+connection. This bench measures its capacity: N client PROCESSES (the
+same topology as N executor partitions mid-epoch — separate processes,
+so the client-side GIL doesn't pollute the server-capacity number),
+each with its own EscrowClient, drive the two round trips a flush
+makes, take(batch items) then give(), over loopback for a fixed
+window. The rates are set astronomically high and the permits equal
+the client count, so no sleep is owed and no take waits for a permit:
+the measurement isolates RPC + lock cost, which is the ceiling; the
+token math runs either way.
 
 Usage:
     python -m scripts.escrow_bench [--procs 4 8 16] [--seconds 4]
 
-Output: one JSON line per process count. Measured on this host
-(r12, local 32-core): ~14k req/s at 4 client processes, sustaining
-~7k req/s at 8-16 (per-connection server threads contend on the GIL;
-p50 latency grows with client count while throughput plateaus — a
-queueing slope, not a collapse). SCALE.md records the numbers;
-batchprocessor_spark.streaming.flow pins the sustained figure as
-ESCROW_CEILING_FLUSHES_PER_SEC, and foreach_batch_sink warns when a
-configured rate implies a request rate past half of it (the safe
-region), pointing at a larger batch_size (fewer flushes, so fewer
-reservations).
+Output: one JSON line per process count. SCALE.md records the numbers
+and the host; batchprocessor_spark.streaming.flow pins the sustained
+figure as ESCROW_CEILING_FLUSHES_PER_SEC, and foreach_batch_sink warns
+when a configured rate implies a flush rate past half of it (the safe
+region), pointing at a larger batch_size (fewer flushes).
 """
 
 from __future__ import annotations
@@ -47,7 +42,8 @@ def _worker(port: int, token: str, seconds: float, q) -> None:
     t_end = time.monotonic() + seconds
     while time.monotonic() < t_end:
         t0 = time.perf_counter()
-        client.acquire(1.0, 1024.0)
+        client.take(1024.0)
+        client.give()
         lats.append(time.perf_counter() - t0)
         n += 1
     client.close()
@@ -72,7 +68,7 @@ def main() -> int:
     for nproc in args.procs:
         server = TokenEscrowServer(
             tps=1e12, ips=1e12, tps_burst=1e12, ips_burst=1e12,
-            bind_host="127.0.0.1",
+            bind_host="127.0.0.1", concurrency=nproc,
         )
         q: mp.Queue = mp.Queue()
         ps = [
@@ -92,12 +88,12 @@ def main() -> int:
         print(
             json.dumps(
                 {
-                    "metric": "escrow_reservations_per_sec",
+                    "metric": "escrow_flushes_per_sec",
                     "value": round(total / args.seconds, 1),
-                    "unit": "req/sec",
+                    "unit": "flushes/sec",
                     "client_processes": nproc,
                     "seconds": args.seconds,
-                    "total_reservations": total,
+                    "total_flushes": total,
                     "latency_p50_us_mean": round(
                         1e6 * sum(r[1] for r in res) / nproc, 1
                     ),

@@ -263,7 +263,7 @@ def check_rocksdb_stateful_stream(spark, sf_dir: str) -> str:
 
 
 def check_escrow_budget(spark, tmp: str) -> str:
-    """The escrow (the one distributed rate budget): every executor
+    """The escrow (the one distributed budget): every executor
     partition reserves from ONE driver-side bucket over TCP.
     On local-cluster the clients dial from REAL separate JVM worker
     processes — the deployment question (can executors reach the
@@ -342,6 +342,67 @@ def check_escrow_budget(spark, tmp: str) -> str:
     b = handle.last_budget
     if b is None or b.get("escrow_addr") is None:
         return f"fail: last_budget {b}"
+    if b["aggregate_concurrency_bound"] != cfg.concurrency:
+        return f"fail: concurrency bound {b['aggregate_concurrency_bound']}"
+    return "pass"
+
+
+def check_escrow_permits(spark, tmp: str) -> str:
+    """The escrow's permits are the one concurrency cap across REAL
+    executor processes: 6 partitions of 10 one-row flushes into a
+    50 ms sink, spread over both executor JVMs, never have more than
+    ``concurrency`` sink calls in flight together."""
+    import glob as _glob
+
+    import pandas as pd
+
+    from batchprocessor_spark.streaming.flow import FlowControlConfig
+    from batchprocessor_spark.streaming.processor import foreach_batch_sink
+
+    src = os.path.join(tmp, "ep_src")
+    marks = os.path.join(tmp, "ep_marks")
+    os.makedirs(src)
+    os.makedirs(marks)
+    pd.DataFrame({"id": range(60)}).to_parquet(
+        os.path.join(src, "input.parquet"), index=False
+    )
+
+    def sink(chunk: pd.DataFrame) -> None:
+        import time as _t
+        import uuid
+
+        t0 = _t.time()
+        _t.sleep(0.05)
+        with open(os.path.join(marks, uuid.uuid4().hex), "w") as fh:
+            fh.write(f"{t0} {_t.time()}")
+
+    cfg = FlowControlConfig(batch_size=1, concurrency=3)
+    handle = foreach_batch_sink(sink, cfg, distributed=True)
+    q = (
+        spark.readStream.schema("id BIGINT")
+        .parquet(src)
+        .repartition(6)
+        .writeStream.foreachBatch(handle)
+        .option("checkpointLocation", os.path.join(tmp, "ep_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    handle.close()
+
+    events = []
+    for f in _glob.glob(os.path.join(marks, "*")):
+        with open(f) as fh:
+            start, end = map(float, fh.read().split())
+        events += [(start, 1), (end, -1)]
+    if len(events) != 2 * 60:
+        return f"fail: {len(events) // 2}/60 flushes delivered"
+    in_flight = peak = 0
+    for _, step in sorted(events):
+        in_flight += step
+        peak = max(peak, in_flight)
+    if peak > cfg.concurrency:
+        return f"fail: {peak} sink calls in flight, cap {cfg.concurrency}"
     return "pass"
 
 
@@ -532,6 +593,7 @@ def main() -> int:
                 results[f"parity:{k}"] = v
             run("distributed_flow_dlq", check_distributed_dlq, spark, tmp)
             run("escrow_budget", check_escrow_budget, spark, tmp)
+            run("escrow_permits", check_escrow_permits, spark, tmp)
             run(
                 "rocksdb_stateful_stream",
                 check_rocksdb_stateful_stream,

@@ -1,5 +1,6 @@
 """Flow control without a Spark session: the token bucket, the local
-rate gate, the escrow server/client pair and the escrow lifecycle of
+rate gate, the escrow server/client pair (its rate buckets and its
+permits) and the escrow lifecycle of
 ``foreach_batch_sink(distributed=True)``. Fast lane; the Spark-driven
 distributed tests are in test_distributed_flow.py."""
 
@@ -36,7 +37,7 @@ def test_flush_larger_than_ips_burst_completes():
     the whole chunk to fit under its burst never delivers the first
     flush, and shutdown() then blocks on the stuck flush thread. The
     escrow is the one limiter whose burst can be set below a flush."""
-    srv = TokenEscrowServer(tps=0.0, ips=1000.0, ips_burst=10.0)
+    srv = TokenEscrowServer(tps=0.0, ips=1000.0, ips_burst=10.0, concurrency=4)
     done = []
     try:
         ctrl = FlowController(
@@ -82,15 +83,15 @@ def test_token_escrow_reserve_semantics():
 
         rogue = EscrowClient(("127.0.0.1", srv.port), token="wrong")
         with _pytest.raises(ConnectionError):
-            rogue.acquire(1, 1)
+            rogue.reserve(1, 1)
         assert srv.reservations == 0
 
         a = EscrowClient(("127.0.0.1", srv.port), srv.token)
         b = EscrowClient(("127.0.0.1", srv.port), srv.token)
         t0 = time.perf_counter()
-        a.acquire(1, 10)   # burst covers it — free
-        a.acquire(1, 50)
-        b.acquire(1, 50)   # second CLIENT pays for a's reservation too
+        time.sleep(a.reserve(1, 10))   # burst covers it — free
+        time.sleep(a.reserve(1, 50))
+        time.sleep(b.reserve(1, 50))   # second CLIENT pays for a's reservation too
         dt = time.perf_counter() - t0
         # 110 items, 10 free, 100/s -> >= ~1.0 s even split across
         # two clients; the self-paid deficit makes it <= ~2 s.
@@ -98,6 +99,108 @@ def test_token_escrow_reserve_semantics():
         assert dt <= 3.0, dt
         assert srv.reservations == 3
     finally:
+        srv.close()
+
+
+def test_escrow_take_blocks_at_cap_until_give():
+    """The escrow's permits are the one concurrency cap. With every
+    permit taken, a take blocks at the server; a give on the holder's
+    give line (never queued behind the blocked take) lets it through."""
+    import threading
+
+    from batchprocessor_spark.streaming.flow import EscrowClient
+
+    srv = TokenEscrowServer(tps=0.0, ips=0.0, concurrency=2)
+    try:
+        a = EscrowClient(("127.0.0.1", srv.port), srv.token)
+        assert a.take(1) == 0.0 and a.take(1) == 0.0
+        third = threading.Event()
+        threading.Thread(
+            target=lambda: (a.take(1), third.set()), daemon=True
+        ).start()
+        assert not third.wait(0.5), "a take passed the cap"
+        threading.Thread(target=a.give, daemon=True).start()
+        assert third.wait(5.0), "the give did not free a permit"
+        a.give()
+        a.give()
+        a.close()
+    finally:
+        srv.close()
+
+
+def test_escrow_frees_permits_of_closed_client():
+    """A client that closes without giving its permits back (a killed
+    task, a lost executor) does not strand the cap: the server frees
+    them when the client's take connection closes."""
+    import threading
+
+    from batchprocessor_spark.streaming.flow import EscrowClient
+
+    srv = TokenEscrowServer(tps=0.0, ips=0.0, concurrency=2)
+    try:
+        lost = EscrowClient(("127.0.0.1", srv.port), srv.token)
+        lost.take(1)
+        lost.take(1)
+        other = EscrowClient(("127.0.0.1", srv.port), srv.token)
+        both = threading.Event()
+        threading.Thread(
+            target=lambda: (other.take(1), other.take(1), both.set()),
+            daemon=True,
+        ).start()
+        assert not both.wait(0.5), "a take passed the cap"
+        lost.close()
+        assert both.wait(5.0), "the closed client's permits stayed taken"
+        other.close()
+    finally:
+        srv.close()
+
+
+def test_escrow_permits_hold_under_concurrent_clients():
+    """Stress: 16 clients (more than cores) take and give 4 permits
+    200 times in all, with a short thread switch interval. No more
+    than 4 are ever held at once, and all 4 are free afterwards."""
+    import sys
+    import threading
+
+    from batchprocessor_spark.streaming.flow import EscrowClient
+
+    srv = TokenEscrowServer(tps=0.0, ips=0.0, concurrency=4)
+    lock = threading.Lock()
+    held = {"now": 0, "peak": 0}
+
+    def worker():
+        c = EscrowClient(("127.0.0.1", srv.port), srv.token)
+        for _ in range(200 // 16 + 1):
+            c.take(1)
+            with lock:
+                held["now"] += 1
+                held["peak"] = max(held["peak"], held["now"])
+            time.sleep(0.001)
+            with lock:
+                held["now"] -= 1
+            c.give()
+        c.close()
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, daemon=True) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30.0)
+        assert not any(t.is_alive() for t in threads), "a client hung"
+        assert 1 <= held["peak"] <= 4, held
+        last = EscrowClient(("127.0.0.1", srv.port), srv.token)
+        done = threading.Event()
+        threading.Thread(
+            target=lambda: ([last.take(1) for _ in range(4)], done.set()),
+            daemon=True,
+        ).start()
+        assert done.wait(5.0), "permits were lost"
+        last.close()
+    finally:
+        sys.setswitchinterval(interval)
         srv.close()
 
 
@@ -125,7 +228,7 @@ def test_escrow_reply_cache_bounded_across_epochs():
                 for _ in range(partitions)
             ]
             for c in clients:
-                c.acquire(1.0, 50.0)
+                c.reserve(1.0, 50.0)
             for c in clients:
                 c.close()
             assert len(srv._replies) <= 32
@@ -148,7 +251,7 @@ def test_escrow_replay_with_bounded_cache():
     try:
         conn = socket.create_connection(("127.0.0.1", srv.port))
         rf = conn.makefile("rwb")
-        msg = f"{srv.token} clientA 1 1.0 30.0\n".encode()
+        msg = f"{srv.token} reserve clientA 1 1.0 30.0\n".encode()
         rf.write(msg)
         rf.flush()
         first = float(rf.readline())

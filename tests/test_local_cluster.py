@@ -10,9 +10,10 @@ What one big JVM can never prove, this lane does:
   stay oracle-exact under them across process boundaries;
 - cloudpickled executor-side sinks (distributed flow control) cross
   a real process boundary with chunk-granular DLQ, zero loss;
-- the driver-side token escrow (the one distributed rate budget) is
+- the driver-side token escrow (the one distributed budget) is
   dialed from real separate worker processes — the deployment
-  question for a cluster-global rate limiter;
+  question for a cluster-global rate limiter — and its permits hold
+  the in-flight cap across them;
 - RocksDB-backed stateful streaming (JNI inside each executor
   process) stays oracle-exact;
 - headline plans (broadcast star, window frame, graph rounds, the
@@ -78,5 +79,6 @@ def test_local_cluster_probe_all_green(tmp_path):
         "snm_block_ids_deterministic",
         "distributed_flow_dlq",
         "escrow_budget",
+        "escrow_permits",
     } <= names
     assert sum(k.startswith("parity:") for k in names) >= 6

@@ -286,7 +286,8 @@ def test_source_log_ahead_of_offset_log(spark, tmp_path):
     before the offset log does leaves an orphan source-log batch. On
     restart the next micro-batch covers both that batch and the new
     one, so micro-batch ids and source-log batch ids part ways from
-    then on; every spool is still delivered once."""
+    then on; every spool is still delivered once, and the orphan's
+    spool does not outlive its delivery."""
     import json
     import os
 
@@ -320,6 +321,10 @@ def test_source_log_ahead_of_offset_log(spark, tmp_path):
         p2.put_many([(300 + wave * 100 + i, "b") for i in range(100)])
         p2.flush(wait=True)
     p2.stop()
+    orphan_left = os.path.exists(orphan)
     p2.close()
     assert sorted(sink1.ids) == list(range(100))
     assert sorted(sink2.ids) == list(range(100, 600))
+    # The orphan batch was delivered inside a larger micro-batch, whose
+    # commit the file source cleans only for the batch it ends at.
+    assert not orphan_left
