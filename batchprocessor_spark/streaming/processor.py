@@ -27,6 +27,19 @@ takes the spool paths from the planned file scan, reads them with
 pyarrow and converts them as ``DataFrame.toPandas()`` would, and the
 file source deletes each spool once its batch commits.
 
+Garbage collection (process-wide, like the collector itself): while
+any BatchProcessor runs, the objects that existed when the first one
+started are frozen out of the cyclic collector. The first ``start()``
+of a process whose heap is not already frozen runs one ``gc.collect()``
+and then ``gc.freeze()``; the last ``stop()`` calls ``gc.unfreeze()``.
+A full collection then scans only what the pipeline allocated, not the
+session's import-time heap (pyspark, pandas and pyarrow modules), so
+it no longer stops the producer, the micro-batch handler and the flush
+pool for tens of milliseconds at a time. Frozen objects are still freed
+by reference counting; only reference cycles among them wait for the
+last ``stop()``. A process that froze its own heap before the first
+``start()`` keeps that freeze: processors neither add to it nor undo it.
+
 Scale posture: the facade is driver-side because the reference is a
 client-side batching library (its sinks are remote bulk APIs and the
 GLOBAL concurrency cap is the contract). For executor-side sinks at
@@ -38,6 +51,7 @@ driver-side token escrow.
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import shutil
@@ -74,6 +88,10 @@ _FS_CHECKPOINT_FILE_MANAGER = (
     "FileSystemBasedCheckpointFileManager"
 )
 _START_LOCK = threading.Lock()
+# The garbage collector is process-wide, so the count of running
+# processors that keeps the heap frozen is too (guarded by _START_LOCK).
+_running = 0
+_froze_heap = False
 
 
 class State(Enum):
@@ -149,6 +167,14 @@ class BatchProcessor:
         self._spool_seq = 0
         self._accepted = 0
         self._query = None
+        self._counted = False  # holds one count in _running
+        # JVM handles resolved on the stream's first batch, fixed for the
+        # life of the query: its StreamExecution, the ArraySeq class, and
+        # the time zone and struct mode of the batch session (the
+        # stream's clone of this session).
+        self._jquery = None
+        self._array_seq = None
+        self._pandas_conf: tuple[str, str] | None = None
         self._timer: threading.Thread | None = None
         self._timer_stop = threading.Event()
         self._controller = FlowController(
@@ -164,6 +190,10 @@ class BatchProcessor:
             dlq_path=self.dlq_dir,
         )
         self._arrow_schema = to_arrow_schema(self.schema)
+        # A spool's rows as one struct array. Its fields are all nullable,
+        # so converting a NULL never fails; the spool's schema keeps the
+        # declared nullability.
+        self._row_type = pa.struct([f.with_nullable(True) for f in self._arrow_schema])
 
     # ------------------------------------------------------------ state
 
@@ -253,7 +283,34 @@ class BatchProcessor:
             self._delete_folded_spools()
         self._timer = threading.Thread(target=self._interval_spooler, daemon=True)
         self._timer.start()
+        self._hold_gc_freeze()
         return self
+
+    def _hold_gc_freeze(self) -> None:
+        """Count this processor as running; the first one freezes the
+        heap (after one collection, so no garbage stays pinned) unless
+        the process froze it already."""
+        global _running, _froze_heap
+        with _START_LOCK:
+            _running += 1
+            self._counted = True
+            if _running == 1 and gc.get_freeze_count() == 0:
+                gc.collect()
+                gc.freeze()
+                _froze_heap = True
+
+    def _release_gc_freeze(self) -> None:
+        """Uncount this processor; the last one unfreezes the heap if a
+        processor froze it."""
+        global _running, _froze_heap
+        with _START_LOCK:
+            if not self._counted:
+                return
+            self._counted = False
+            _running -= 1
+            if _running == 0 and _froze_heap:
+                gc.unfreeze()
+                _froze_heap = False
 
     def _delete_folded_spools(self) -> None:
         """Delete the spools of source-log batches below the last
@@ -388,11 +445,8 @@ class BatchProcessor:
         self._write_spool([], seq)
 
     def _write_spool(self, batch: list[tuple], seq: int) -> None:
-        cols = list(zip(*batch)) if batch else [[] for _ in self.schema.fields]
-        table = pa.Table.from_arrays(
-            [pa.array(list(c), type=f.type) for c, f in zip(cols, self._arrow_schema)],
-            schema=self._arrow_schema,
-        )
+        rows = pa.RecordBatch.from_struct_array(pa.array(batch, type=self._row_type))
+        table = pa.Table.from_arrays(rows.columns, schema=self._arrow_schema)
         tmp = os.path.join(self.workdir, f".tmp_{uuid.uuid4().hex}.parquet")
         pq.write_table(table, tmp)
         os.rename(
@@ -409,29 +463,29 @@ class BatchProcessor:
         pyarrow, on the driver where they were written, and never
         touches ``df``. Blocks until the batch's flushes finish, so the
         commit that follows implies delivery (at-least-once)."""
-        execution, scan = self._batch_scan(epoch_id)
+        scan = self._batch_scan(epoch_id)
         table = pq.read_table(self._scan_paths(scan), schema=self._arrow_schema)
         # Progress takes numInputRows from the scan's numOutputRows
         # metric, which only a scan job would fill: credit it here.
         scan.metrics().apply("numOutputRows").add(table.num_rows)
         if table.num_rows:
-            # The batch's session: the one df.toPandas() would read.
-            conf = execution.sparkSession().sessionState().conf()
-            tz, structs = conf.sessionLocalTimeZone(), conf.pandasStructHandlingMode()
-            pdf = _arrow_to_pandas(table, self.schema, tz, structs)
+            pdf = _arrow_to_pandas(table, self.schema, *self._pandas_conf)
             self._controller.wait(self._controller.submit_batch(pdf))
 
     def _batch_scan(self, epoch_id: int):
-        """The running batch's JVM ``IncrementalExecution`` and the one
-        file scan (``FileSourceScanExec``) in its executed plan. The
-        query is found by the id Spark sets on the thread that runs the
-        batch, since this can run before ``writer.start()`` returns (a
-        restart with a backlog)."""
-        query_id = self.spark.sparkContext.getLocalProperty("sql.streaming.queryId")
-        query = self.spark._jsparkSession.streams().get(query_id)
-        if query is None:
-            raise RuntimeError(f"no active streaming query {query_id!r}")
-        execution = query.streamingQuery().lastExecution()
+        """The one file scan (``FileSourceScanExec``) in the executed
+        plan of the running batch's JVM ``IncrementalExecution``. On the
+        first batch the query is found by the id Spark sets on the
+        thread that runs the batch, since this can run before
+        ``writer.start()`` returns (a restart with a backlog)."""
+        if self._jquery is None:
+            query_id = self.spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+            query = self.spark._jsparkSession.streams().get(query_id)
+            if query is None:
+                raise RuntimeError(f"no active streaming query {query_id!r}")
+            self._jquery = query.streamingQuery()
+            self._array_seq = self.spark._jvm.scala.collection.immutable.ArraySeq
+        execution = self._jquery.lastExecution()
         if execution.currentBatchId() != epoch_id:
             raise RuntimeError(
                 f"last execution is batch {execution.currentBatchId()}, "
@@ -442,13 +496,17 @@ class BatchProcessor:
         names = [leaf.getClass().getSimpleName() for leaf in scans]
         if names != ["FileSourceScanExec"]:
             raise RuntimeError(f"expected one FileSourceScanExec leaf, got {names}")
-        return execution, scans[0]
+        if self._pandas_conf is None:
+            # The batch's session: the one df.toPandas() would read.
+            conf = execution.sparkSession().sessionState().conf()
+            self._pandas_conf = (conf.sessionLocalTimeZone(), conf.pandasStructHandlingMode())
+        return scans[0]
 
     def _scan_paths(self, scan) -> list[str]:
         """Local paths of the files ``scan`` would read."""
         uris = scan.relation().location().inputFiles()
         # One py4j call for the whole list, not one per element.
-        seq = self.spark._jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(uris)
+        seq = self._array_seq.unsafeWrapArray(uris)
         paths = []
         for uri in seq.mkString("\n").splitlines():
             parsed = urlparse(uri)
@@ -479,13 +537,16 @@ class BatchProcessor:
                 raise RuntimeError(f"stop() in state {self._state}")
             self._state = State.STOPPED
         self._timer_stop.set()
-        self._spool()
-        if self._query is not None:
-            if wait_for_completion:
-                self._query.processAllAvailable()
-            self._query.stop()
-            self._query.awaitTermination(int(self.config.stop_timeout_s))
-        self._controller.shutdown()
+        try:
+            self._spool()
+            if self._query is not None:
+                if wait_for_completion:
+                    self._query.processAllAvailable()
+                self._query.stop()
+                self._query.awaitTermination(int(self.config.stop_timeout_s))
+            self._controller.shutdown()
+        finally:
+            self._release_gc_freeze()
         return self.stat()
 
     # ------------------------------------------------------------- stat

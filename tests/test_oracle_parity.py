@@ -9,7 +9,8 @@ driver's verification budget):
   exact queries and SF the external driver re-checks, so the default
   ``pytest tests/ -q`` stays a faithful pre-flight of the driver's
   own correctness gate — plus the round-loop queries (ROUND_LOOPS),
-  about a minute more at sf0.01.
+  about a minute more at sf0.01, and the last rewritten builders
+  outside the window (REWRITTEN).
 - SLOW (opt-in) lane, ``-m slow``: the full registry at sf0.01 plus
   EVERYTHING at sf0.1 — a query whose parity holds at one SF but
   breaks at 10× (sampling thresholds, rounding drift under different
@@ -56,7 +57,15 @@ ROUND_LOOPS = frozenset({
     "q_llm_bpe_train",
     "q_llm_bpe_apply",
 })
-DEFAULT_LANE = DRIVER_WINDOW | ROUND_LOOPS
+# Queries outside the driver's window whose builders were rewritten
+# last (the Arrow cogroup of q_udf_cogrouped, the sorted-run array fold
+# of q_llm_repetition_stats) also run by default, not only in the
+# committed grid.
+REWRITTEN = frozenset({
+    "q_udf_cogrouped",
+    "q_llm_repetition_stats",
+})
+DEFAULT_LANE = DRIVER_WINDOW | ROUND_LOOPS | REWRITTEN
 
 
 def _parity_params():

@@ -9,10 +9,12 @@ mirroring the reference's observable contracts:
 - size trigger: a backlog of full spools drains without a trigger clock
 - checkpoint logs on the FileSystem manager (no process fork per file)
 - reject-on-full admission (O13)
+- the process-wide GC freeze held while any processor runs
 """
 
 from __future__ import annotations
 
+import gc
 import threading
 import time
 
@@ -268,6 +270,126 @@ def test_concurrent_starts_keep_their_own_poll_delay(spark):
     assert results == {0.4: (100, 500), 2.0: (500, 500)}
     assert spark.conf.get(POLLING_DELAY, None) is None
     assert spark.conf.get(FILE_MANAGER, None) is None
+
+
+def _within(seconds: float, fn):
+    """fn() run on a thread, failing the test if it has not returned
+    after ``seconds``."""
+    out: dict = {}
+
+    def target() -> None:
+        try:
+            out["value"] = fn()
+        except BaseException as exc:  # noqa: BLE001 - re-raised on the test thread
+            out["error"] = exc
+
+    t = threading.Thread(target=target, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"did not finish within {seconds} s"
+    if "error" in out:
+        raise out["error"]
+    return out.get("value")
+
+
+def test_heap_frozen_while_any_processor_runs(spark):
+    """While a processor runs, the objects that existed before the
+    first start() sit in the collector's permanent generation. The
+    freeze is process-wide: a second processor shares it, and only the
+    last stop() releases it."""
+
+    def run() -> list[int]:
+        counts = [gc.get_freeze_count()]
+        p1 = make_processor(spark, CountingSink(), spool_size=100).start()
+        counts.append(gc.get_freeze_count())
+        p2 = make_processor(spark, CountingSink(), spool_size=100).start()
+        counts.append(gc.get_freeze_count())
+        p1.stop()
+        p1.close()
+        counts.append(gc.get_freeze_count())
+        p2.stop()
+        p2.close()
+        counts.append(gc.get_freeze_count())
+        return counts
+
+    before, first, both, after_first_stop, after_last_stop = _within(180, run)
+    # The permanent generation grows only by gc.freeze(); reference
+    # counting may free some of its objects meanwhile.
+    assert before == 0
+    assert first > 0
+    assert first / 2 < after_first_stop <= both <= first
+    assert after_last_stop == 0
+
+
+def test_process_freeze_survives_processor(spark):
+    """A process that froze its own heap before start() keeps that
+    freeze: the processor neither adds to it nor undoes it."""
+    gc.freeze()
+    try:
+        frozen = gc.get_freeze_count()
+
+        def run() -> tuple[int, int]:
+            p = make_processor(spark, CountingSink()).start()
+            running = gc.get_freeze_count()
+            p.stop()
+            p.close()
+            return running, gc.get_freeze_count()
+
+        running, after = _within(120, run)
+    finally:
+        gc.unfreeze()
+    assert frozen > 0
+    assert frozen / 2 < after <= running <= frozen
+
+
+def test_frozen_cycle_is_collected_after_stop(spark):
+    """Frozen objects wait only for reference cycles: a cycle that
+    existed at start() and is dropped while the processor runs outlives
+    a collection then, and is collected after stop()."""
+    import weakref
+
+    class Node:
+        pass
+
+    def run() -> tuple[bool, bool]:
+        node = Node()
+        node.self = node
+        ref = weakref.ref(node)
+        p = make_processor(spark, CountingSink()).start()
+        try:
+            del node
+            gc.collect()
+            alive_while_running = ref() is not None
+        finally:
+            p.stop()
+            p.close()
+        gc.collect()
+        return alive_while_running, ref() is None
+
+    alive_while_running, collected_after_stop = _within(120, run)
+    assert alive_while_running
+    assert collected_after_stop
+
+
+def test_running_processor_leaves_old_generation_small(spark):
+    """A full collection while a processor runs scans what the pipeline
+    allocated, not the heap the session built before start()."""
+
+    def run() -> tuple[int, int]:
+        gc.collect()
+        before = len(gc.get_objects(2))
+        p = make_processor(spark, CountingSink()).start()
+        try:
+            p.put_many([(i, "x") for i in range(1000)])
+            p.flush(wait=True)
+            running = len(gc.get_objects(2))
+        finally:
+            p.stop()
+            p.close()
+        return before, running
+
+    before, running = _within(120, run)
+    assert running < before / 10, (before, running)
 
 
 def test_listener_on_session_sees_processor_progress(spark):
