@@ -664,10 +664,8 @@ _PAIRS_SQL = f"""
 """
 
 
-@register(
-    "q_llm_dedup_clusters",
-    oracle=_PAIRS_SQL.replace("WITH docs", "WITH RECURSIVE docs")
-    + """
+# The component fixpoint stated declaratively (a recursive CTE).
+_CLUSTERS_ORACLE = _PAIRS_SQL.replace("WITH docs", "WITH RECURSIVE docs") + """
     , edges AS (SELECT d1 AS a, d2 AS b FROM pairs
                 UNION ALL SELECT d2, d1 FROM pairs),
     walk(node, label) AS (
@@ -676,9 +674,10 @@ _PAIRS_SQL = f"""
       SELECT e.b, w.label FROM walk w JOIN edges e ON e.a = w.node)
     SELECT node AS doc_id, min(label)::BIGINT AS cluster_id
     FROM walk GROUP BY node
-    """,
-    category="dedup",
-)
+    """
+
+
+@register("q_llm_dedup_clusters", oracle=_CLUSTERS_ORACLE, category="dedup")
 def q_llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster resolution: connected components over the
     exact-Jaccard near-dup pair graph, labelling every clustered doc
@@ -687,13 +686,10 @@ def q_llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     into an actual dedup decision when duplicates chain (A~B, B~C but
     A!~C must still collapse to one cluster).
 
-    Spark-first shape: iterative min-label propagation — per round one
-    join edges⋈labels + one min-aggregate, all distributed, driver
-    holds only the convergence flag. Near-dup components are tiny
-    (dup groups), so rounds ≈ cluster diameter, converging in 2-3
-    rounds here; billion-node general graphs would switch to the
-    large-star/small-star algorithm, same building blocks. The oracle
-    states the fixpoint declaratively (recursive CTE).
+    Spark-first shape: ``connected_components``, large-star/small-star
+    rounds of grouped min-aggregates, all distributed, with the driver
+    holding only the convergence signature; it converges in O(log n)
+    rounds however long the duplicate chains are.
     """
     docs = load_table(spark, sf_dir, "documents")
     pairs = (
@@ -704,42 +700,6 @@ def q_llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
-
-
-def connected_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
-    """Min-label propagation over an undirected pair list
-    (d1, d2) → (node, label) where label = the component's smallest
-    node. Distributed join + min-agg per round; the driver holds only
-    the convergence signature. Property-tested against a python
-    union-find in tests/test_properties.py."""
-    # One explode emits both directions, so `pairs` (e.g. the Jaccard
-    # shingle join) is read once, by the edge list's materialization.
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("d1").alias("a"), F.col("d2").alias("b")),
-                F.struct(F.col("d2").alias("a"), F.col("d1").alias("b")),
-            )
-        ).alias("e")
-    ).select("e.*").transform(materialize)
-
-    def propagate(labels: DataFrame) -> DataFrame:
-        prop = edges.join(labels, edges.a == labels.node).select(
-            F.col("b").alias("node"), "label"
-        )
-        return labels.union(prop).groupBy("node").agg(F.min("label").alias("label"))
-
-    # Labels only fall and the node set is fixed, so their sum repeats
-    # exactly when no label moved.
-    labels = iterate(
-        edges.select(F.col("a").alias("node")).distinct()
-        .select("node", F.col("node").alias("label")),
-        propagate,
-        [F.sum(F.col("label").cast("decimal(38,0)"))],
-        max_rounds,
-    )
-    edges.unpersist()
-    return labels
 
 
 _INGEST_SPLIT = 400  # doc_id < 400 = existing corpus, rest = new batch
@@ -779,21 +739,21 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def connected_components_star(pairs: DataFrame, max_rounds: int = 30) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the O(log n)-round algorithm that replaces min-label propagation
-    when components can be DEEP (propagation needs diameter rounds; a
-    billion-node chain would never finish). Each round is two grouped
+def connected_components(pairs: DataFrame, max_rounds: int = 30) -> DataFrame:
+    """Connected components of an undirected pair list (d1, d2) →
+    (node, label), label = the component's smallest node, via
+    alternating large-star / small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond"): O(log n) rounds, where
+    min-label propagation needs one round per unit of diameter and
+    stops short on a deep chain. Each round is two grouped
     min-aggregates + explodes, all distributed.
 
     large-star(u): every strictly-larger neighbor of u re-points to
     the minimum of u's closed neighborhood; small-star(u): every
     smaller-or-equal neighbor (and u) points to that minimum. At the
     fixpoint every node holds an edge to its component's minimum.
-    Output: (node, label) like ``connected_components`` — property
-    tests pin both against a python union-find, and a chain test pins
-    the logarithmic round count."""
+    tests/test_properties.py pins it against a python union-find and
+    pins a 64-node chain at the default round cap."""
 
     def sym(e: DataFrame) -> DataFrame:
         return e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -835,37 +795,11 @@ def connected_components_star(pairs: DataFrame, max_rounds: int = 30) -> DataFra
     )
 
 
-@register(
-    "q_llm_dedup_clusters_star",
-    oracle=_PAIRS_SQL.replace("WITH docs", "WITH RECURSIVE docs")
-    + """
-    , edges AS (SELECT d1 AS a, d2 AS b FROM pairs
-                UNION ALL SELECT d2, d1 FROM pairs),
-    walk(node, label) AS (
-      SELECT DISTINCT a, a FROM edges
-      UNION
-      SELECT e.b, w.label FROM walk w JOIN edges e ON e.a = w.node)
-    SELECT node AS doc_id, min(label)::BIGINT AS cluster_id
-    FROM walk GROUP BY node
-    """,
-    category="dedup",
-)
+@register("q_llm_dedup_clusters_star", oracle=_CLUSTERS_ORACLE, category="dedup")
 def q_llm_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-cluster resolution via the large-star/small-star
-    algorithm — identical output to q_llm_dedup_clusters (same
-    recursive-CTE oracle), but converging in O(log n) rounds instead
-    of O(component diameter): the variant to reach for when duplicate
-    chains can be long (e.g. boilerplate families spanning millions of
-    pages)."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = (
-        _jaccard_pairs(docs)
-        .where(F.col("jaccard") > _JACCARD_THRESHOLD)
-        .select("d1", "d2")
-    )
-    return connected_components_star(pairs).select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
+    """q_llm_dedup_clusters under its second registered name; both
+    run the one large-star/small-star ``connected_components``."""
+    return q_llm_dedup_clusters(spark, sf_dir)
 
 
 # Decontamination: every pipeline that trains on web-scale text must

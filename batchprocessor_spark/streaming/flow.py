@@ -37,15 +37,6 @@ class FlowControlConfig:
     ips: float = 0.0                # items/sec, 0 = unlimited
     max_retry_count: int = 3        # retries before DLQ
     retry_delay_s: float = 0.1      # base delay, doubles per attempt
-    # (host, port) of a driver-side TokenEscrowServer. When set, the
-    # controller takes its permits and tps/ips tokens from that ONE
-    # shared budget instead of a local semaphore and buckets — the
-    # reference's process-global semaphore and MixedLimiter
-    # (V1/MixedLimiter.java:16-43) across executors.
-    escrow_addr: tuple[str, int] | None = None
-    # per-query shared secret for the escrow protocol — every request
-    # carries it, and the server drops unauthenticated peers
-    escrow_token: str = ""
 
 
 class TokenBucket:
@@ -312,24 +303,26 @@ class EscrowClient:
                 self._reset(line)
 
 
+# The counters each worker keeps; the controller's totals are their sums.
+_COUNTERS = (
+    "flushed_batches", "flushed_items", "failed_flushes",
+    "retries", "dlq_batches", "dlq_items",
+)
+
+
 @dataclass
 class FlowStats:
     """Observable counters (Stat analogue, V2/Stat.java:11-136).
 
-    Mirrors the reference's per-worker granularity: the Stat tree
-    reports each worker's buffer occupancy and the semaphore queue
-    (V2/Stat.java:58-124, filled at V2/DisruptorBatchProcessor.java:
-    185-211); here each flush-pool thread is a worker, with its own
-    flushed/retry/dlq counters plus a busy flag, and ``in_flight`` is
-    the semaphore-occupancy gauge."""
+    Kept per worker, as the reference's Stat tree keeps each worker's
+    record and derives its totals from them (V2/Stat.java:58-124,
+    filled at V2/DisruptorBatchProcessor.java:185-211): each flush-pool
+    thread is a worker with its own flushed/retry/dlq counters, a busy
+    flag and the size of the chunk it is flushing. ``snapshot()`` sums
+    the counters, and its ``in_flight`` (the semaphore-occupancy gauge)
+    is the number of busy workers, since a pool thread runs one flush
+    at a time."""
 
-    flushed_batches: int = 0
-    flushed_items: int = 0
-    failed_flushes: int = 0
-    retries: int = 0
-    dlq_batches: int = 0
-    dlq_items: int = 0
-    in_flight: int = 0
     # Semaphore QUEUE length (V2/Stat.java's semaphoreQueueLength):
     # callers blocked in submit_batch waiting for a flush permit.
     sem_waiters: int = 0
@@ -341,12 +334,7 @@ class FlowStats:
         return self.workers.setdefault(
             name,
             {
-                "flushed_batches": 0,
-                "flushed_items": 0,
-                "failed_flushes": 0,
-                "retries": 0,
-                "dlq_batches": 0,
-                "dlq_items": 0,
+                **dict.fromkeys(_COUNTERS, 0),
                 "busy": False,
                 # Buffer-occupancy gauge: items of the chunk this
                 # worker is currently flushing (0 when idle) — the
@@ -357,17 +345,14 @@ class FlowStats:
 
     def snapshot(self) -> dict:
         with self._lock:
-            return {
-                "flushed_batches": self.flushed_batches,
-                "flushed_items": self.flushed_items,
-                "failed_flushes": self.failed_flushes,
-                "retries": self.retries,
-                "dlq_batches": self.dlq_batches,
-                "dlq_items": self.dlq_items,
-                "in_flight": self.in_flight,
-                "sem_waiters": self.sem_waiters,
-                "workers": {k: dict(v) for k, v in self.workers.items()},
-            }
+            workers = {k: dict(v) for k, v in self.workers.items()}
+            sem_waiters = self.sem_waiters
+        return {
+            **{c: sum(w[c] for w in workers.values()) for c in _COUNTERS},
+            "in_flight": sum(w["busy"] for w in workers.values()),
+            "sem_waiters": sem_waiters,
+            "workers": workers,
+        }
 
 
 Sink = Callable[[pd.DataFrame], None]
@@ -386,7 +371,13 @@ class FlowController:
     rates from one shared escrow.
     """
 
-    def __init__(self, sink: Sink, config: FlowControlConfig, dlq_path: str | None = None):
+    def __init__(
+        self,
+        sink: Sink,
+        config: FlowControlConfig,
+        dlq_path: str | None = None,
+        escrow: tuple[tuple[str, int], str] | None = None,
+    ):
         self.sink = sink
         self.config = config
         self.dlq_path = dlq_path
@@ -402,10 +393,14 @@ class FlowController:
         # for a permit and reserves the flush's rate tokens, returning
         # the seconds the flush owes; give() returns the permit;
         # reserve(n_flushes, n_items) re-reserves for a retry. With an
-        # escrow address, ONE escrow serves the whole query.
+        # escrow, ((host, port), token) of a driver-side
+        # TokenEscrowServer, ONE budget serves the whole query instead
+        # of a local semaphore and buckets — the reference's
+        # process-global semaphore and MixedLimiter
+        # (V1/MixedLimiter.java:16-43) across executors.
         self._escrow = None
-        if config.escrow_addr is not None:
-            self._escrow = EscrowClient(config.escrow_addr, config.escrow_token)
+        if escrow is not None:
+            self._escrow = EscrowClient(*escrow)
             self._take, self._give, self._reserve = (
                 self._escrow.take, self._escrow.give, self._escrow.reserve
             )
@@ -448,9 +443,7 @@ class FlowController:
             finally:
                 with self.stats._lock:
                     self.stats.sem_waiters -= 1
-            fut = self._pool.submit(self._flush_with_retry, chunk, wait)
-            fut.add_done_callback(lambda _f: self._give())
-            futures.append(fut)
+            futures.append(self._pool.submit(self._flush, chunk, wait))
         return futures
 
     @staticmethod
@@ -460,63 +453,48 @@ class FlowController:
 
     # -- flush path ---------------------------------------------------
 
-    def _flush_with_retry(self, chunk: pd.DataFrame, wait: float) -> None:
-        me = threading.current_thread().name
+    def _flush(self, chunk: pd.DataFrame, wait: float) -> None:
+        """Deliver one chunk on a pool thread: sleep the wait it owes,
+        call the sink, retry with doubling backoff (re-reserving rate
+        tokens) and dead-letter it once retries run out. Counts on this
+        worker's record and gives the chunk's permit back."""
+        n = len(chunk)
         with self.stats._lock:
-            self.stats.in_flight += 1
-            w = self.stats.worker(me)
-            w["busy"] = True
-            w["current_items"] = len(chunk)
+            w = self.stats.worker(threading.current_thread().name)
+            w["busy"], w["current_items"] = True, n
+        outcome = None  # counted as flushed_* or dlq_* when set
         try:
-            self._flush_with_retry0(chunk, me, wait)
+            for attempt in range(self.config.max_retry_count + 1):
+                if attempt:
+                    time.sleep(self.config.retry_delay_s * (2 ** (attempt - 1)))
+                    wait = self._reserve(1.0, float(n))
+                # no sleep(0) per flush when unlimited or within burst
+                if wait > 0:
+                    time.sleep(wait)
+                try:
+                    self.sink(chunk)
+                except Exception:
+                    with self.stats._lock:
+                        w["failed_flushes"] += 1
+                        if attempt < self.config.max_retry_count:
+                            w["retries"] += 1
+                    continue
+                outcome = "flushed"
+                break
+            else:
+                outcome = "dlq"
+                self._to_dlq(chunk)
         finally:
             with self.stats._lock:
-                self.stats.in_flight -= 1
-                w = self.stats.worker(me)
-                w["busy"] = False
-                w["current_items"] = 0
+                if outcome is not None:
+                    w[f"{outcome}_batches"] += 1
+                    w[f"{outcome}_items"] += n
+                w["busy"], w["current_items"] = False, 0
+            self._give()
 
-    def _flush_with_retry0(self, chunk: pd.DataFrame, me: str, wait: float) -> None:
-        attempts = 0
-        while True:
-            # no sleep(0) per flush when unlimited or within burst
-            if wait > 0:
-                time.sleep(wait)
-            try:
-                self.sink(chunk)
-            except Exception:
-                with self.stats._lock:
-                    self.stats.failed_flushes += 1
-                    self.stats.worker(me)["failed_flushes"] += 1
-                if attempts < self.config.max_retry_count:
-                    attempts += 1
-                    with self.stats._lock:
-                        self.stats.retries += 1
-                        self.stats.worker(me)["retries"] += 1
-                    time.sleep(self.config.retry_delay_s * (2 ** (attempts - 1)))
-                    wait = self._reserve(1.0, float(len(chunk)))
-                    continue
-                self._to_dlq(chunk, me)
-                return
-            else:
-                with self.stats._lock:
-                    self.stats.flushed_batches += 1
-                    self.stats.flushed_items += len(chunk)
-                    w = self.stats.worker(me)
-                    w["flushed_batches"] += 1
-                    w["flushed_items"] += len(chunk)
-                return
-
-    def _to_dlq(self, chunk: pd.DataFrame, me: str | None = None) -> None:
+    def _to_dlq(self, chunk: pd.DataFrame) -> None:
         """Exhausted retries → append to the dead-letter parquet table
         (upgrade over the reference's log-and-drop)."""
-        with self.stats._lock:
-            self.stats.dlq_batches += 1
-            self.stats.dlq_items += len(chunk)
-            if me is not None:
-                w = self.stats.worker(me)
-                w["dlq_batches"] += 1
-                w["dlq_items"] += len(chunk)
         if self.dlq_path:
             import os
 

@@ -25,7 +25,13 @@ Spark keeps the control plane: offsets, commit, restart and progress.
 Each micro-batch is planned but never scanned by Spark. The handler
 takes the spool paths from the planned file scan, reads them with
 pyarrow and converts them as ``DataFrame.toPandas()`` would, and the
-file source deletes each spool once its batch commits.
+file source deletes each spool once its batch commits. The processor
+reads none of Spark's checkpoint files: on every ``start()``, once the
+pre-warm drain has delivered and committed whatever the ingest dir
+held, it deletes every spool an earlier instance wrote (spool names
+carry the writing instance's id), including those the file source
+never deletes, such as the spool of a batch committed just before a
+driver died.
 
 Garbage collection (process-wide, like the collector itself): while
 any BatchProcessor runs, the objects that existed when the first one
@@ -52,7 +58,6 @@ driver-side token escrow.
 from __future__ import annotations
 
 import gc
-import json
 import os
 import shutil
 import threading
@@ -215,7 +220,8 @@ class BatchProcessor:
         # cleanSource=delete: the file source deletes a spool once the
         # batch that read it commits, so the ingest directory (which
         # the source lists every trigger) holds only unconsumed spools,
-        # and a restart still finds an uncommitted batch's files.
+        # and a restart still finds an uncommitted batch's files. What
+        # it misses on a restart goes in the sweep after the pre-warm.
         stream = (
             self.spark.readStream.schema(self.schema)
             .option("maxFilesPerTrigger", self.config.max_files_per_trigger)
@@ -260,7 +266,6 @@ class BatchProcessor:
         # start-blocks-until-workers-ready semantics
         # (V1/DisruptorBatchProcessor.java:229-257).
         poll_ms = max(1, int(self.config.flush_interval_s * 1000 / 4))
-        restart = os.path.isdir(os.path.join(self.ckpt_dir, "commits"))
         stream_confs = {
             _POLLING_DELAY: f"{poll_ms}ms",
             _CHECKPOINT_FILE_MANAGER: _FS_CHECKPOINT_FILE_MANAGER,
@@ -279,8 +284,7 @@ class BatchProcessor:
                         self.spark.conf.unset(k)
                     else:
                         self.spark.conf.set(k, v)
-        if restart:
-            self._delete_folded_spools()
+        self._sweep_ingest()
         self._timer = threading.Thread(target=self._interval_spooler, daemon=True)
         self._timer.start()
         self._hold_gc_freeze()
@@ -312,30 +316,23 @@ class BatchProcessor:
                 gc.unfreeze()
                 _froze_heap = False
 
-    def _delete_folded_spools(self) -> None:
-        """Delete the spools of source-log batches below the last
-        committed micro-batch's end. A commit makes the file source
-        delete only the files of the batch it ends at, so a batch logged
-        before the driver died, which the restart (the pre-warm) folds
-        into a larger micro-batch, would stay in the ingest dir."""
-        commits = os.listdir(os.path.join(self.ckpt_dir, "commits"))
-        last = max(int(n) for n in commits if n.isdigit())
-        with open(os.path.join(self.ckpt_dir, "offsets", str(last))) as f:
-            end = json.loads(f.read().splitlines()[-1])["logOffset"]
-        log_dir = os.path.join(self.ckpt_dir, "sources", "0")
-        ingest = os.path.abspath(self.ingest_dir)
-        for name in os.listdir(log_dir):
-            if not name.split(".")[0].isdigit():
-                continue  # checksum and temp files
-            with open(os.path.join(log_dir, name)) as f:
-                lines = f.read().splitlines()[1:]
-            for entry in map(json.loads, lines):
-                path = url2pathname(urlparse(entry["path"]).path)
-                if entry["batchId"] < end and os.path.dirname(path) == ingest:
-                    try:
-                        os.remove(path)
-                    except FileNotFoundError:
-                        pass
+    def _sweep_ingest(self) -> None:
+        """Delete every ingest file but this instance's spools. The
+        pre-warm drain returned only after every file already in the
+        ingest dir was delivered and committed, and a dead instance
+        writes no more, so none of them is still needed; files put
+        during this start() carry this instance's prefix. This frees
+        what ``cleanSource`` leaves: the spools of source-log batches a
+        restart folds into one larger micro-batch (a commit deletes
+        only the files of the batch it ends at), and those of a batch
+        committed just before the driver died."""
+        mine = f"spool_{self._instance}_"
+        for name in os.listdir(self.ingest_dir):
+            if not name.startswith(mine):
+                try:
+                    os.remove(os.path.join(self.ingest_dir, name))
+                except FileNotFoundError:
+                    pass  # the file source's cleaner got there first
 
     def _interval_spooler(self) -> None:
         """O6: force-flush aged partial buffers (the v2 scheduler
@@ -683,14 +680,7 @@ def foreach_batch_sink(
         )
 
     def handle_distributed(df: DataFrame, epoch_id: int) -> None:
-        import dataclasses
-
-        escrow_addr, escrow_token = _ensure_escrow(
-            handle_distributed, cfg, df.sparkSession
-        )
-        part_cfg = dataclasses.replace(
-            cfg, escrow_addr=escrow_addr, escrow_token=escrow_token
-        )
+        escrow = _ensure_escrow(handle_distributed, cfg, df.sparkSession)
         schema, jconf = df.schema, df.sparkSession._jconf  # as toPandas() reads it
         tz, structs = jconf.sessionLocalTimeZone(), jconf.pandasStructHandlingMode()
 
@@ -708,7 +698,7 @@ def foreach_batch_sink(
                 if dlq_path is not None:
                     part_dlq = f"{dlq_path}/epoch={epoch_id}/partition={pid}"
                 pdf = _arrow_to_pandas(pa.Table.from_batches(batches), schema, tz, structs)
-                ctrl = FlowController(sink, part_cfg, dlq_path=part_dlq)
+                ctrl = FlowController(sink, cfg, dlq_path=part_dlq, escrow=escrow)
                 try:
                     ctrl.wait(ctrl.submit_batch(pdf))
                 finally:
@@ -721,7 +711,7 @@ def foreach_batch_sink(
         out = df.mapInArrow(per_partition, "partition INT, rows BIGINT").collect()
         handle_distributed.last_budget = {
             "epoch_id": epoch_id,
-            "escrow_addr": escrow_addr,
+            "escrow_addr": escrow[0],
             "num_partitions": len(out),
             "rows_by_partition": {r.partition: r.rows for r in sorted(out) if r.rows},
             # Aggregate bounds: ONE persistent escrow for the query,

@@ -91,73 +91,3 @@ def running_user_counters(
         timeoutConf=timeout,
     )
 
-
-def has_transform_with_state() -> bool:
-    """Spark 4's transformWithStateInPandas drives its state-server
-    protocol through google.protobuf, which is not part of pyspark's
-    own dependencies — probe for it (same feature-gate discipline as
-    the PIL probe in functions/multimodal.py)."""
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def make_counters_processor():
-    """Build the transformWithState StatefulProcessor for the per-user
-    (count, cents) counters. Module-level factory (not an inline
-    class) so the processor's state-handling logic is drivable
-    IN-PROCESS with a stub handle when the runtime lacks the state
-    server's protobuf dependency — tests/test_stateful.py asserts the
-    same counters either way, so the path is exercised on every
-    environment rather than skipped. StatefulProcessor itself imports
-    clean without protobuf; only the server wire protocol needs it."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Counters(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState("counters", "c BIGINT, s BIGINT")
-
-        def handleInputRows(self, key, rows, timer_values):
-            c, s = (self._st.get() or (0, 0)) if self._st.exists() else (0, 0)
-            for pdf in rows:
-                c += len(pdf)
-                # exact cents lane, same as _make_update_fn
-                s += int(pd_to_units(pdf["value"], 100).sum())
-            self._st.update((c, s))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "event_count": [c],
-                    "value_sum": [s / 100.0],
-                    "closed": [False],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return _Counters()
-
-
-def running_user_counters_tws(events_stream: DataFrame) -> DataFrame:
-    """The same per-user (count, cents) counters on Spark 4's
-    transformWithStateInPandas — the arbitrary-state successor to
-    applyInPandasWithState: named state variables on an explicit
-    handle, timers, TTL, and a RocksDB-only state backend. Kept
-    behind has_transform_with_state(); the applyInPandasWithState
-    twin (running_user_counters) is the portable default, and
-    equivalence is asserted in tests/test_stateful.py whenever the
-    runtime can load this path."""
-    return events_stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=make_counters_processor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="update",
-        timeMode="None",
-    )

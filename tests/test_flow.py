@@ -42,13 +42,8 @@ def test_flush_larger_than_ips_burst_completes():
     try:
         ctrl = FlowController(
             lambda chunk: done.append(len(chunk)),
-            FlowControlConfig(
-                batch_size=100,
-                concurrency=4,
-                ips=1000.0,
-                escrow_addr=("127.0.0.1", srv.port),
-                escrow_token=srv.token,
-            ),
+            FlowControlConfig(batch_size=100, concurrency=4, ips=1000.0),
+            escrow=(("127.0.0.1", srv.port), srv.token),
         )
         t0 = time.perf_counter()
         for f in ctrl.submit_batch(pd.DataFrame({"id": range(300)})):

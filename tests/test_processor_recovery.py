@@ -211,7 +211,10 @@ def test_kill_mid_flush_restart_is_exactly_once(spark, tmp_path):
     with pytest.raises(StreamingQueryException, match="driver death mid-epoch"):
         p1._query.awaitTermination(120)
     assert p1._query.exception() is not None, "expected the stream to crash"
-    p1._timer_stop.set()
+    # stop() re-raises the failure from its drain and still releases
+    # the process-wide GC freeze the running p1 holds.
+    with pytest.raises(StreamingQueryException, match="driver death mid-epoch"):
+        p1.stop()
     p1._controller.shutdown()
     # PARTIAL chunk success is on disk: chunk 2 (ids 100-199) died
     # mid-epoch; chunks 1/3/4 flushed before the crash surfaced.
@@ -328,3 +331,59 @@ def test_source_log_ahead_of_offset_log(spark, tmp_path):
     # The orphan batch was delivered inside a larger micro-batch, whose
     # commit the file source cleans only for the batch it ends at.
     assert not orphan_left
+
+
+def test_restart_sweeps_committed_spools(spark, tmp_path):
+    """The file source deletes a batch's spool when it commits that
+    batch to the source, as it plans the next batch, and does so on an
+    asynchronous cleaner. A driver that dies before the cleaner runs
+    leaves spools of committed batches in the ingest dir, and a
+    restart makes the file source commit only the last batch again.
+    The next ``start()`` deletes them all without delivering any
+    twice."""
+    import json
+    import os
+    from pathlib import Path
+    from urllib.parse import urlparse
+    from urllib.request import url2pathname
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    workdir = str(tmp_path / "proc")
+    cfg = ProcessorConfig(batch_size=100, spool_size=100)
+    sink1 = CollectingSink()
+    p1 = BatchProcessor(spark, SCHEMA, sink1, cfg, workdir=workdir).start()
+    for wave in range(2):
+        p1.put_many([(wave * 100 + i, "a") for i in range(100)])
+        p1.flush(wait=True)
+    p1.stop()
+
+    # The two source-log entries with the highest batchIds are the
+    # spools of ids 0-99 and 100-199; recreate both where they were
+    # (the cleaner may not have run before the stop, so one may still
+    # be there).
+    log_dir = os.path.join(p1.ckpt_dir, "sources", "0")
+    entries = [
+        json.loads(line)
+        for name in os.listdir(log_dir)
+        if name.split(".")[0].isdigit()
+        for line in Path(log_dir, name).read_text().splitlines()[1:]
+    ]
+    paths = []
+    for entry, ids in zip(
+        sorted(entries, key=lambda e: e["batchId"])[-2:], (range(100), range(100, 200))
+    ):
+        paths.append(url2pathname(urlparse(entry["path"]).path))
+        table = pa.table({"id": pa.array(ids, pa.int64()), "payload": ["a"] * len(ids)})
+        pq.write_table(table, paths[-1])
+
+    sink2 = CollectingSink()
+    p2 = BatchProcessor(spark, SCHEMA, sink2, cfg, workdir=workdir).start()
+    p2.put_many([(200 + i, "b") for i in range(100)])
+    p2.stop()
+    left = [os.path.basename(p) for p in paths if os.path.exists(p)]
+    p2.close()
+    assert sorted(sink1.ids) == list(range(200))
+    assert sorted(sink2.ids) == list(range(200, 300))
+    assert left == [], f"committed spools outlived the restart: {left}"

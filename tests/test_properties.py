@@ -11,10 +11,7 @@ from hypothesis import strategies as st
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from batchprocessor_spark.operators.dedup import (
-    connected_components,
-    connected_components_star,
-)
+from batchprocessor_spark.operators.dedup import connected_components
 
 SETTINGS = settings(
     max_examples=12,
@@ -125,12 +122,26 @@ def test_shingle_sets_match_python(spark, texts):
         assert got[i] == expected, (t, got[i], expected)
 
 
-CC_KERNELS = pytest.mark.parametrize(
-    "kernel", [connected_components, connected_components_star], ids=lambda f: f.__name__
+# The kernel must not rely on the (d1 < d2) orientation the Jaccard
+# join emits, so each case runs on the pair list as given and with
+# every edge reversed. The case ids keep the names these cases had
+# when they ran the two former kernels.
+CC_ORIENTATIONS = pytest.mark.parametrize(
+    "reverse",
+    [
+        pytest.param(False, id="connected_components"),
+        pytest.param(True, id="connected_components_star"),
+    ],
 )
 
 
-@CC_KERNELS
+def _oriented(pairs, reverse: bool):
+    if reverse:
+        return pairs.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
+    return pairs
+
+
+@CC_ORIENTATIONS
 @given(
     edges=st.lists(
         st.tuples(st.integers(0, 15), st.integers(0, 15)).filter(lambda t: t[0] != t[1]),
@@ -139,14 +150,17 @@ CC_KERNELS = pytest.mark.parametrize(
     )
 )
 @SETTINGS
-def test_connected_components_vs_union_find(spark, kernel, edges):
-    """Min-label propagation and large-star/small-star must agree with
-    a python union-find on arbitrary small graphs (chains, cycles,
-    stars, disconnected pieces — whatever hypothesis produces)."""
+def test_connected_components_vs_union_find(spark, reverse, edges):
+    """Large-star/small-star must agree with a python union-find on
+    arbitrary small graphs (chains, cycles, stars, disconnected pieces
+    — whatever hypothesis produces)."""
     pairs = spark.createDataFrame(
         [(min(a, b), max(a, b)) for a, b in edges], "d1 BIGINT, d2 BIGINT"
     )
-    got = {r.node: r.label for r in kernel(pairs, max_rounds=40).collect()}
+    got = {
+        r.node: r.label
+        for r in connected_components(_oriented(pairs, reverse), max_rounds=40).collect()
+    }
 
     parent: dict[int, int] = {}
 
@@ -194,25 +208,22 @@ def test_pack_cumsum_vs_python(spark, rows, nparts):
 
 
 def test_star_components_deep_chain(spark):
-    """A 64-node chain: min-label propagation needs ~diameter rounds;
-    the star algorithm must collapse it within O(log n) rounds — this
-    is exactly why it is the billion-node-graph variant."""
-    from batchprocessor_spark.operators.dedup import connected_components_star
-
+    """A 64-node chain collapses to one label within the default
+    round cap: large-star/small-star needs O(log n) rounds, where
+    moving labels one hop per round would need 63 — this is exactly
+    why it is the billion-node-graph variant."""
     n = 64
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "d1 BIGINT, d2 BIGINT"
     )
-    labels = {
-        r.node: r.label for r in connected_components_star(pairs, max_rounds=10).collect()
-    }
+    labels = {r.node: r.label for r in connected_components(pairs).collect()}
     assert labels == {i: 0 for i in range(n)}
 
 
-@CC_KERNELS
-def test_connected_components_evaluates_pairs_once(spark, kernel):
+@CC_ORIENTATIONS
+def test_connected_components_evaluates_pairs_once(spark, reverse):
     """The pair graph feeding CC can be an expensive join (Jaccard at
-    100 TB); each kernel must evaluate it exactly once — not once per
+    100 TB); the kernel must evaluate it exactly once — not once per
     edge direction or per round. Pinned with an accumulator
     incremented on every evaluated pair row."""
     acc = spark.sparkContext.accumulator(0)
@@ -226,7 +237,9 @@ def test_connected_components_evaluates_pairs_once(spark, kernel):
             yield pdf
 
     pairs = base.repartition(2).mapInPandas(count_rows, "d1 BIGINT, d2 BIGINT")
-    labels = {r.node: r.label for r in kernel(pairs).collect()}
+    labels = {
+        r.node: r.label for r in connected_components(_oriented(pairs, reverse)).collect()
+    }
     assert labels == {0: 0, 1: 0, 2: 0, 5: 5, 6: 5}
     assert acc.value == 3, f"pair graph evaluated {acc.value / 3:.1f}x"
 

@@ -131,113 +131,6 @@ def test_rocksdb_state_store_same_result(spark):
     assert got == expected
 
 
-def _tws_expected(spark):
-    cents = F.sum(F.round(F.col("value") * 100).cast("long"))
-    return {
-        r.user_id: (r.cnt, r.vs)
-        for r in load_table(spark, SF_ORACLE, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("cnt"), (cents / 100.0).alias("vs"))
-        .collect()
-    }
-
-
-def _drive_tws_in_process(spark):
-    """Drive the transformWithState StatefulProcessor in-process with a
-    stub handle/ValueState — the same init → handleInputRows(key,
-    batches, timers) → close lifecycle the state server runs, split
-    into two micro-batches per user so cross-batch state carry-over is
-    exercised. This is the protobuf-free fallback lane: the processor
-    LOGIC always runs; only the wire protocol needs protobuf."""
-    from batchprocessor_spark.streaming.stateful import make_counters_processor
-
-    class _StubValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class _StubHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema, ttl_duration_ms=None):
-            return self.states.setdefault(name, _StubValueState())
-
-    rows = (
-        load_table(spark, SF_ORACLE, "events")
-        .select("user_id", "value")
-        .toPandas()
-    )
-    got = {}
-    for user_id, pdf in rows.groupby("user_id"):
-        proc = make_counters_processor()
-        proc.init(_StubHandle())
-        half = len(pdf) // 2
-        batches = [pdf.iloc[:half], pdf.iloc[half:]]
-        last = None
-        for b in batches:
-            if len(b) == 0:
-                continue
-            for out in proc.handleInputRows((user_id,), iter([b]), None):
-                last = out
-        proc.close()
-        got[int(last["user_id"][0])] = (
-            int(last["event_count"][0]),
-            float(last["value_sum"][0]),
-        )
-    return got
-
-
-def test_transform_with_state_equals_classic(spark):
-    """Spark 4 transformWithStateInPandas twin of the per-user
-    counters must equal the batch aggregate. When the runtime has
-    google.protobuf (the state server's wire dependency, not shipped
-    with pyspark itself) the full engine path runs on RocksDB;
-    without it the SAME StatefulProcessor is driven in-process
-    through its init/handleInputRows lifecycle — the test always
-    asserts the counters, never skips."""
-    from batchprocessor_spark.streaming.stateful import (
-        has_transform_with_state,
-        running_user_counters_tws,
-    )
-
-    if not has_transform_with_state():
-        got = _drive_tws_in_process(spark)
-        assert got == _tws_expected(spark)
-        return
-
-    from batchprocessor_spark.streaming.queries import _events_stream, run_to_memory
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    old = spark.conf.get(key, None)
-    try:
-        spark.conf.set(key, rocks)  # transformWithState is RocksDB-only
-        stream = _events_stream(spark, SF_ORACLE).select("user_id", "value")
-        out = run_to_memory(running_user_counters_tws(stream), output_mode="update")
-        got = {
-            r.user_id: (r.event_count, r.value_sum)
-            for r in out.orderBy("event_count").collect()
-        }
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-    assert got == _tws_expected(spark)
-
-
 def test_stream_reads_directory_layout(tmp_path, spark):
     """The events stream must also work when the table is a DIRECTORY
     (events/part-*.parquet) rather than a single events.parquet file —

@@ -238,10 +238,11 @@ def test_soak_watermark_dedup_with_flaky_sink(spark, tmp_path, state_backend):
         f"dedup-under-redelivery violated: {len(delivered)} delivered, "
         f"{len(set(delivered))} unique"
     )
-    assert ctl.stats.dlq_items == 0
+    stats = ctl.stats.snapshot()
+    assert stats["dlq_items"] == 0
     # every epoch group hit by the failure plan was retried exactly once
     failed_groups = {k for k in epoch_attempts if k % 3 == 0}
-    assert ctl.stats.retries == len(failed_groups)
+    assert stats["retries"] == len(failed_groups)
     assert all(epoch_attempts[k] == 2 for k in failed_groups)
 
 
@@ -294,7 +295,7 @@ def test_soak_dlq_replay_completes_delivery(spark, tmp_path):
     )
     ctl.wait(ctl.submit_batch(dlq_pdf))
     ctl.shutdown()
-    assert ctl.stats.dlq_items == 0
+    assert ctl.stats.snapshot()["dlq_items"] == 0
 
     import glob
 
